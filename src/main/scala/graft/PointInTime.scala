@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.FeatureView
@@ -18,17 +17,19 @@ import graft.model.FeatureView
   * `tieBreakColumns`. Unmatched entity rows keep NULL features (final
   * join is LEFT).
   *
-  * Two orchestrations with identical results (spec-asserted):
+  * One orchestration: a coarse range from driver-side scalar min/max of
+  * the entity ts (constant-folds into Parquet pushdown, replacing the
+  * reference's J1 cartesian join), then per view ONE
+  * [[graft.plans.AsOfJoin]] — a sort-merge as-of operator that replaces
+  * the reference's A3+A4+J3 chain with no distinct, no window and no
+  * join-back. Entity-less views with a TTL merge on a time-bucket key;
+  * with TTL 0 they merge in one partition.
   *
-  *  - [[getHistoricalFeatures]] — pure DataFrame API: coarse range from
-  *    driver-side scalar min/max (constant-folds into Parquet pushdown,
-  *    replacing the reference's J1 cartesian join), DISTINCT entity
-  *    lookup, inner equi-join with the range residual (time-bucketed for
-  *    entity-less views), ONE row_number window per view (replacing the
-  *    reference's A3+A4+J3 chain), LEFT join-back on (keys, ts);
-  *  - [[getHistoricalFeaturesNative]] — each view is one
-  *    [[graft.plans.AsOfJoin]] (custom sort-merge operator): no distinct,
-  *    no window, no join-back; ~2× fewer shuffles per view.
+  * [[getHistoricalFeatures]] and [[getHistoricalFeaturesNative]] run the
+  * same plan and differ only in output column order (one final
+  * projection each). An independent compositional formulation (distinct
+  * → range join → row_number → join-back) lives in the test tree as the
+  * oracle both are checked against.
   *
   * At scale: the only data-sized shuffles are per-view joins keyed on the
   * entity keys; the feature scan is pre-filtered by the pushed-down
@@ -36,19 +37,17 @@ import graft.model.FeatureView
   */
 object PointInTime {
 
-  private val EventTs = "__graft_event_ts"
-  private val CreatedTs = "__graft_created_ts"
+  private[graft] val EventTs = "__graft_event_ts"
+  private[graft] val CreatedTs = "__graft_created_ts"
   private val OrderTs = "__graft_order_ts"
-  private val Rn = "__graft_rn"
-  private val Bkt = "__graft_bkt"
 
   /** Validated, coarse-filtered, renamed feature relation for one view:
     * columns = entities ++ EventTs ++ [CreatedTs] ++ prefixed features. */
-  private final case class ViewRel(
+  private[graft] final case class ViewRel(
       feats: DataFrame, outNames: Seq[String], hasCreated: Boolean,
       prefix: String)
 
-  private def prepareView(
+  private[graft] def prepareView(
       spark: SparkSession,
       fv: FeatureView,
       minTs: Any,
@@ -101,7 +100,7 @@ object PointInTime {
     ViewRel(feats, outNames, createdCol.isDefined, prefix)
   }
 
-  private def entityBounds(
+  private[graft] def entityBounds(
       entityDf: DataFrame, entityTsCol: String): (Any, Any) = {
     // A2: driver-side scalar min/max of the entity ts (null ⇔ empty df).
     val bounds: Row =
@@ -109,7 +108,7 @@ object PointInTime {
     (bounds.get(0), bounds.get(1))
   }
 
-  private def validateEntityDf(
+  private[graft] def validateEntityDf(
       entityDf: DataFrame, views: Seq[FeatureView],
       entityTsCol: String): Unit = {
     // ref: hive.py:222-224 — assert expected columns in the entity df.
@@ -119,140 +118,100 @@ object PointInTime {
       throw new EntityDfMissingColumnsError(expected, missing)
   }
 
+  /** Feast's `get_historical_features`: the entity df's rows with each
+    * view's as-of feature values. Column order is the one Feast clients
+    * have always seen, that of one LEFT `USING (keys, ts)` join per view:
+    * the view's join keys and the entity ts first, then the columns so
+    * far, then the view's features. */
   def getHistoricalFeatures(
       entityDf: DataFrame,
       views: Seq[FeatureView],
       entityTsCol: String = "event_timestamp",
       fullFeatureNames: Boolean = false): DataFrame = {
-    val spark = entityDf.sparkSession
-    validateEntityDf(entityDf, views, entityTsCol)
-    val (minTs, maxTs) = entityBounds(entityDf, entityTsCol)
-
-    views.foldLeft(entityDf) { (acc, fv) =>
-      val feat =
-        latestPerEntityRow(spark, fv, entityDf, entityTsCol, minTs, maxTs,
-          fullFeatureNames)
-      // J4: left join keeps unmatched entity rows with NULL features.
-      acc.join(feat, fv.entities :+ entityTsCol, "left")
+    val (joined, feats) =
+      asOfJoinViews(entityDf, views, entityTsCol, fullFeatureNames)
+    val entityCols = entityDf.columns.toSeq.map(c => c -> c)
+    val order = views.zip(feats).foldLeft(entityCols) {
+      case (acc, (fv, vf)) =>
+        val using = (fv.entities :+ entityTsCol).map(c => c -> c)
+        using ++ acc.filterNot(using.contains) ++ vf
     }
+    project(joined, order)
   }
 
-  /** The flagship on the NATIVE sort-merge as-of operator
-    * ([[graft.plans.AsOfJoin]]): each view is ONE as-of join of the full
-    * entity df — no distinct, no window, no join-back; the operator's
-    * single merge pass per partition handles duplicate entity rows and
-    * null attachment natively. Same results as [[getHistoricalFeatures]]
-    * (spec-asserted), including created-ts and tieBreakColumns ordering,
-    * which are folded into one lexicographic order column. */
+  /** [[getHistoricalFeatures]] with the entity df's columns first, in its
+    * own order, then every view's features. A feature named like an entity
+    * column or an earlier view's feature gets an `_asof` suffix. */
   def getHistoricalFeaturesNative(
       entityDf: DataFrame,
       views: Seq[FeatureView],
       entityTsCol: String = "event_timestamp",
       fullFeatureNames: Boolean = false): DataFrame = {
+    val (joined, feats) =
+      asOfJoinViews(entityDf, views, entityTsCol, fullFeatureNames)
+    val order = feats.foldLeft(entityDf.columns.toSeq.map(c => c -> c)) {
+      (acc, vf) =>
+        val taken = acc.map(_._2).toSet
+        acc ++ vf.map { case (h, out) =>
+          h -> (if (taken(out)) s"${out}_asof" else out)
+        }
+    }
+    project(joined, order)
+  }
+
+  /** Each view is ONE [[graft.plans.AsOf.join]] of the running result:
+    * the operator's single merge pass per partition handles duplicate
+    * entity rows and null attachment natively. Feature columns travel
+    * under hidden per-view names, so they collide with nothing; they are
+    * returned per view as (hidden, output) name pairs. */
+  private def asOfJoinViews(
+      entityDf: DataFrame,
+      views: Seq[FeatureView],
+      entityTsCol: String,
+      fullFeatureNames: Boolean): (DataFrame, Seq[Seq[(String, String)]]) = {
     val spark = entityDf.sparkSession
     validateEntityDf(entityDf, views, entityTsCol)
     val (minTs, maxTs) = entityBounds(entityDf, entityTsCol)
 
-    views.foldLeft(entityDf) { (acc, fv) =>
-      val rel = prepareView(spark, fv, minTs, maxTs, fullFeatureNames)
-      // The native operator takes ONE ascending tie-break column; fold
-      // (created_ts, tieBreakColumns...) into a lexicographic struct so
-      // "last row in sort order" == the compositional window's
-      // (created DESC, tieBreaks DESC) pick.
-      val orderNames =
-        (if (rel.hasCreated) Seq(CreatedTs) else Nil) ++
-          fv.tieBreakColumns.map(rel.prefix + _)
-      val (feats, orderCol) = orderNames match {
-        case Seq()    => (rel.feats, None)
-        case Seq(one) => (rel.feats, Some(one))
-        case many =>
-          (rel.feats.withColumn(OrderTs, struct(many.map(col): _*)),
-            Some(OrderTs))
-      }
-      graft.plans.AsOf.join(
-        acc, feats, fv.entities, entityTsCol, EventTs,
-        orderCol, fv.ttlSeconds)
-        .drop(EventTs).drop(CreatedTs).drop(OrderTs)
+    val none = Vector.empty[Seq[(String, String)]]
+    views.zipWithIndex.foldLeft((entityDf, none)) {
+      case ((acc, named), (fv, i)) =>
+        val rel = prepareView(spark, fv, minTs, maxTs, fullFeatureNames)
+        val hidden = rel.outNames.indices.map(j => s"__graft_v${i}_f$j")
+        val hiddenOf = rel.outNames.zip(hidden).toMap
+        val renamed = rel.feats.toDF(
+          rel.feats.columns.toSeq.dropRight(hidden.size) ++ hidden: _*)
+        // The operator takes ONE ascending tie-break column; fold
+        // (created_ts, tieBreakColumns...) into a lexicographic struct so
+        // the last row in sort order is the (created DESC, tieBreaks DESC)
+        // pick.
+        val orderNames =
+          (if (rel.hasCreated) Seq(CreatedTs) else Nil) ++
+            fv.tieBreakColumns.map { c =>
+              hiddenOf.getOrElse(rel.prefix + c,
+                throw new IllegalArgumentException(
+                  s"FeatureView '${fv.name}': tie-break column '$c' is not " +
+                    s"one of its features (${rel.outNames.mkString(", ")})"))
+            }
+        val (feats, orderCol) = orderNames match {
+          case Seq()    => (renamed, None)
+          case Seq(one) => (renamed, Some(one))
+          case many =>
+            (renamed.withColumn(OrderTs, struct(many.map(col): _*)),
+              Some(OrderTs))
+        }
+        val joined = graft.plans.AsOf.join(
+          acc, feats, fv.entities, entityTsCol, EventTs,
+          orderCol, fv.ttlSeconds)
+          .drop(EventTs, CreatedTs, OrderTs)
+        (joined, named :+ hidden.zip(rel.outNames))
     }
   }
 
-  /** One row per distinct (entity keys, entity ts): the as-of-latest feature
-    * values, already renamed for output. */
-  private def latestPerEntityRow(
-      spark: SparkSession,
-      fv: FeatureView,
-      entityDf: DataFrame,
-      entityTsCol: String,
-      minTs: Any,
-      maxTs: Any,
-      fullFeatureNames: Boolean): DataFrame = {
-    val rel = prepareView(spark, fv, minTs, maxTs, fullFeatureNames)
-    val feats = rel.feats
-
-    // A1: distinct entity rows for the lookup (the full entity df is only
-    // re-attached in the final left join).
-    val entKeys = fv.entities :+ entityTsCol
-    val entDistinct0 = entityDf.select(entKeys.map(col): _*).distinct()
-
-    // J2: as-of inner join — equi on entity keys, range residual on ts.
-    // Inclusive on both ends; ttl == 0 ⇒ unbounded lookback
-    // (ref: hive.py:614-624, tests/feast_tests_funcs.py:263-269).
-    def rangeCond(f: DataFrame, e: DataFrame): Column = {
-      val upper = f(EventTs) <= e(entityTsCol)
-      if (fv.ttlSeconds > 0)
-        upper && f(EventTs) >= e(entityTsCol) -
-          expr(s"INTERVAL ${fv.ttlSeconds} SECONDS")
-      else upper
-    }
-    val joined: DataFrame =
-      if (fv.entities.nonEmpty) {
-        // Equi keys present: hash/SMJ on the keys, range as residual —
-        // Catalyst/AQE picks broadcast when the entity side is small.
-        val cond = fv.entities
-          .map(k => feats(k) === entDistinct0(k))
-          .foldLeft(rangeCond(feats, entDistinct0))(_ && _)
-        feats.join(entDistinct0, cond, "inner")
-      } else if (fv.ttlSeconds > 0) {
-        // Entity-less + bounded TTL: TIME-BUCKETED range join. Bucket width
-        // = ttl, so a feature row in [entity_ts - ttl, entity_ts] is always
-        // in the entity's bucket or the one before — the entity side probes
-        // both, turning the θ-join into a hash equi-join on the bucket id
-        // (at 100 TB the alternative broadcast nested-loop is O(|feat|·|ts|)
-        // and was the measured bottleneck at sf0.1 already).
-        val w = fv.ttlSeconds * 1000000L
-        val fB = feats.withColumn(Bkt, floor(unix_micros(col(EventTs)) / w))
-        val eB = entDistinct0
-          .withColumn(Bkt, explode(array(
-            floor(unix_micros(col(entityTsCol)) / w),
-            floor(unix_micros(col(entityTsCol)) / w) - 1)))
-        fB.join(eB, fB(Bkt) === eB(Bkt) && rangeCond(fB, eB), "inner")
-          .drop(Bkt)
-      } else {
-        // Entity-less + unbounded lookback: no bucketing possible — keep
-        // the broadcast nested-loop with the (small) distinct-ts side
-        // broadcast. Scales with |distinct entity ts|, documented.
-        feats.join(broadcast(entDistinct0),
-          rangeCond(feats, entDistinct0), "inner")
-      }
-    val entDistinct = entDistinct0
-
-    // Flatten: entity key columns from the entity side, features from the
-    // feature side (names are disjoint by construction).
-    val flat = joined.select(
-      entKeys.map(entDistinct(_)) ++
-        Seq(col(EventTs)) ++
-        (if (rel.hasCreated) Seq(col(CreatedTs)) else Nil) ++
-        rel.outNames.map(col): _*)
-
-    // W1-shaped latest pick: one window replaces A3 + A4 + J3.
-    val order: Seq[Column] =
-      (col(EventTs).desc +:
-        (if (rel.hasCreated) Seq(col(CreatedTs).desc) else Nil)) ++
-        fv.tieBreakColumns.map(c => col(rel.prefix + c).desc)
-    val w = Window.partitionBy(entKeys.map(col): _*).orderBy(order: _*)
-    flat
-      .withColumn(Rn, row_number().over(w))
-      .filter(col(Rn) === 1)
-      .select((entKeys ++ rel.outNames).map(col): _*)
-  }
+  /** One final projection: `(source, output)` column name pairs, in order. */
+  private def project(df: DataFrame, cols: Seq[(String, String)]): DataFrame =
+    df.select(cols.map { case (src, out) =>
+      val c = col(s"`${src.replace("`", "``")}`")
+      if (src == out) c else c.as(out)
+    }: _*)
 }

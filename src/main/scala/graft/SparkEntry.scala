@@ -13,7 +13,7 @@ object SparkEntry {
     * compositional window formulation at the second decade (1.71 s vs
     * 10.76 s, ratio/decade 2.3 vs 7.8 — see STATUS.md "100× chained
     * probe, round-8 refresh"), so the custom operator IS the 100 TB
-    * plan. The compositional twin stays gated as pit_events_ttl1h. */
+    * plan. */
   def entry(spark: SparkSession): DataFrame =
     CoreQueries.queries("pit_native_asof")(spark, "/root/testdata/sf0.001")
 

@@ -1,17 +1,18 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftSql}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, GraftSql, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, Expression, JoinedRow, RowOrdering, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, BinaryComparison, Cast, JoinedRow, RowOrdering, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.functions.{array, col, explode, floor, unix_micros}
+import org.apache.spark.sql.types.{DataType, DateType, StringType, StructField, StructType, TimestampNTZType, TimestampType}
 
 /** A TRUE sort-merge as-of join as a first-class Catalyst operator — the
-  * perf upgrade path SURVEY §4 documents over the compositional PIT plan
-  * (equi-join → window → join-back):
+  * one point-in-time join [[graft.PointInTime]] runs for every view:
   *
   *   entity LEFT-ASOF-JOIN features
   *     ON keys equal AND feature.ts <= entity.ts
@@ -23,8 +24,11 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
   * for every entity row the candidate pointer holds the newest feature
   * row with ts <= entity ts, so the whole join is a single pass with no
   * window state, no per-view join-back, and exactly one shuffle+sort per
-  * side (the compositional plan shuffles the matched set a second time
-  * through its window).
+  * side (a window formulation shuffles the matched set a second time).
+  * Both sides' keys must have the same type — [[AsOf.join]] casts them to
+  * a common one — or hashing and ordering disagree between the sides. The
+  * merge reads both timestamps as the same micros type for the same
+  * reason.
   *
   * The operator plugs in through PUBLIC seams only: the logical node is
   * planned by [[AsOfJoinStrategy]], installable per-session via
@@ -179,27 +183,71 @@ object AsOf {
     * bucket key and the operator runs as a normal hash-clustered
     * distributed merge; the operator's own TTL check drops the
     * out-of-range remainder. One operator, one merge code path, flat
-    * scaling — subsuming the θ-join branch the compositional plan
-    * needed. TTL 0 (unbounded lookback) has no bucketing possible and
-    * keeps the documented single-partition merge. */
+    * scaling, with no θ-join. TTL 0 (unbounded lookback) has no
+    * bucketing possible and keeps the documented single-partition merge.
+    *
+    * KEY TYPES: the exchanges hash and the merge orders each side's keys
+    * as typed values, so an Int entity key against a Long feature key
+    * would land in different partitions, and a String against a Long
+    * would never compare equal. A key whose types differ is cast on both
+    * sides, into hidden key columns, to the type Spark's `===` coerces
+    * the pair to; the entity's own columns keep their types. A pair `===`
+    * cannot compare is rejected.
+    *
+    * TIMESTAMP TYPES: the merge compares raw micros, so both timestamps
+    * must be the same TIMESTAMP or TIMESTAMP_NTZ type — a TIMESTAMP_NTZ
+    * wall clock read against TIMESTAMP (UTC) micros would shift every
+    * match by the session zone's offset. Otherwise both are cast, into
+    * hidden columns, to the type of Spark's `feature.ts <= entity.ts`,
+    * with DATE and STRING taken to TIMESTAMP as the TTL bound
+    * `entity.ts - INTERVAL n SECONDS` takes them; other types are
+    * rejected. */
   def join(
       entity: DataFrame, features: DataFrame,
       keys: Seq[String], entityTsCol: String, featureTsCol: String,
       createdCol: Option[String] = None,
       ttlSeconds: Long = 0L): DataFrame = {
+    val spark = entity.sparkSession
+    def typeOf(df: DataFrame, c: String): Option[DataType] =
+      df.schema.find(_.name == c).map(_.dataType)
+    val tsTypes = (typeOf(entity, entityTsCol), typeOf(features, featureTsCol))
+    val tsType = tsTypes match {
+      case (Some(l), Some(r)) =>
+        val t = mergeTsType(spark, l, r)
+        if (l != t || r != t) {
+          val (lTs, rTs) = ("__asof_ts_l", "__asof_ts_r")
+          return join(entity.withColumn(lTs, col(entityTsCol).cast(t)),
+            features.withColumn(rTs, col(featureTsCol).cast(t)),
+            keys, lTs, rTs, createdCol, ttlSeconds).drop(lTs, rTs)
+        }
+        t
+      case _ => TimestampType // attr() below names the missing column
+    }
     if (keys.isEmpty && ttlSeconds > 0) {
-      import org.apache.spark.sql.functions._
       val w = ttlSeconds * 1000000L
+      def bucket(c: String) = floor(unixMicros(col(c), tsType) / w)
       val bkt = "__asof_bkt"
-      val ent2 = entity.withColumn(
-        bkt, floor(unix_micros(col(entityTsCol)) / w))
+      val ent2 = entity.withColumn(bkt, bucket(entityTsCol))
       val feat2 = features.withColumn(bkt, explode(array(
-        floor(unix_micros(col(featureTsCol)) / w),
-        floor(unix_micros(col(featureTsCol)) / w) + 1)))
+        bucket(featureTsCol), bucket(featureTsCol) + 1)))
       return join(ent2, feat2, Seq(bkt), entityTsCol, featureTsCol,
         createdCol, ttlSeconds).drop(bkt)
     }
-    val spark = entity.sparkSession
+    val recast = keys.flatMap { k =>
+      (typeOf(entity, k), typeOf(features, k)) match {
+        case (Some(l), Some(r)) if l != r =>
+          Some((k, s"__asof_cast_$k", commonKeyType(spark, k, l, r)))
+        case _ => None
+      }
+    }
+    if (recast.nonEmpty) {
+      val casts = recast.map { case (k, h, t) => h -> col(k).cast(t) }.toMap
+      val keys2 = keys.map(k => recast.find(_._1 == k).fold(k)(_._2))
+      return join(entity.withColumns(casts),
+        features.withColumns(casts).drop(recast.map(_._1): _*),
+        keys2, entityTsCol, featureTsCol, createdCol, ttlSeconds)
+        .drop(recast.map(_._2): _*)
+    }
     if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ AsOfJoinStrategy
@@ -223,24 +271,62 @@ object AsOf {
         throw new IllegalArgumentException(
           s"as-of join: column '$name' not found in " +
             plan.output.map(_.name).mkString("[", ", ", "]")))
-    // The merge reads timestamps via getLong (micros) — any other type
-    // would read garbage silently, so reject it here.
-    def tsAttr(plan: LogicalPlan, name: String): Attribute = {
-      val a = attr(plan, name)
-      a.dataType match {
-        case org.apache.spark.sql.types.TimestampType |
-             org.apache.spark.sql.types.TimestampNTZType => a
-        case other => throw new IllegalArgumentException(
-          s"as-of join: '$name' must be a timestamp column, got " +
-            other.catalogString)
-      }
-    }
     val joined = GraftSql.ofRows(spark, AsOfJoin(
       lPlan, rPlan,
       keys.map(attr(lPlan, _)), keys.map(k => attr(rPlan, rName(k))),
-      tsAttr(lPlan, entityTsCol), tsAttr(rPlan, rName(featureTsCol)),
+      attr(lPlan, entityTsCol), attr(rPlan, rName(featureTsCol)),
       createdCol.map(c => attr(rPlan, rName(c))),
       ttlSeconds))
     joined.drop(keys.map(k => s"__asof_key_$k"): _*)
+  }
+
+  /** Micros since the epoch. `unix_micros` takes TIMESTAMP only; a
+    * TIMESTAMP_NTZ wall clock is read as UTC, not in the session zone, so
+    * time buckets do not move with its DST shifts. */
+  private def unixMicros(c: Column, t: DataType): Column = unix_micros(
+    if (t == TimestampNTZType)
+      GraftSql.column(
+        Cast(GraftSql.expression(c), TimestampType, Some("UTC")))
+    else c)
+
+  /** The type the merge compares the two timestamps as (see [[join]]). */
+  private def mergeTsType(
+      spark: SparkSession, entity: DataType, feature: DataType): DataType =
+    if (entity == feature &&
+        (entity == TimestampType || entity == TimestampNTZType)) entity
+    else coercedType(spark, feature, entity, _ <= _) match {
+      case Some(t @ (TimestampType | TimestampNTZType)) => t
+      case Some(DateType | _: StringType) => TimestampType
+      case _ => throw new IllegalArgumentException(
+        s"as-of join: the timestamps are ${entity.catalogString} on the " +
+          s"entity side and ${feature.catalogString} on the feature side; " +
+          "they must be timestamps, dates or strings Spark compares with '<='")
+    }
+
+  /** The type both sides of `entity.k === features.k` are coerced to
+    * under the session's rules (ANSI or not). */
+  private def commonKeyType(
+      spark: SparkSession, key: String, l: DataType, r: DataType): DataType =
+    coercedType(spark, l, r, _ === _).getOrElse(
+      throw new IllegalArgumentException(
+        s"as-of join: key '$key' is ${l.catalogString} on the entity " +
+          s"side and ${r.catalogString} on the feature side, which " +
+          "Spark cannot compare with '='"))
+
+  /** The type Spark coerces both operands of `cmp(l, r)` to, read off the
+    * analyzed comparison of two empty typed columns; None when the
+    * comparison does not analyze. */
+  private def coercedType(
+      spark: SparkSession, l: DataType, r: DataType,
+      cmp: (Column, Column) => Column): Option[DataType] = {
+    val probe = spark.createDataFrame(
+      java.util.Collections.emptyList[Row](),
+      StructType(Seq(StructField("l", l), StructField("r", r))))
+    try
+      probe.select(cmp(col("l"), col("r"))).queryExecution.analyzed
+        .expressions.flatMap(_.collectFirst {
+          case c: BinaryComparison => c.left.dataType
+        }).headOption
+    catch { case _: AnalysisException => None }
   }
 }

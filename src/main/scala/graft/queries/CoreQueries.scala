@@ -356,11 +356,11 @@ object CoreQueries {
       PointInTime.getHistoricalFeatures(
         spine(s, dir), Seq(eventsView(dir, 3600)))),
 
-    // The same semantics through the NATIVE sort-merge as-of operator
-    // (custom LogicalPlan/Strategy/SparkPlan, graft.plans.AsOfJoin) —
-    // identical oracle proves plan-level equivalence. event_id doubles as
-    // the created-ts so exact ties break like the oracle's
-    // `ORDER BY ts DESC, event_id DESC`.
+    // The same semantics called on the sort-merge as-of operator directly
+    // (custom LogicalPlan/Strategy/SparkPlan, graft.plans.AsOf.join), with
+    // no PointInTime view preparation. event_id doubles as the created-ts
+    // so exact ties break like the oracle's `ORDER BY ts DESC, event_id
+    // DESC`.
     "pit_native_asof" -> ((s, dir) => {
       val feats = events(s, dir)
         .select("user_id", "ts", "value", "event_type", "event_id")
@@ -387,9 +387,9 @@ object CoreQueries {
         fullFeatureNames = true)
     }),
 
-    // The two-view flagship again, but orchestrated ENTIRELY on the native
-    // as-of operator (getHistoricalFeaturesNative) — same oracle as
-    // pit_two_views_full_names proves end-to-end plan equivalence.
+    // The two-view flagship through getHistoricalFeaturesNative: the same
+    // plan and oracle as pit_two_views_full_names; this row pins the native
+    // column order (entity columns first).
     "pit_native_two_views" -> ((s, dir) => {
       regEvents(s, dir)
       PointInTime.getHistoricalFeaturesNative(
@@ -414,10 +414,10 @@ object CoreQueries {
           tieBreakColumns = Seq("event_id"))))
     }),
 
-    // The same entity-less view through the NATIVE operator: keyless +
-    // bounded TTL routes through AsOf.join's synthetic time-bucket key,
-    // so the merge runs distributed (hash on bucket), not single
-    // partition — same oracle as pit_dummy_entity proves equivalence.
+    // The same entity-less view through getHistoricalFeaturesNative: the
+    // same plan and oracle as pit_dummy_entity (keyless + bounded TTL
+    // merges on AsOf.join's time-bucket key); this row pins the native
+    // column order.
     "pit_native_dummy" -> ((s, dir) => {
       val ent = spine(s, dir).select("row_tag", "event_timestamp")
       PointInTime.getHistoricalFeaturesNative(

@@ -68,7 +68,7 @@ class ConsistencySpec extends SparkSpec {
 
   /** The reference's check_offline_and_online_features
     * (tests/feast_tests_funcs.py:404-448): assert the online point read
-    * AND both offline retrieval paths see `expected` for `driverId` as of
+    * AND every offline retrieval path sees `expected` for `driverId` as of
     * `eventTs`. `expected`: None = online miss / offline NULL;
     * Some(null) = key materialized with a NULL value. */
   private def checkBoth(
@@ -85,7 +85,8 @@ class ConsistencySpec extends SparkSpec {
           s"driver $driverId: online value ${online.get("value")} != $v")
     }
 
-    // offline — both orchestrations must agree with the store
+    // offline — both engine entry points and the independent
+    // compositional formulation must agree with the store
     val valueCol = if (fullFeatureNames) "test_correctness__value" else "value"
     val entityDf = spark.createDataFrame(
       java.util.Arrays.asList(Row(driverId, eventTs)),
@@ -93,7 +94,9 @@ class ConsistencySpec extends SparkSpec {
         StructField("driver_id", IntegerType),
         StructField("event_timestamp", TimestampType))))
     for ((label, df) <- Seq(
-        "compositional" -> PointInTime.getHistoricalFeatures(
+        "compositional" -> CompositionalPit.getHistoricalFeatures(
+          entityDf, Seq(fv), fullFeatureNames = fullFeatureNames),
+        "engine" -> PointInTime.getHistoricalFeatures(
           entityDf, Seq(fv), fullFeatureNames = fullFeatureNames),
         "native" -> PointInTime.getHistoricalFeaturesNative(
           entityDf, Seq(fv), fullFeatureNames = fullFeatureNames))) {

@@ -3,8 +3,9 @@ package graft
 import graft.model.FeatureView
 import graft.sources.FeatureSource
 
-/** The native-operator orchestration must return exactly what the
-  * compositional flagship returns, across views/ttls/prefixing. */
+/** Both engine entry points (which run the native as-of operator) must
+  * return exactly what the independent compositional formulation
+  * ([[CompositionalPit]]) returns, across views/ttls/prefixing. */
 class NativePitSpec extends SparkSpec {
 
   private def normalize(df: org.apache.spark.sql.DataFrame) = {
@@ -26,9 +27,13 @@ class NativePitSpec extends SparkSpec {
       features = Seq("v", "seq"), tieBreakColumns = Seq("seq"))
     val entity = Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 11:00:00")))
       .toDF("driver_id", "event_timestamp")
-    val classic = PointInTime.getHistoricalFeatures(entity, Seq(fv)).collect()
+    val classic =
+      CompositionalPit.getHistoricalFeatures(entity, Seq(fv)).collect()
+    val engine = PointInTime.getHistoricalFeatures(entity, Seq(fv)).collect()
     val native = PointInTime.getHistoricalFeaturesNative(entity, Seq(fv)).collect()
     assert(classic.head.getAs[Double]("v") == 9.0)
+    assert(engine.head.getAs[Double]("v") == 9.0,
+      "engine path must apply the same tie-break")
     assert(native.head.getAs[Double]("v") == 9.0,
       "native path must apply the same tie-break")
   }
@@ -50,14 +55,20 @@ class NativePitSpec extends SparkSpec {
           createdTimestampColumn = Some("created")),
         features = Seq("conv_rate", "acc_rate"),
         ttlSeconds = ttl)
-      val classic = PointInTime.getHistoricalFeatures(
+      val classic = CompositionalPit.getHistoricalFeatures(
+        entity, Seq(fv), fullFeatureNames = full)
+      val engine = PointInTime.getHistoricalFeatures(
         entity, Seq(fv), fullFeatureNames = full)
       val native = PointInTime.getHistoricalFeaturesNative(
         entity, Seq(fv), fullFeatureNames = full)
       assert(classic.columns.sorted.sameElements(native.columns.sorted),
         s"columns ttl=$ttl full=$full")
+      assert(classic.columns.sameElements(engine.columns),
+        s"engine column order ttl=$ttl full=$full")
       assert(normalize(classic) == normalize(native),
         s"rows differ ttl=$ttl full=$full")
+      assert(normalize(classic) == normalize(engine),
+        s"engine rows differ ttl=$ttl full=$full")
     }
   }
 
@@ -88,8 +99,10 @@ class NativePitSpec extends SparkSpec {
         path = Some(s"$dir/events.parquet"), eventTimestampColumn = "ts"),
       features = Seq("value", "event_id"),
       ttlSeconds = 600, tieBreakColumns = Seq("event_id"))
-    val classic = PointInTime.getHistoricalFeatures(ent, Seq(fv))
+    val classic = CompositionalPit.getHistoricalFeatures(ent, Seq(fv))
     val native = PointInTime.getHistoricalFeaturesNative(ent, Seq(fv))
     assert(normalize(classic) == normalize(native))
+    assert(normalize(classic) ==
+      normalize(PointInTime.getHistoricalFeatures(ent, Seq(fv))))
   }
 }

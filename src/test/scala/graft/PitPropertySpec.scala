@@ -7,8 +7,9 @@ import graft.sources.FeatureSource
 
 /** Randomized-property harness for the flagship: on seeded random
   * datasets (duplicate entity rows, boundary-exact timestamps, keys
-  * with no features, TTL on/off), BOTH orchestrations must equal a
-  * nested-loop in-memory oracle row for row. Fixture suites prove the
+  * with no features, TTL on/off), both engine entry points and the
+  * independent compositional formulation must equal a nested-loop
+  * in-memory oracle row for row. Fixture suites prove the
   * known corners; this sweeps the space between them. Seeds are fixed —
   * a failure reproduces exactly. */
 class PitPropertySpec extends SparkSpec {
@@ -64,11 +65,15 @@ class PitPropertySpec extends SparkSpec {
 
       val expected = oracle(feats, ents, ttl)
         .sortBy(t => (t._1, t._2, t._3.getOrElse(-1L)))
-      val classic = got(PointInTime.getHistoricalFeatures(entityDf, Seq(fv)))
+      val classic =
+        got(CompositionalPit.getHistoricalFeatures(entityDf, Seq(fv)))
+      val engine = got(PointInTime.getHistoricalFeatures(entityDf, Seq(fv)))
       val native =
         got(PointInTime.getHistoricalFeaturesNative(entityDf, Seq(fv)))
       assert(classic == expected,
         s"seed=$seed ttl=$ttl: compositional != oracle\n$classic\n$expected")
+      assert(engine == expected,
+        s"seed=$seed ttl=$ttl: engine != oracle\n$engine\n$expected")
       assert(native == expected,
         s"seed=$seed ttl=$ttl: native != oracle\n$native\n$expected")
     }

@@ -9,6 +9,8 @@ import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExc
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.execution.window.WindowExec
 
+import graft.plans.AsOfJoinExec
+
 /** Plan-quality gate over EVERY declared query (VERDICT r3 #5): the
   * scale-killers that correctness tests can't see — O(n·m) join
   * strategies and single-partition windows — fail HERE, locally, instead
@@ -17,12 +19,14 @@ import org.apache.spark.sql.execution.window.WindowExec
   * Checked on the physical plan of each `SparkEntry.queries` entry at
   * sf0.001:
   *  - no `CartesianProductExec` anywhere;
-  *  - no `BroadcastNestedLoopJoinExec` outside the one documented
-  *    entity-less + unbounded-TTL corner (PointInTime.scala — the
-  *    distinct-ts side is broadcast and bounded, and no bucketing exists
-  *    for an unbounded range);
+  *  - no `BroadcastNestedLoopJoinExec` outside the licensed queries
+  *    below;
   *  - no partition-less `WindowExec` (every range-surviving row through
-  *    ONE partition — the round-2 scale-killer class).
+  *    ONE partition — the round-2 scale-killer class);
+  *  - no single-partition `AsOfJoinExec` (a keyless view with TTL 0 — the
+  *    same class; no declared query has one, and the licensed case is
+  *    pinned by "a keyless TTL-0 view is the one single-partition as-of
+  *    merge" below).
   */
 class PlanAuditSpec extends SparkSpec {
 
@@ -34,8 +38,6 @@ class PlanAuditSpec extends SparkSpec {
     }
 
   /** Queries licensed to broadcast-nested-loop:
-    *  - the entity-less unbounded-lookback PIT corner (small broadcast
-    *    side, documented at the join site in PointInTime);
     *  - brute-force kNN, which is BY DEFINITION all-pairs scoring against
     *    a small broadcast query side — it exists as the exact baseline;
     *    the scale paths are knn_lsh_bucketed / knn_ivf (equi-joins,
@@ -66,7 +68,7 @@ class PlanAuditSpec extends SparkSpec {
     *    its pair-matrix join is an audited qid equi-join and the greedy
     *    selection runs on k-bounded collected arrays. */
   private val nlJoinAllowed =
-    Set("pit_dummy_entity", "knn_cosine_brute", "knn_recall_lsh",
+    Set("knn_cosine_brute", "knn_recall_lsh",
       "knn_rptree_recall", // its EXACT side is the licensed brute
       // baseline (recall is measured against it by definition); the
       // forest side under audit is leaf equi-joins only —
@@ -152,7 +154,10 @@ class PlanAuditSpec extends SparkSpec {
           case w: WindowExec
             if w.partitionSpec.isEmpty && !limitBounded(w.child) => w
         }.map(_ => s"$name: partition-less WindowExec")
-        cart ++ bnlj ++ winNoPart
+        val asOfOnePart = all.collect {
+          case j: AsOfJoinExec if j.leftKeys.isEmpty => j
+        }.map(_ => s"$name: single-partition AsOfJoinExec")
+        cart ++ bnlj ++ winNoPart ++ asOfOnePart
     }
     assert(violations.isEmpty,
       s"plan-quality violations:\n  ${violations.mkString("\n  ")}")
@@ -193,5 +198,81 @@ class PlanAuditSpec extends SparkSpec {
     assert(violations.isEmpty,
       s"forced-broadcast anti-join violations:\n  " +
         violations.mkString("\n  "))
+  }
+
+  test("Engine PIT runs one AsOfJoinExec per view and no window") {
+    import java.sql.Timestamp
+    import spark.implicits._
+    import graft.model.FeatureView
+    import graft.sources.FeatureSource
+    // the benchmark's three-view shape: keyed with created_ts and a TTL,
+    // keyed with TTL 0, keyless with a TTL
+    val t = Timestamp.valueOf("2024-01-01 10:00:00")
+    Seq((1L, t, t, 1.0)).toDF("user_id", "event_ts", "created_ts", "clicks")
+      .createOrReplaceTempView("audit_stats")
+    Seq((1L, t, 30)).toDF("user_id", "event_ts", "age")
+      .createOrReplaceTempView("audit_profile")
+    Seq((t, 0.5)).toDF("event_ts", "load")
+      .createOrReplaceTempView("audit_global")
+    def src(tbl: String, created: Option[String] = None) = FeatureSource(
+      table = Some(tbl), eventTimestampColumn = "event_ts",
+      createdTimestampColumn = created)
+    val views = Seq(
+      FeatureView("stats", Seq("user_id"),
+        src("audit_stats", Some("created_ts")), Seq("clicks"), 2 * 86400),
+      FeatureView("profile", Seq("user_id"), src("audit_profile"),
+        Seq("age"), 0),
+      FeatureView("global", Nil, src("audit_global"), Seq("load"), 3600))
+    val spine = Seq((1L, Timestamp.valueOf("2024-01-01 11:00:00")))
+      .toDF("user_id", "event_timestamp")
+    val df = new Engine(spark)
+      .getHistoricalFeatures(EntityFrame(spine), views).toDF
+    df.queryExecution.toRdd.count()
+    // the executed adaptive plan, query stages opened
+    def deep(p: SparkPlan): Seq[SparkPlan] = nodes(p).flatMap {
+      case q: QueryStageExec => q +: deep(q.plan)
+      case n => Seq(n)
+    }
+    val all = deep(df.queryExecution.executedPlan)
+    val asOf = all.collect { case j: AsOfJoinExec => j }
+    assert(asOf.size == views.size,
+      s"expected ${views.size} AsOfJoinExec, got ${asOf.size}:\n" +
+        df.queryExecution.executedPlan)
+    assert(!all.exists(_.isInstanceOf[WindowExec]),
+      s"Engine PIT must not run a window:\n${df.queryExecution.executedPlan}")
+  }
+
+  /** Licensed trade-off: with no key and no TTL there is no bucket to
+    * hash on, so the merge takes the whole entity df and every feature row
+    * up to the latest entity ts in one partition — O(n log n), against the
+    * O(entity ts × feature rows) nested loop it replaced. Keyed views and
+    * keyless views with a TTL stay hash-partitioned. */
+  test("a keyless TTL-0 view is the one single-partition as-of merge") {
+    import java.sql.Timestamp
+    import spark.implicits._
+    import graft.model.FeatureView
+    import graft.sources.FeatureSource
+    val t = Timestamp.valueOf("2024-01-01 10:00:00")
+    Seq((1L, t, 1.0)).toDF("user_id", "event_ts", "clicks")
+      .createOrReplaceTempView("audit_keyed")
+    Seq((t, 0.5)).toDF("event_ts", "load")
+      .createOrReplaceTempView("audit_keyless")
+    def src(tbl: String) =
+      FeatureSource(table = Some(tbl), eventTimestampColumn = "event_ts")
+    val spine = Seq((1L, Timestamp.valueOf("2024-01-01 11:00:00")))
+      .toDF("user_id", "event_timestamp")
+    def singlePartition(v: FeatureView): Boolean = {
+      val plan = PointInTime.getHistoricalFeatures(spine, Seq(v))
+        .queryExecution.executedPlan
+      val asOf = nodes(plan).collect { case j: AsOfJoinExec => j }
+      assert(asOf.size == 1, plan)
+      asOf.head.leftKeys.isEmpty
+    }
+    assert(singlePartition(
+      FeatureView("g0", Nil, src("audit_keyless"), Seq("load"), 0)))
+    assert(!singlePartition(
+      FeatureView("g1", Nil, src("audit_keyless"), Seq("load"), 3600)))
+    assert(!singlePartition(
+      FeatureView("k0", Seq("user_id"), src("audit_keyed"), Seq("clicks"), 0)))
   }
 }

@@ -14,4 +14,11 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     .getOrCreate()
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
+
+  /** Runs `body` with the session time zone set to `zone`. */
+  def withSessionZone[T](zone: String)(body: => T): T = {
+    val prior = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", zone)
+    try body finally spark.conf.set("spark.sql.session.timeZone", prior)
+  }
 }
