@@ -15,83 +15,108 @@ import org.apache.spark.sql.functions._
   * trick the IVF k-means trainer uses. The oracle unrolls the identical
   * iterations in SQL.
   *
-  * Scale posture: each iteration is one (src-keyed) equi-join of the
-  * rank vector to the edge list plus a dst-keyed sum — the standard
-  * distributed PageRank shape (edge-partitioned joins, no driver-side
-  * graph). Dangling-node mass is collected by a grouping-less aggregate
-  * (a provably-single-row broadcast) and redistributed uniformly.
+  * Scale posture: each round is ONE plan with ONE exchange — the rank
+  * vector's src-keyed equi-join to the edge list (broadcast or shuffle,
+  * chosen from the MEASURED sizes of both persisted relations), its
+  * per-edge contributions unioned with the rank rows themselves and
+  * summed in a single dst-keyed `groupBy` — the standard distributed
+  * PageRank shape (edge-partitioned joins, no driver-side graph). The
+  * job that materializes a round also folds the dangling-node mass,
+  * which enters the next round as a literal.
   */
 object Graph {
 
   /** `iters` rounds of damped PageRank over `edges(srcCol, dstCol)`
-    * (multi-edges collapse to simple edges; every endpoint is a node).
-    * Returns `(node, rank_scaled)` for ALL nodes — rank_scaled is the
+    * (multi-edges collapse to simple edges; every endpoint is a node; an
+    * edge with a NULL endpoint is not an edge). Returns
+    * `(node, rank_scaled)` for ALL nodes — rank_scaled is the
     * fixed-point long; callers rank by it directly (exact ordering, no
-    * FP ties). */
+    * FP ties). Runs as [[trustRank]] with every node a seed: the initial
+    * rank `scale/n`, the base term and the dangling share `d div n` are
+    * the same integer expressions. */
   def pageRank(
       edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 3, dampNum: Long = 85, dampDen: Long = 100,
-      scale: Long = 1000000000L): DataFrame = {
+      scale: Long = 1000000000L): DataFrame =
+    personalizedRank(edges, srcCol, dstCol, None, iters, dampNum, dampDen,
+      scale).withColumnRenamed("r", "rank_scaled")
+
+  /** The one rank loop behind [[pageRank]] (`seeds` = None: every node
+    * is a seed) and [[trustRank]] (`seeds` = a relation with a `node`
+    * column). Returns `(node, r)`. `observe` sees each round's plan
+    * after it ran (specs assert its shape).
+    *
+    * Setup is two materializations: the distinct non-NULL edges, and
+    * ONE node aggregate over `(src, 1) ∪ (dst, 0) ∪ (seed, NULL)` summed
+    * by node — out-degree (0 = dangling), seed flag, and a NULL sum for
+    * seeds outside the graph, which drop. Its job also counts the seeds
+    * and the dangling seeds (the initial dangling mass), packed into one
+    * long. A round sums each rank row's own `(node, outdeg, is_seed, 0)`
+    * with the per-edge contributions `r div outdeg` in one `groupBy`,
+    * so no join back to the node relation and no per-round dangling
+    * aggregate exist. */
+  private[llm] def personalizedRank(
+      edges: DataFrame, srcCol: String, dstCol: String,
+      seeds: Option[DataFrame], iters: Int, dampNum: Long, dampDen: Long,
+      scale: Long, observe: DataFrame => Unit = _ => ()): DataFrame = {
     require(iters >= 1 && dampNum >= 0 && dampNum <= dampDen,
       "need iters >= 1 and 0 <= dampNum <= dampDen")
-    import org.apache.spark.sql.GraftSql.{persistedView, unpersistCheckpoint}
-    require(edges.schema(srcCol).dataType == edges.schema(dstCol).dataType,
-      s"node id columns must share a type; got $srcCol: " +
-        s"${edges.schema(srcCol).dataType}, $dstCol: " +
-        s"${edges.schema(dstCol).dataType}")
-    // materialize the iteration-invariant relations ONCE: without this,
-    // every round re-runs the edge distinct and degree aggregation from
-    // the source scan (measured 6.8s → 2.6s at sf0.1 on 1.2M edges).
-    // Ids keep their NATIVE type (VERDICT r6 #5: the old up-front string
-    // cast made every iteration's join+groupBy shuffle string keys —
-    // long-keyed graphs now move 8-byte keys through all `iters` rounds)
-    val e = persistedView(edges
-      .select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
-    // ONE iteration-invariant node relation carrying the out-degree
-    // (NULL for dangling nodes) — the rank vector threads it through
-    // every round, so no per-round rank⋈outdeg join exists at all
-    // (VERDICT r6 #5's constant-cost follow-through: 3 joins per round
-    // became 2, and the separate nodes/outdeg materializations fused)
-    val nodeDeg = persistedView(
-      e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
-        .distinct()
-        .join(e.groupBy(col("src").as("node"))
-          .agg(count(lit(1)).as("outdeg")), Seq("node"), "left"))
-    val n = nodeDeg.count() // driver scalar: N is a literal in the formula
-    require(n > 0, "pageRank needs a non-empty edge list")
-    val init = scale / n  // integer division — identical in the oracle
-    val base = (scale / n) * (dampDen - dampNum) / dampDen
-    var rank = nodeDeg.select(col("node"), col("outdeg"), lit(init).as("r"))
-    var prev: Option[org.apache.spark.sql.DataFrame] = None
-    for (_ <- 1 to iters) {
+    import org.apache.spark.sql.GraftSql.{sizedView, unpersistCheckpoint}
+    val idType = edges.schema(srcCol).dataType
+    require(idType == edges.schema(dstCol).dataType,
+      s"node id columns must share a type; got $srcCol: $idType, " +
+        s"$dstCol: ${edges.schema(dstCol).dataType}")
+    // materialize the iteration-invariant edges ONCE, ids in their
+    // NATIVE type (long-keyed graphs move 8-byte keys every round)
+    val e = sizedView(edges
+      .select(col(srcCol).as("src"), col(dstCol).as("dst"))
+      .filter(col("src").isNotNull && col("dst").isNotNull).distinct())
+    val everySeed = lit(if (seeds.isEmpty) 1L else 0L)
+    val ends = e.select(col("src").as("node"), lit(1L).as("deg"),
+        everySeed.as("seed"))
+      .union(e.select(col("dst"), lit(0L), everySeed))
+    val tagged = seeds.fold(ends)(s => ends.union(s.select(
+      col("node").cast(idType), lit(null).cast("bigint"), lit(1L))))
+    // low 32 bits: seeds; high 32 bits: dangling seeds (N < 2^32)
+    val (nodes, packed) = sizedView(tagged.groupBy("node")
+        .agg(sum("deg").as("outdeg"), max("seed").as("is_seed"))
+        .filter(col("outdeg").isNotNull),
+      r => r.getLong(2) * (if (r.getLong(1) == 0L) (1L << 32) + 1 else 1L))
+    val nSeeds = packed & 0xffffffffL
+    if (nSeeds == 0) { unpersistCheckpoint(e); unpersistCheckpoint(nodes) }
+    require(nSeeds > 0, seeds.fold("pageRank needs a non-empty edge list")(
+      _ => "trustRank needs at least one seed present in the graph"))
+    val init = scale / nSeeds // integer division — identical in the oracle
+    val base = init * (dampDen - dampNum) / dampDen
+    var rank = nodes.select(col("node"), col("outdeg"), col("is_seed"),
+      (col("is_seed") * init).as("r"))
+    var dangling = (packed >>> 32) * init
+    for (i <- 1 to iters) {
       // per-edge contribution: INTEGER division (`div`, not `/` — Spark's
       // `/` on longs is double division, whose truncation could diverge
       // from the oracle's exact `//` near integer boundaries)
-      val contrib = rank
-        .join(e, col("node") === col("src"))
-        .select(col("dst").as("node"), expr("r div outdeg").as("c"))
-        .groupBy("node").agg(sum("c").as("in_sum"))
-      // dangling mass (nodes with no out-edges) redistributed uniformly
-      val dangling = rank.filter(col("outdeg").isNull)
-        .agg(coalesce(sum("r"), lit(0L)).as("d"))
-      // checkpoint each round (truncates the growing iteration lineage);
-      // unpersist the superseded round's storage
-      val next = persistedView(nodeDeg
-        .join(contrib, Seq("node"), "left")
-        .crossJoin(broadcast(dangling))
-        .select(col("node"), col("outdeg"), expr(
-          s"$base + ($dampNum * (coalesce(in_sum, CAST(0 AS BIGINT))" +
-            s" + d div $n)) div $dampDen").as("r")))
-      prev.foreach(unpersistCheckpoint)
-      prev = Some(next)
+      val contrib = rank.join(e, col("node") === col("src"))
+        .select(col("dst").as("node"), lit(0L).as("outdeg"),
+          lit(0L).as("is_seed"), expr("r div outdeg").as("c"))
+      val round = rank
+        .select(col("node"), col("outdeg"), col("is_seed"), lit(0L).as("c"))
+        .union(contrib)
+        .groupBy("node").agg(sum("outdeg").as("outdeg"),
+          sum("is_seed").as("is_seed"), sum("c").as("in_sum"))
+        .select(col("node"), col("outdeg"), col("is_seed"), expr(
+          s"is_seed * $base + ($dampNum * (in_sum + is_seed * " +
+            s"${dangling / nSeeds})) div $dampDen").as("r"))
+      // each round is persisted (flat lineage) and its job also sums
+      // the mass on dangling nodes for the next round
+      val (next, d) = sizedView(round,
+        r => if (r.getLong(1) == 0L) r.getLong(3) else 0L)
+      observe(round)
+      unpersistCheckpoint(if (i == 1) nodes else rank)
       rank = next
+      dangling = d
     }
-    val out = rank.select(col("node"), col("r").as("rank_scaled"))
-    // the returned frame reads the final checkpoint; release the
-    // iteration-invariant relations (their blocks would otherwise
-    // outlive the call)
-    unpersistCheckpoint(e); unpersistCheckpoint(nodeDeg)
-    out
+    unpersistCheckpoint(e)
+    rank.select(col("node"), col("r"))
   }
 
   /** The DuckDB twin of [[pageRank]] as a WITH-clause body: unrolled
@@ -116,7 +141,8 @@ object Graph {
          |        FROM nodes LEFT JOIN c$i ON nodes.node = c$i.node)""".stripMargin
     }.mkString(",\n")
     s"""$edgesCte,
-       |e AS (SELECT DISTINCT src, dst FROM edges_in),
+       |e AS (SELECT DISTINCT src, dst FROM edges_in
+       |      WHERE src IS NOT NULL AND dst IS NOT NULL),
        |nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
        |o AS (SELECT src, count(*) AS outdeg FROM e GROUP BY 1),
        |nn AS (SELECT count(*) AS n FROM nodes),
@@ -307,64 +333,20 @@ object Graph {
     * order-free ⇒ bit-identical across partitionings and engines; the
     * oracle unrolls the identical rounds.
     *
-    * Scale posture: identical per-round shape to [[pageRank]] (one
-    * src-keyed equi-join + one dst-keyed sum; the only extras are an
-    * iteration-invariant `is_seed` flag carried on the node relation
-    * and the same single-row dangling aggregate). Seeds relation is
-    * joined ONCE at setup — per-iteration cost is independent of |S|. */
+    * Scale posture: the SAME loop as [[pageRank]] — one plan with one
+    * exchange per round, the dangling mass folded by the round's
+    * materializing job. The seeds enter the setup node aggregate ONCE
+    * as an `is_seed` flag — per-iteration cost is independent of |S|.
+    * Seeds outside the graph are ignored; an edge with a NULL endpoint
+    * is not an edge. */
   def trustRank(
       edges: DataFrame, srcCol: String, dstCol: String,
       seeds: DataFrame, seedCol: String,
       iters: Int = 3, dampNum: Long = 85, dampDen: Long = 100,
-      scale: Long = 1000000000L): DataFrame = {
-    require(iters >= 1 && dampNum >= 0 && dampNum <= dampDen,
-      "need iters >= 1 and 0 <= dampNum <= dampDen")
-    import org.apache.spark.sql.GraftSql.{persistedView, unpersistCheckpoint}
-    require(edges.schema(srcCol).dataType == edges.schema(dstCol).dataType,
-      s"node id columns must share a type; got $srcCol: " +
-        s"${edges.schema(srcCol).dataType}, $dstCol: " +
-        s"${edges.schema(dstCol).dataType}")
-    val e = persistedView(edges
-      .select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
-    val sd = seeds.select(col(seedCol).as("node")).distinct()
-    // iteration-invariant node relation: out-degree (NULL = dangling)
-    // plus the seed flag — one setup join, zero per-round seed work
-    val nodeDeg = persistedView(
-      e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
-        .distinct()
-        .join(e.groupBy(col("src").as("node"))
-          .agg(count(lit(1)).as("outdeg")), Seq("node"), "left")
-        .join(sd.withColumn("is_seed", lit(1L)), Seq("node"), "left")
-        .select(col("node"), col("outdeg"),
-          coalesce(col("is_seed"), lit(0L)).as("is_seed")))
-    val nSeeds = nodeDeg.filter(col("is_seed") === 1L).count()
-    require(nSeeds > 0, "trustRank needs at least one seed present in the graph")
-    val init = scale / nSeeds          // seeds start with uniform trust
-    val base = (scale / nSeeds) * (dampDen - dampNum) / dampDen
-    var rank = nodeDeg.select(col("node"), col("outdeg"), col("is_seed"),
-      (col("is_seed") * init).as("r"))
-    var prev: Option[DataFrame] = None
-    for (_ <- 1 to iters) {
-      val contrib = rank
-        .join(e, col("node") === col("src"))
-        .select(col("dst").as("node"), expr("r div outdeg").as("c"))
-        .groupBy("node").agg(sum("c").as("in_sum"))
-      val dangling = rank.filter(col("outdeg").isNull)
-        .agg(coalesce(sum("r"), lit(0L)).as("d"))
-      val next = persistedView(nodeDeg
-        .join(contrib, Seq("node"), "left")
-        .crossJoin(broadcast(dangling))
-        .select(col("node"), col("outdeg"), col("is_seed"), expr(
-          s"is_seed * $base + ($dampNum * (coalesce(in_sum, CAST(0 AS BIGINT))" +
-            s" + is_seed * (d div $nSeeds))) div $dampDen").as("r")))
-      prev.foreach(unpersistCheckpoint)
-      prev = Some(next)
-      rank = next
-    }
-    val out = rank.select(col("node"), col("r").as("trust_scaled"))
-    unpersistCheckpoint(e); unpersistCheckpoint(nodeDeg)
-    out
-  }
+      scale: Long = 1000000000L): DataFrame =
+    personalizedRank(edges, srcCol, dstCol,
+      Some(seeds.select(col(seedCol).as("node"))), iters, dampNum, dampDen,
+      scale).withColumnRenamed("r", "trust_scaled")
 
   /** The DuckDB twin of [[trustRank]] as a WITH-clause body: unrolled
     * iterations from the SAME parameters, over caller-supplied
@@ -391,7 +373,8 @@ object Graph {
     }.mkString(",\n")
     s"""$edgesCte,
        |$seedsCte,
-       |e AS (SELECT DISTINCT src, dst FROM edges_in),
+       |e AS (SELECT DISTINCT src, dst FROM edges_in
+       |      WHERE src IS NOT NULL AND dst IS NOT NULL),
        |allnodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
        |o AS (SELECT src, count(*) AS outdeg FROM e GROUP BY 1),
        |nodes AS (SELECT a.node,

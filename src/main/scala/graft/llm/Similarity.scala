@@ -806,7 +806,7 @@ object Similarity {
     *    dedup, rescore by exact cosine, and keep the per-node top-k via
     *    the bounded TopKAgg. Iteration-invariant vectors are
     *    localCheckpoint'ed once; per-round results checkpoint to keep
-    *    lineage flat (the Graph.pageRank discipline).
+    *    lineage flat (as Graph's rank loop materializes each round).
     *
     * Every round is two corpus-key equi-joins + one k²-bounded
     * self-join — no broadcast of anything corpus-sized, no windows, no

@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** The one sanctioned bridge from a custom Catalyst [[Expression]] to the
@@ -39,8 +40,8 @@ object GraftSql {
   }
 
   /** [[persistedView]] that additionally attaches MEASURED statistics
-    * to the returned leaf: row count and in-memory byte size are
-    * accumulated during the materialization pass and handed to the
+    * to the returned leaf: row count and in-memory byte size are folded
+    * over the rows by the materialization job itself and handed to the
     * `LogicalRDD` as origin stats, so STATIC planning sees the relation's
     * true size instead of `defaultSizeInBytes` (= "huge"). This is the
     * honest substitute for a forced broadcast hint (guide §3.1): a
@@ -50,36 +51,47 @@ object GraftSql {
     * corpus-proportional size measures big and plans as a sort-merge
     * join; the decision is data-driven at every scale, with no cliff
     * and no driver collect beyond what the broadcast itself would do.
-    * Accumulator double-counting under task retries can only OVERSTATE
-    * the size (never understate toward a wrong broadcast). */
-  def sizedView(df: DataFrame): DataFrame = {
+    * The stats are job RESULTS (one per partition), not accumulators, so
+    * they are exact under task retries. */
+  def sizedView(df: DataFrame): DataFrame = sizedView(df, _ => 0L)._1
+
+  /** [[sizedView]] whose one materialization job also returns
+    * `Σ fold(row)` over the materialized rows — a driver scalar an
+    * iterative caller needs from the relation (e.g. a round's dangling
+    * mass) without a second job over it. `fold` sees each row in the
+    * frame's column order. */
+  def sizedView(df: DataFrame, fold: InternalRow => Long): (DataFrame, Long) = {
     val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
     val spark = ds.sparkSession
-    val bytesAcc = spark.sparkContext.longAccumulator("graft.sizedView.bytes")
-    val rowsAcc = spark.sparkContext.longAccumulator("graft.sizedView.rows")
-    val rdd = ds.queryExecution.toRdd.map { r =>
-      val c = r.copy()
-      c match {
-        case u: org.apache.spark.sql.catalyst.expressions.UnsafeRow =>
-          bytesAcc.add(u.getSizeInBytes.toLong)
-        case _ => bytesAcc.add(64L) // non-unsafe rows: coarse floor
-      }
-      rowsAcc.add(1L)
-      c
-    }
+    val rdd = ds.queryExecution.toRdd.map(_.copy())
     rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    rdd.count()
+    // (rows, bytes, Σ fold) per partition; reading the persisted RDD
+    // fills its cache in the same job
+    val parts = rdd.mapPartitions { it =>
+      var rows, bytes, folded = 0L
+      it.foreach { r =>
+        rows += 1
+        bytes += (r match {
+          case u: org.apache.spark.sql.catalyst.expressions.UnsafeRow =>
+            u.getSizeInBytes.toLong
+          case _ => 64L // non-unsafe rows: coarse floor
+        })
+        folded += fold(r)
+      }
+      Iterator((rows, bytes, folded))
+    }.collect()
     val attrs = org.apache.spark.sql.catalyst.types.DataTypeUtils
       .toAttributes(ds.schema)
     val stats = org.apache.spark.sql.catalyst.plans.logical.Statistics(
-      sizeInBytes = BigInt(math.max(1L, bytesAcc.value)),
-      rowCount = Some(BigInt(math.max(0L, rowsAcc.value))))
-    ofRows(spark, org.apache.spark.sql.execution.LogicalRDD(
+      sizeInBytes = BigInt(math.max(1L, parts.map(_._2).sum)),
+      rowCount = Some(BigInt(parts.map(_._1).sum)))
+    val view = ofRows(spark, org.apache.spark.sql.execution.LogicalRDD(
       attrs, rdd,
       org.apache.spark.sql.catalyst.plans.physical
         .UnknownPartitioning(rdd.getNumPartitions))(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       Some(stats), None))
+    (view, parts.map(_._3).sum)
   }
 
   /** Release the storage blocks behind a [[persistedView]] (or

@@ -20,6 +20,21 @@ class GraphSpec extends SparkSpec {
     assert(got == Map("a" -> 130L, "b" -> 640L, "c" -> 130L))
   }
 
+  test("an edge with a NULL endpoint is not an edge") {
+    // a→NULL drops, leaving the hand-computed graph above (a NULL node
+    // must not count as dangling, nor a's out-degree as 2)
+    val edges = Seq(("a", Some("b")), ("c", Some("b")), ("a", None))
+      .toDF("s", "d")
+    val got = Graph.pageRank(edges, "s", "d", iters = 1, scale = 900L)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(got == Map("a" -> 130L, "b" -> 640L, "c" -> 130L))
+    // seeds {a, c}: init=450, base=67; b collects 450+450, dangles 0
+    val trust = Graph.trustRank(edges, "s", "d", Seq("a", "c").toDF("n"), "n",
+        iters = 1, scale = 900L)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(trust == Map("a" -> 67L, "b" -> 765L, "c" -> 67L))
+  }
+
   test("ranks are bit-identical under repartitioning and mass is conserved") {
     val li = graft.Tables.read(spark, sf("sf0.001"), "lineitem")
     val fwd = li.select(concat(lit("p"), col("l_partkey")).as("s"),
