@@ -23,11 +23,14 @@ object Bench {
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR",
       "/root/testdata/sf0.01")
     if (new java.io.File(warmDir).isDirectory)
-      SparkEntry.queries.values.foreach { fn =>
+      SparkEntry.queries.foreach { case (name, fn) =>
         // same materialization as the timed loop so the warmed codegen is
         // the codegen the timed run executes
         try fn(spark, warmDir).queryExecution.toRdd.count()
-        catch { case _: Throwable => () }
+        catch {
+          case e: Throwable => System.err.println(s"[graft] warm-up " +
+            s"$name failed: ${e.getClass.getName}: ${e.getMessage}")
+        }
       }
     def jstr(s: String): String = "\"" + s.flatMap {
       case '"' => "\\\""; case '\\' => "\\\\"

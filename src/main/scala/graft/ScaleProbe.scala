@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale-up probe (VERDICT r3 #6): synthesize a seeded ~10× corpus from
@@ -413,45 +413,50 @@ object ScaleProbe {
     Seq("mm_video_pairs_build", "mm_mp4_pairs_build", "web_edges_build",
       "ivf_index_build", "imi_index_build", "ivfpq_index_build")
 
+  /** Evict every cold-build artifact kind, then time one build of `name`
+    * (including its eager materialization) plus a count of the result. */
   def timeBuild(
       spark: SparkSession, name: String, dir: String): (Double, Long) = {
-    graft.queries.LlmQueries.evictPairGraphs(spark)
-    graft.queries.LlmQueries.evictWebEdges(spark)
-    graft.queries.LlmQueries.evictAnnIndexes(spark)
+    Artifacts.evict(spark, graft.queries.LlmQueries.coldBuildKinds)
     val t0 = System.nanoTime()
-    val n = name match {
+    val n = buildArtifact(spark, name, dir).count()
+    ((System.nanoTime() - t0) / 1e9, n)
+  }
+
+  /** The stored artifact a [[buildFamily]] row builds. */
+  def buildArtifact(
+      spark: SparkSession, name: String, dir: String): DataFrame =
+    name match {
       case "mm_video_pairs_build" =>
-        graft.queries.LlmQueries.videoPairs(spark, dir).count()
+        graft.queries.LlmQueries.videoPairs(spark, dir)
       case "mm_mp4_pairs_build" =>
-        graft.queries.LlmQueries.mp4Pairs(spark, dir).count()
+        graft.queries.LlmQueries.mp4Pairs(spark, dir)
       case "web_edges_build" =>
         // the shared HTML link-extraction scan (round 14): the cost the
         // cache-amortized web_link_graph / web_host_rank rows no longer
         // carry per query
-        graft.queries.LlmQueries.webEdges(spark, dir).count()
+        graft.queries.LlmQueries.webEdges(spark, dir)
       case "ivf_index_build" =>
         // the full single-level inverted-file lifecycle cold: k-means
         // train (O(sample·nList·d·iters)) + corpus assignment
         // (O(N·nList·d), the N^1.5 term under the √N cell default) +
         // the cell-clustered persist — the pass every knn_ivf/rag row
         // amortizes per corpus snapshot
-        graft.queries.LlmQueries.ivfIndex(spark, dir).count()
+        graft.queries.LlmQueries.ivfIndex(spark, dir)
       case "ivfpq_index_build" =>
         // the composed IVF-PQ artifact cold: coarse train+assign plus
         // the PQ codebook training and the O(N·d·ksub) encode pass —
         // the 8-bytes-per-vector index the rag_context_pack_pq row
         // amortizes
-        graft.queries.LlmQueries.ivfPqIndex(spark, dir).count()
+        graft.queries.LlmQueries.ivfPqIndex(spark, dir)
       case "imi_index_build" =>
         // the multi-index lifecycle cold: two kHalf-codebook trainings
         // + the O(N·kHalf·d) product-cell assignment — the build-side
         // half of the sub-√N claim (kHalf = N^(1/3) ≪ nList = √N)
-        graft.queries.LlmQueries.imiIndex(spark, dir).count()
+        graft.queries.LlmQueries.imiIndex(spark, dir)
       case other =>
         throw new IllegalArgumentException(s"unknown build probe: $other")
     }
-    ((System.nanoTime() - t0) / 1e9, n)
-  }
 
   /** Median of three cold builds ([[timeBuild]] evicts per run, so every
     * rep pays the full build — the median absorbs JIT/GC spikes only). */

@@ -36,25 +36,13 @@ object Tables {
   def read(spark: SparkSession, dir: String, name: String): DataFrame =
     readParquet(spark, s"$dir/$name.parquet")
 
-  /** Memoized read METADATA — (fingerprint, raw schema, NANOS columns) per
-    * (session, path). Resolving a parquet source costs a footer open (the
-    * NANOS probe) plus Spark's schema inference — ~0.1 s per call, measured
-    * as HALF the wall-clock of the scan-shaped bench queries (s1/s2), and
-    * pure metadata overhead: the answer for an unchanged path is
-    * deterministic. At 100 TB the same rule holds — resolve a source's
-    * schema once per snapshot, not once per query. Only metadata is cached,
-    * NOT the DataFrame: each call builds a fresh plan with fresh expression
-    * IDs, so self-joins of two `read` results stay unambiguous (caching the
-    * DataFrame itself made events⋈events trip DetectAmbiguousSelfJoin). A
-    * fingerprint change (file rewritten) re-resolves; a stale entry is
-    * replaced in place, so the map holds one entry per (session, path). */
-  private val metaCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String),
-    (String, org.apache.spark.sql.types.StructType, Seq[String])]()
-
-  /** Resolve (and memoize) the raw schema + NANOS column list for `path`.
-    * Shared by the batch and streaming readers so both see identical
-    * column types. */
+  /** Resolve the raw schema + NANOS column list for `path`, once per
+    * table snapshot ([[Artifacts]] kind `schema`). Resolving a parquet
+    * source costs a footer open (the NANOS probe) plus Spark's schema
+    * inference — ~0.1 s per call, measured as HALF the wall-clock of the
+    * scan-shaped bench queries (s1/s2), and pure metadata overhead. Only
+    * metadata is stored, never the DataFrame. Shared by the batch and
+    * streaming readers so both see identical column types. */
   private def resolveMeta(spark: SparkSession, path: String)
       : (org.apache.spark.sql.types.StructType, Seq[String]) = {
     // Pin tz-naive parquet timestamps (isAdjustedToUTC=false) to LTZ
@@ -67,19 +55,12 @@ object Tables {
     // would block parquet predicate pushdown on the timestamp column.
     // Sessions here run in UTC, so LTZ and NTZ denote the same instants.
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    if (metaCache.size > 256) // drop entries owned by stopped sessions
-      metaCache.keySet.asScala.filter(_._1.sparkContext.isStopped)
-        .foreach(metaCache.remove)
-    val fp = pathFingerprint(spark, path)
-    val (_, rawSchema, nanosCols) = metaCache.compute((spark, path), (_, cur) =>
-      if (cur != null && cur._1 == fp) cur
-      else {
-        val nanos = nanosTimestampColumns(spark, path)
-        if (nanos.nonEmpty)
-          spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        (fp, spark.read.parquet(path).schema, nanos)
-      })
-    (rawSchema, nanosCols)
+    Artifacts(spark, "schema", path) {
+      val nanos = nanosTimestampColumns(spark, path)
+      if (nanos.nonEmpty)
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      (spark.read.parquet(path).schema, nanos)
+    }
   }
 
   /** Apply the NANOS→µs repair columns to a (batch or streaming) scan. */
@@ -136,38 +117,13 @@ object Tables {
     repairNanos(reader.parquet(loadPath), nanosCols)
   }
 
-  /** Explicitly drop memoized metadata for `path` (every session) — the
-    * escape hatch for the one blind spot of mtime-based fingerprinting
-    * (ADVICE r6): an in-process rewrite that lands the SAME file lengths
-    * within the filesystem's mtime granularity (1 s on some FSes, ms on
-    * ext4) would otherwise serve the stale cached schema. Writers that
-    * rewrite a path they just read in the same process should call this
-    * (or write to a fresh snapshot directory, the 100 TB-correct
-    * layout — immutable snapshots never need invalidation). */
-  def invalidateCache(path: String): Unit =
-    metaCache.keySet.asScala.filter(_._2 == path).foreach(metaCache.remove)
-
-  /** Cheap content fingerprint: recursive listing of (path, length, mtime).
-    * One FS listing instead of a footer open + schema inference; any
-    * rewrite (even same-size) bumps mtime and invalidates — subject to
-    * the documented mtime-granularity caveat (see [[invalidateCache]]);
-    * file COUNT and every per-file length are part of the string, so
-    * adding/removing/resizing any part file always invalidates
-    * regardless of timestamps. */
-  private def pathFingerprint(spark: SparkSession, path: String): String = {
-    val hconf = spark.sessionState.newHadoopConf()
-    val p = new Path(path)
-    val fs = p.getFileSystem(hconf)
-    if (!fs.exists(p)) return "absent"
-    def walk(q: Path, depth: Int): Seq[String] = {
-      val st = fs.getFileStatus(q)
-      if (!st.isDirectory) Seq(s"$q:${st.getLen}:${st.getModificationTime}")
-      else if (depth > 10) Seq(s"$q:dir")
-      else fs.listStatus(q).sortBy(_.getPath.getName)
-        .flatMap(e => walk(e.getPath, depth + 1)).toSeq
-    }
-    walk(p, 0).mkString(",")
-  }
+  /** Explicitly drop everything derived from `path` (every session and
+    * artifact kind) — the escape hatch for the one blind spot of
+    * mtime-based fingerprinting (see [[Artifacts]]): an in-process
+    * rewrite that lands the SAME file lengths within the filesystem's
+    * mtime granularity would otherwise serve stale schemas and
+    * artifacts. */
+  def invalidateCache(path: String): Unit = Artifacts.invalidate(path)
 
   /** Top-level column names declared TIMESTAMP(NANOS) in the parquet footer
     * of `path` (a single file or a directory of part files). */

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Artifacts, Tables}
 import graft.llm.{Bpe, Curation, Dedup, Multimodal, Sampling, Similarity, TextAnalysis, TextOps, Web}
 
 /** Driver-contract queries for the LLM-data-pipeline operators (dedup,
@@ -33,144 +33,76 @@ object LlmQueries {
   private def emb(s: SparkSession, dir: String): DataFrame =
     Tables.read(s, dir, "embeddings")
 
-  /** Train-once store for the IVF coarse quantizer. The key is a CONTENT
-    * fingerprint of the embeddings data (every part file's path, length
-    * and mtime), not just the directory name: rewriting a directory's
-    * parquet in-process must retrain, never serve stale centroids
-    * (VERDICT r4 nit #2; covered by IvfCacheSpec). */
-  private val ivfCentroids = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int), IndexedSeq[Seq[Double]]]()
+  // Every accessor below is one [[graft.Artifacts]] call around its build:
+  // the store owns keying, fingerprinting, eviction and release.
+  private def docsPath(dir: String) = s"$dir/documents.parquet"
+  private def embPath(dir: String) = s"$dir/embeddings.parquet"
 
-  /** PQ codebooks, same lifecycle/keying as [[ivfCentroids]]. */
-  private val pqBookCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int), IndexedSeq[IndexedSeq[Seq[Double]]]]()
+  /** The artifact kinds `ScaleProbe.timeBuild` evicts before a cold-build
+    * row: the pair graphs, the edge relation, the ANN indexes and the
+    * models they are trained from. */
+  private[graft] val coldBuildKinds: Set[String] = Set(
+    "videoPairs", "mp4Pairs", "webEdges",
+    "ivfIndex", "imiIndex", "ivfPqIndex",
+    "trainedCentroids", "trainedImiQuantizers", "trainedPqBooks")
 
-  private def tableFingerprint(dir: String, table: String): String = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty)
-          .sortBy(_.getName).toSeq.flatMap(walk)
-      else Seq(f)
-    walk(new java.io.File(dir, s"$table.parquet"))
-      .map(f => s"${f.getPath}:${f.length}:${f.lastModified}")
-      .mkString(",")
-  }
-
-  private def embFingerprint(dir: String): String =
-    tableFingerprint(dir, "embeddings")
-
-  /** Corpus cardinalities, keyed by content fingerprint — INDEX METADATA,
-    * not per-query work. `autoPlanes`/`defaultNList` scale index geometry
-    * with the corpus, but the scaling input is a property of the corpus
-    * snapshot, so the count job belongs to the same build-once lifecycle
-    * as [[ivfIndex]]: before this cache every kNN query-build re-ran a
-    * corpus count action (VERDICT r11 wrong #3 — scalar-only, but 4
-    * queries × a full count at 100×). A warm session builds every kNN
-    * query with ZERO jobs (WarmBuildSpec, job-listener-asserted).
-    * Deterministic ⇒ caching can't change results; a rewritten parquet
-    * changes the fingerprint and re-counts. */
-  private val countCache = new java.util.concurrent.ConcurrentHashMap[
-    String, java.lang.Long]()
-
+  /** Corpus cardinalities — INDEX METADATA, not per-query work.
+    * `autoPlanes`/`defaultNList` scale index geometry with the corpus,
+    * but the scaling input is a property of the corpus snapshot, so a
+    * warm session builds every kNN query with ZERO jobs (WarmBuildSpec,
+    * job-listener-asserted). */
   private[graft] def embCount(s: SparkSession, dir: String): Long =
-    countCache.computeIfAbsent(embFingerprint(dir),
-      _ => emb(s, dir).count())
+    Artifacts(s, "count", embPath(dir))(emb(s, dir).count())
 
   private[graft] def docCount(s: SparkSession, dir: String): Long =
-    countCache.computeIfAbsent(tableFingerprint(dir, "documents"),
-      _ => docs(s, dir).count())
+    Artifacts(s, "count", docsPath(dir))(docs(s, dir).count())
 
-  /** The learned BPE merge table for `dir`'s documents — trained once
-    * per (content fingerprint, nMerges) and shared by `text_bpe_train`
-    * and `text_bpe_apply` (the trainedCentroids lifecycle: the model is
-    * a deterministic function of the corpus snapshot, 4 small values per
-    * merge, so caching can only save the training aggregations, never
-    * change results; a rewritten parquet retrains). */
-  private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int), Seq[Bpe.Merge]]()
-
+  /** The learned BPE merge table for `dir`'s documents, shared by
+    * `text_bpe_train` and `text_bpe_apply`. */
   private[graft] def bpeMerges(
       s: SparkSession, dir: String, nMerges: Int = 8): Seq[Bpe.Merge] =
-    bpeCache.computeIfAbsent((tableFingerprint(dir, "documents"), nMerges),
-      _ => Bpe.train(docs(s, dir), "text", nMerges))
+    Artifacts(s, "bpeMerges", docsPath(dir), nMerges)(
+      Bpe.train(docs(s, dir), "text", nMerges))
 
   /** The PRODUCTION-SHAPE merge table: one distributed word-count pass,
     * then the in-memory merge loop over the vocabulary-sized frequency
     * table ([[Bpe.trainOnCounts]] — how real tokenizers train; spec-
     * pinned equal to the distributed [[Bpe.train]], and the
     * text_bpe_encode oracle re-derives the same merges through the
-    * unrolled SQL trainer, so equality is hash-gated too). Cached per
-    * (fingerprint, nMerges) like every other trained model. */
+    * unrolled SQL trainer, so equality is hash-gated too). */
   private[graft] def bpeDeepMerges(
       s: SparkSession, dir: String, nMerges: Int): Seq[Bpe.Merge] =
-    bpeCache.computeIfAbsent(
-      (tableFingerprint(dir, "documents") + ":counts", nMerges),
-      _ => Bpe.trainOnCounts(Bpe.wordCounts(docs(s, dir), "text"), nMerges))
-
-  private val blocklistCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
+    Artifacts(s, "bpeDeepMerges", docsPath(dir), nMerges)(
+      Bpe.trainOnCounts(Bpe.wordCounts(docs(s, dir), "text"), nMerges))
 
   /** The 16-term derived blocklist for `dir`'s documents (top words of
-    * length ≥ 4 — see [[TextAnalysis.topTerms]]); cached per corpus
-    * fingerprint like every derived model. */
+    * length ≥ 4 — see [[TextAnalysis.topTerms]]). */
   private[graft] def blocklistTerms(
       s: SparkSession, dir: String): Seq[String] =
-    blocklistCache.computeIfAbsent(tableFingerprint(dir, "documents"),
-      _ => TextAnalysis.topTerms(docs(s, dir), "text", k = 16, minLen = 4))
+    Artifacts(s, "blocklistTerms", docsPath(dir))(
+      TextAnalysis.topTerms(docs(s, dir), "text", k = 16, minLen = 4))
 
-  /** The materialized Jaccard near-dup PAIR set for `dir`'s documents —
-    * persisted once per (session, content fingerprint, n, tau) and
-    * shared by pair emission, capped emission, clustering and dedup
-    * (the same build-once-amortize lifecycle as [[ivfIndex]]: the pair
-    * join is the expensive half of all four, its inputs are
-    * deterministic, so caching can only save work, never change
-    * results; rewriting the documents parquet rebuilds). */
-  private val jaccardPairsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Double), DataFrame]()
-
+  /** The materialized Jaccard near-dup PAIR set for `dir`'s documents,
+    * shared by pair emission, capped emission, clustering and dedup: the
+    * pair join is the expensive half of all four. */
   private[graft] def jaccardPairs(
       s: SparkSession, dir: String,
-      n: Int = 3, tau: Double = 0.5): DataFrame = {
-    val fp = tableFingerprint(dir, "documents")
-    // Evict EVERY superseded entry for this session BEFORE building: a
-    // rewritten documents parquet changes the fingerprint, and without
-    // eviction the old entry's MEMORY_AND_DISK blocks stay pinned for the
-    // session's lifetime (ADVICE r5). No parameter-equality conditions —
-    // entries cached under OTHER (n, tau) values are just as stale once
-    // the fingerprint moves (ADVICE r6).
-    import scala.jdk.CollectionConverters._
-    jaccardPairsCache.keySet.asScala
-      .filter(k => (k._1 eq s) && k._2 != fp)
-      .foreach(k =>
-        Option(jaccardPairsCache.remove(k)).foreach(_.unpersist(false)))
-    jaccardPairsCache.computeIfAbsent((s, fp, n, tau), _ => {
+      n: Int = 3, tau: Double = 0.5): DataFrame =
+    Artifacts(s, "jaccardPairs", docsPath(dir), (n, tau),
+        Artifacts.unpersist) {
       val p = Dedup.jaccardShinglePairs(docs(s, dir), "doc_id", "text", n, tau)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       p.count() // materialize eagerly so consumers never race the build
       p
-    })
-  }
+    }
 
   /** The VIDEO shared-frame near-dup pair graph for `dir`'s documents —
     * demux (no pixel decode) → md5(frame_bytes) inverted index →
-    * count-distinct-shared-frames equi-join, persisted once per
-    * (session, content fingerprint) and shared by `mm_video_near_dup`
-    * and `mm_video_dedup` (VERDICT r10: the dedup consumer re-demuxed
-    * and re-joined the graph its sibling had just built — at 100× the
-    * pair build is the dominant cost of both queries; same
-    * build-once-amortize lifecycle and eviction discipline as
-    * [[jaccardPairs]]). */
-  private val videoPairsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
-  private[graft] def videoPairs(s: SparkSession, dir: String): DataFrame = {
-    val fp = tableFingerprint(dir, "documents")
-    import scala.jdk.CollectionConverters._
-    videoPairsCache.keySet.asScala
-      .filter(k => (k._1 eq s) && k._2 != fp)
-      .foreach(k =>
-        Option(videoPairsCache.remove(k)).foreach(_.unpersist(false)))
-    videoPairsCache.computeIfAbsent((s, fp), _ => {
+    * count-distinct-shared-frames equi-join, shared by
+    * `mm_video_near_dup` and `mm_video_dedup` (at 100× the pair build is
+    * the dominant cost of both queries). */
+  private[graft] def videoPairs(s: SparkSession, dir: String): DataFrame =
+    Artifacts(s, "videoPairs", docsPath(dir), (), Artifacts.unpersist) {
       val fr = Multimodal.demuxFrames(
         Multimodal.synthesizeNearDupVideos(docs(s, dir), "doc_id"))
         .toDF()
@@ -189,23 +121,12 @@ object LlmQueries {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       p.count() // materialize eagerly so consumers never race the build
       p
-    })
-  }
+    }
 
   /** The MP4 shared-sample near-dup pair graph — [[videoPairs]] for the
-    * ISO-BMFF sample-table demux ([[Multimodal.demuxMp4Samples]]); same
-    * build-once-amortize lifecycle and eviction discipline. */
-  private val mp4PairsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
-  private[graft] def mp4Pairs(s: SparkSession, dir: String): DataFrame = {
-    val fp = tableFingerprint(dir, "documents")
-    import scala.jdk.CollectionConverters._
-    mp4PairsCache.keySet.asScala
-      .filter(k => (k._1 eq s) && k._2 != fp)
-      .foreach(k =>
-        Option(mp4PairsCache.remove(k)).foreach(_.unpersist(false)))
-    mp4PairsCache.computeIfAbsent((s, fp), _ => {
+    * ISO-BMFF sample-table demux ([[Multimodal.demuxMp4Samples]]). */
+  private[graft] def mp4Pairs(s: SparkSession, dir: String): DataFrame =
+    Artifacts(s, "mp4Pairs", docsPath(dir), (), Artifacts.unpersist) {
       val sm = Multimodal.demuxMp4Samples(
         Multimodal.synthesizeNearDupMp4(docs(s, dir), "doc_id"))
         .toDF()
@@ -222,77 +143,18 @@ object LlmQueries {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       p.count() // materialize eagerly so consumers never race the build
       p
-    })
-  }
-
-  /** Evict this session's cached video/MP4 pair graphs so the next
-    * [[videoPairs]]/[[mp4Pairs]] call pays the full demux + hash + join
-    * build — bench cold-build timing support (ADVICE r11 medium: the
-    * `*_near_dup` per-query medians read the session cache priced in
-    * their dedup siblings, so the build cost needs its own artifact
-    * row). Blocking unpersist: the storage blocks must actually be gone
-    * before the cold timer starts. */
-  private[graft] def evictPairGraphs(s: SparkSession): Unit = {
-    import scala.jdk.CollectionConverters._
-    Seq(videoPairsCache, mp4PairsCache).foreach { c =>
-      c.keySet.asScala.filter(_._1 eq s).foreach(k =>
-        Option(c.remove(k)).foreach(_.unpersist(true)))
     }
-  }
-
-  /** Evict the trained coarse quantizers AND the built/assigned ANN
-    * indexes — the cold-build timing support for the
-    * `ivf_index_build` / `imi_index_build` probe rows: the kNN/RAG
-    * query rows price the (correct) amortized serving path against the
-    * session-cached index, so the O(N·nList·d) train+assign pass a
-    * deployment pays once per corpus snapshot needs its OWN scale row,
-    * exactly like the pair-graph builds. Model caches are keyed by
-    * content fingerprint (no session), so eviction is global. */
-  private[graft] def evictAnnIndexes(s: SparkSession): Unit = {
-    import scala.jdk.CollectionConverters._
-    Seq(ivfIndexes, imiIndexes, ivfPqIndexes).foreach { c =>
-      c.keySet.asScala.filter(_._1 eq s).foreach(k =>
-        Option(c.remove(k)).foreach(_.unpersist(true)))
-    }
-    ivfCentroids.clear()
-    imiCentroidCache.clear()
-    pqBookCache.clear()
-  }
-
-  /** Evict the cached [[webEdges]] relation — same cold-build timing
-    * support: once the web-graph family shares one extraction, its
-    * per-query medians are cached-scan timings and the HTML-extraction
-    * cost needs its own `web_edges_build` artifact row. */
-  private[graft] def evictWebEdges(s: SparkSession): Unit = {
-    import scala.jdk.CollectionConverters._
-    webEdgesCache.keySet.asScala.filter(_._1 eq s).foreach(k =>
-      Option(webEdgesCache.remove(k)).foreach(_.unpersist(true)))
-  }
 
   /** The canonicalized HOST LINK-EDGE relation for `dir`'s documents —
     * synthetic page → extractLinks → canonicalizeUrl → host resolution,
-    * one (src_host, dst_host) row per resolvable outlink — persisted
-    * once per (session, content fingerprint) and shared by
+    * one (src_host, dst_host) row per resolvable outlink — shared by
     * `web_link_graph` (edge-weight aggregate) and `web_host_rank`
-    * (PageRank) (VERDICT r13 #6: each re-ran the full corpus
-    * HTML-extraction scan — at 100 TB the extraction IS the dominant
-    * cost and a crawl pipeline extracts once, then derives every graph
-    * product from the edge relation). The persisted relation is two
-    * short host strings per link — orders of magnitude smaller than
-    * the page corpus. Deterministic in the corpus snapshot ⇒ caching
-    * can only save work, never change results; same eviction
-    * discipline as [[jaccardPairs]]. */
-  private val webEdgesCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
-  private[graft] def webEdges(s: SparkSession, dir: String): DataFrame = {
-    val fp = tableFingerprint(dir, "documents")
-    import scala.jdk.CollectionConverters._
-    webEdgesCache.keySet.asScala
-      .filter(k => (k._1 eq s) && k._2 != fp)
-      .foreach(k =>
-        Option(webEdgesCache.remove(k)).foreach(_.unpersist(false)))
-    webEdgesCache.computeIfAbsent((s, fp), _ => {
+    * (PageRank): at 100 TB the HTML extraction IS the dominant cost, and
+    * a crawl pipeline extracts once, then derives every graph product
+    * from the edge relation (two short host strings per link — orders of
+    * magnitude smaller than the page corpus). */
+  private[graft] def webEdges(s: SparkSession, dir: String): DataFrame =
+    Artifacts(s, "webEdges", docsPath(dir), (), Artifacts.unpersist) {
       val html = Web.syntheticHtml(col("doc_id"),
         Web.syntheticHost(col("doc_id")), col("text"))
       val p = docs(s, dir)
@@ -304,146 +166,91 @@ object LlmQueries {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       p.count() // materialize eagerly so consumers never race the build
       p
-    })
-  }
+    }
 
   /** Contamination scores of `dir`'s documents vs the bench-contract
-    * benchmark stand-in (the `doc_id % 97` slice), persisted once per
-    * (session, content fingerprint, n) and shared by the score query AND
-    * the decontaminating materialization — without this the anti-join
-    * query re-ran the whole scoring join its sibling had just produced
-    * (5.3 s vs 0.8 s at sf0.1, VERDICT r5 #3). Same eviction discipline
-    * as [[jaccardPairs]]. */
-  private val contamScoresCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), DataFrame]()
-
+    * benchmark stand-in (the `doc_id % 97` slice), shared by the score
+    * query AND the decontaminating materialization — without it the
+    * anti-join query re-ran the whole scoring join its sibling had just
+    * produced (5.3 s vs 0.8 s at sf0.1). */
   private[graft] def contamScores(
-      s: SparkSession, dir: String, n: Int = 3): DataFrame = {
-    val fp = tableFingerprint(dir, "documents")
-    // same all-parameter eviction discipline as jaccardPairs (ADVICE r6)
-    import scala.jdk.CollectionConverters._
-    contamScoresCache.keySet.asScala
-      .filter(k => (k._1 eq s) && k._2 != fp)
-      .foreach(k =>
-        Option(contamScoresCache.remove(k)).foreach(_.unpersist(false)))
-    contamScoresCache.computeIfAbsent((s, fp, n), _ => {
+      s: SparkSession, dir: String, n: Int = 3): DataFrame =
+    Artifacts(s, "contamScores", docsPath(dir), n, Artifacts.unpersist) {
       val d = docs(s, dir)
       val p = Dedup.contaminationScores(
         d, d.filter(col("doc_id") % 97 === 0), "doc_id", "text", n)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       p.count() // materialize eagerly so consumers never race the build
       p
-    })
-  }
+    }
 
   /** The staged curation pipeline's drop-set for `dir`'s documents
     * (exact losers ∪ near-dup losers ∪ contaminated — see
-    * [[graft.llm.Curation.dropSet]]), built from the SAME cached pair
-    * index and contamination scores the standalone queries share, and
-    * persisted once per (session, content fingerprint, tau). The
-    * curation decisions are deterministic in the corpus snapshot, so
-    * caching can only save work, never change results. Same eviction
-    * discipline as [[jaccardPairs]] — but the drop-set is a
-    * [[org.apache.spark.sql.GraftSql.persistedView]] frame, so eviction
-    * releases it through `unpersistCheckpoint`, not `unpersist`. */
-  private val curationDropsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Double), DataFrame]()
-
+    * [[graft.llm.Curation.dropSet]]), built from the SAME stored pair
+    * index and contamination scores the standalone queries share. The
+    * drop-set is a [[org.apache.spark.sql.GraftSql.persistedView]] frame,
+    * so it is released through `unpersistCheckpoint`, not `unpersist`. */
   private[graft] def curationDrops(
-      s: SparkSession, dir: String, tau: Double = 0.8): DataFrame = {
-    val fp = tableFingerprint(dir, "documents")
-    import scala.jdk.CollectionConverters._
-    curationDropsCache.keySet.asScala
-      .filter(k => (k._1 eq s) && k._2 != fp)
-      .foreach(k => Option(curationDropsCache.remove(k))
-        .foreach(org.apache.spark.sql.GraftSql.unpersistCheckpoint))
-    curationDropsCache.computeIfAbsent((s, fp, tau), _ =>
+      s: SparkSession, dir: String, tau: Double = 0.8): DataFrame =
+    Artifacts(s, "curationDrops", docsPath(dir), tau,
+        Artifacts.unpersistCheckpoint)(
       Curation.dropSet(docs(s, dir), "doc_id", "text",
         jaccardPairs(s, dir), contamScores(s, dir), tau))
-  }
 
-  /** The trained coarse quantizer for `dir`'s embeddings table, with
-    * `nList` scaled to the corpus (`max(16, ⌈√N⌉)` — cell occupancy √N,
-    * so candidate work per probe grows as √N, not linearly). Training is
-    * deterministic, so caching can only save work, never change results.
-    * Exposed to the IVF queries AND their oracle builders so both sides
-    * share one definition. */
+  /** The trained PQ codebooks for `dir`'s embeddings table. Exposed to
+    * the IVF queries AND their oracle builders so both sides share one
+    * definition. */
   private[graft] def trainedPqBooks(
       s: SparkSession, dir: String,
       iters: Int = 3): IndexedSeq[IndexedSeq[Seq[Double]]] =
-    pqBookCache.computeIfAbsent((embFingerprint(dir), iters), _ =>
+    Artifacts(s, "trainedPqBooks", embPath(dir), iters)(
       Similarity.trainPqCodebooks(emb(s, dir), "vec_id", "embedding",
         m = 8, ksub = 16, iters = iters, dim = 64))
 
-  /** RP-tree split tables, same lifecycle/keying as [[ivfCentroids]]:
-    * the trained model is 2^depth − 1 longs per corpus snapshot. */
-  private val rpSplitCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int), IndexedSeq[Map[Long, Long]]]()
-
+  /** RP-tree split tables: 2^depth − 1 longs per corpus snapshot. */
   private[graft] def trainedRpSplits(
       s: SparkSession, dir: String,
       depth: Int = 3): IndexedSeq[Map[Long, Long]] =
-    rpSplitCache.computeIfAbsent((embFingerprint(dir), depth), _ =>
+    Artifacts(s, "trainedRpSplits", embPath(dir), depth)(
       Similarity.trainRpTree(emb(s, dir), "vec_id", "embedding",
         depth = depth, dim = 64))
-
-  private val rpForestCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int), IndexedSeq[IndexedSeq[Map[Long, (Long, Long, Long)]]]]()
 
   private[graft] def trainedRpForest(
       s: SparkSession, dir: String, nTrees: Int,
       depth: Int): IndexedSeq[IndexedSeq[Map[Long, (Long, Long, Long)]]] =
-    rpForestCache.computeIfAbsent((embFingerprint(dir), nTrees, depth),
-      _ => Similarity.trainRpForest(emb(s, dir), "vec_id", "embedding",
+    Artifacts(s, "trainedRpForest", embPath(dir), (nTrees, depth))(
+      Similarity.trainRpForest(emb(s, dir), "vec_id", "embedding",
         nTrees = nTrees, depth = depth, dim = 64))
 
+  /** The trained coarse quantizer for `dir`'s embeddings table, with
+    * `nList` scaled to the corpus (`max(16, ⌈√N⌉)` — cell occupancy √N,
+    * so candidate work per probe grows as √N, not linearly). */
   private[graft] def trainedCentroids(
       s: SparkSession, dir: String,
       iters: Int = 3): IndexedSeq[Seq[Double]] =
-    ivfCentroids.computeIfAbsent((embFingerprint(dir), iters), _ => {
+    Artifacts(s, "trainedCentroids", embPath(dir), iters) {
       val e = emb(s, dir)
       Similarity.trainIvfKMeans(e, "vec_id", "embedding",
         nList = Similarity.defaultNList(embCount(s, dir)), iters = iters)
-    })
+    }
 
-  private val imiCentroidCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int), (IndexedSeq[Seq[Double]], IndexedSeq[Seq[Double]])]()
-
-  /** The two trained IMI half-space codebooks for `dir`'s embeddings
-    * (the [[trainedCentroids]] lifecycle — deterministic model, cached
-    * per corpus fingerprint). */
+  /** The two trained IMI half-space codebooks for `dir`'s embeddings. */
   private[graft] def trainedImiQuantizers(
       s: SparkSession, dir: String, iters: Int = 3)
       : (IndexedSeq[Seq[Double]], IndexedSeq[Seq[Double]]) =
-    imiCentroidCache.computeIfAbsent((embFingerprint(dir), iters), _ =>
+    Artifacts(s, "trainedImiQuantizers", embPath(dir), iters)(
       Similarity.trainImiQuantizers(emb(s, dir), "vec_id", "embedding",
         kHalf = Similarity.defaultKHalf(embCount(s, dir)), iters = iters))
 
   /** The built INVERTED-FILE index for `dir`'s embeddings — the assigned
-    * corpus `(id, v, nrm, cell)`, persisted and shared by every IVF
-    * query. The assignment pass is O(N·nList·d): per-query re-assignment
-    * made knn_ivf grow ~N^1.5 under the √N cell default (6.6×/decade at
-    * the 100× probe), where a real IVF deployment pays it once per
-    * corpus snapshot and amortizes it — which is what this cache models.
-    * Keyed by (session, content fingerprint, iters): deterministic build
-    * ⇒ caching can't change results; rewriting the data retrains AND
-    * re-assigns; a new session never sees another session's frames. */
-  private val ivfIndexes = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), DataFrame]()
-
+    * corpus `(id, v, nrm, cell)`, shared by every IVF query. The
+    * assignment pass is O(N·nList·d): per-query re-assignment made
+    * knn_ivf grow ~N^1.5 under the √N cell default (6.6×/decade at the
+    * 100× probe), where a real IVF deployment pays it once per corpus
+    * snapshot and amortizes it — which is what the store models. */
   private[graft] def ivfIndex(
-      s: SparkSession, dir: String, iters: Int = 3): DataFrame = {
-    val fp = embFingerprint(dir)
-    // Same superseded-entry eviction as jaccardPairs: an in-process rewrite
-    // of the embeddings parquet must not leave the old index's storage
-    // blocks pinned behind the new fingerprint's entry — under ANY iters
-    // value (ADVICE r6: parameter-equality conditions kept other-param
-    // entries pinned).
-    import scala.jdk.CollectionConverters._
-    ivfIndexes.keySet.asScala
-      .filter(k => (k._1 eq s) && k._2 != fp)
-      .foreach(k => Option(ivfIndexes.remove(k)).foreach(_.unpersist(false)))
-    ivfIndexes.computeIfAbsent((s, fp, iters), _ => {
+      s: SparkSession, dir: String, iters: Int = 3): DataFrame =
+    Artifacts(s, "ivfIndex", embPath(dir), iters, Artifacts.unpersist) {
       // CELL-CLUSTERED layout: repartition on the cell id and sort rows
       // by it inside each partition before caching, so the in-memory
       // columnar batches carry tight cell min/max stats and the pruned
@@ -460,25 +267,16 @@ object LlmQueries {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       df.count() // materialize eagerly so consumers never race the build
       df
-    })
-  }
-
-  private val ivfPqIndexes = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), DataFrame]()
+    }
 
   /** The composed IVF-PQ index artifact `(nid, cell, codes, rnrm)` —
     * what a deployment materializes once per snapshot (the FAISS
     * IVF-PQ index file: 8 code bytes + a norm per vector, grouped by
-    * coarse cell); cached cell-clustered so the pruned candidate read
-    * scans codes, never the float corpus. [[ivfIndex]] lifecycle. */
+    * coarse cell); cell-clustered like [[ivfIndex]] so the pruned
+    * candidate read scans codes, never the float corpus. */
   private[graft] def ivfPqIndex(
-      s: SparkSession, dir: String, iters: Int = 3): DataFrame = {
-    val fp = embFingerprint(dir)
-    import scala.jdk.CollectionConverters._
-    ivfPqIndexes.keySet.asScala
-      .filter(k => (k._1 eq s) && k._2 != fp)
-      .foreach(k => Option(ivfPqIndexes.remove(k)).foreach(_.unpersist(false)))
-    ivfPqIndexes.computeIfAbsent((s, fp, iters), _ => {
+      s: SparkSession, dir: String, iters: Int = 3): DataFrame =
+    Artifacts(s, "ivfPqIndex", embPath(dir), iters, Artifacts.unpersist) {
       val df = Similarity.ivfPqIndexBody(
         emb(s, dir), "vec_id", "embedding",
         trainedCentroids(s, dir, iters), trainedPqBooks(s, dir))
@@ -486,11 +284,7 @@ object LlmQueries {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       df.count()
       df
-    })
-  }
-
-  private val queryBatches = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+    }
 
   /** The FIXED 200-query serving batch (vec_id %100 = 0 ∧ < 20000),
     * persisted: a serving path RECEIVES its query batch — deriving it
@@ -499,39 +293,24 @@ object LlmQueries {
     * (measured 3.3 s at 200k vectors for 200 surviving rows, paid once
     * per stage that re-derives the batch — the PQ chain derives it
     * three times), drowning the retrieval cost the fixed-|Q| rows
-    * exist to isolate. 200 rows of driver-independent cached state;
-    * results unchanged (same rows, same oracle). */
+    * exist to isolate. Results unchanged (same rows, same oracle). */
   private[graft] def fixedQueryBatch(
-      s: SparkSession, dir: String): DataFrame = {
-    val fp = embFingerprint(dir)
-    import scala.jdk.CollectionConverters._
-    queryBatches.keySet.asScala
-      .filter(k => (k._1 eq s) && k._2 != fp)
-      .foreach(k => Option(queryBatches.remove(k)).foreach(_.unpersist(false)))
-    queryBatches.computeIfAbsent((s, fp), _ => {
+      s: SparkSession, dir: String): DataFrame =
+    Artifacts(s, "fixedQueryBatch", embPath(dir), (), Artifacts.unpersist) {
       val df = emb(s, dir)
         .filter(col("vec_id") % 100 === 0 && col("vec_id") < 20000)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       df.count()
       df
-    })
-  }
-
-  private val imiIndexes = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), DataFrame]()
+    }
 
   /** The built INVERTED MULTI-INDEX body for `dir`'s embeddings — the
-    * [[ivfIndex]] lifecycle exactly (eviction, eager materialization,
-    * cell-clustered cached layout for the pruned readers), with the
-    * product cell `cellA·kHalf + cellB`. */
+    * [[ivfIndex]] build exactly (eager materialization, cell-clustered
+    * layout for the pruned readers), with the product cell
+    * `cellA·kHalf + cellB`. */
   private[graft] def imiIndex(
-      s: SparkSession, dir: String, iters: Int = 3): DataFrame = {
-    val fp = embFingerprint(dir)
-    import scala.jdk.CollectionConverters._
-    imiIndexes.keySet.asScala
-      .filter(k => (k._1 eq s) && k._2 != fp)
-      .foreach(k => Option(imiIndexes.remove(k)).foreach(_.unpersist(false)))
-    imiIndexes.computeIfAbsent((s, fp, iters), _ => {
+      s: SparkSession, dir: String, iters: Int = 3): DataFrame =
+    Artifacts(s, "imiIndex", embPath(dir), iters, Artifacts.unpersist) {
       val (ca, cb) = trainedImiQuantizers(s, dir, iters)
       val df = Similarity.assignImiCells(
         emb(s, dir), "vec_id", "embedding", ca, cb)
@@ -539,8 +318,7 @@ object LlmQueries {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       df.count()
       df
-    })
-  }
+    }
 
   // ── shared oracle fragments (mirror TextOps) ───────────────────────────
   // whitespace class spelled explicitly — see TextOps.WhitespaceClass

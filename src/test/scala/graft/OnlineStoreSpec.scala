@@ -2,7 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
@@ -26,23 +25,6 @@ class OnlineStoreSpec extends SparkSpec {
       StructField("k", IntegerType),
       StructField("v", DoubleType),
       StructField("ts", TimestampType))))
-
-  /** Count every Spark job launched while running `f`. (Call-site
-    * matching is useless here: Spark 4 submits collect stages through
-    * async thread pools, so callSite.short reads CompletableFuture, not
-    * "collect at …" — raw job counts are the stable signal.) */
-  private def jobsDuring(f: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    org.apache.spark.sql.GraftSql.awaitListenerBus(spark)
-    spark.sparkContext.addSparkListener(listener)
-    try { f; org.apache.spark.sql.GraftSql.awaitListenerBus(spark) }
-    finally spark.sparkContext.removeSparkListener(listener)
-    n.get()
-  }
 
   test("cache-off write performs no collect; reads fall back, stay correct") {
     val store = new OnlineStore(Seq("k"), "ts", None, servingCacheKeys = 0)

@@ -20,8 +20,7 @@ class IvfCacheSpec extends SparkSpec {
     df.coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
   }
 
-  test("rewriting a directory's embeddings retrains the quantizer") {
-    val dir = Files.createTempDirectory("ivfcache").toString
+  private def checkRetrain(dir: String): Unit = {
     writeEmb(dir, 0.0)
     val first = LlmQueries.trainedCentroids(spark, dir)
     // same data, same key → the cached object comes back (no retrain)
@@ -31,5 +30,15 @@ class IvfCacheSpec extends SparkSpec {
     val second = LlmQueries.trainedCentroids(spark, dir)
     assert(!(second eq first), "rewritten data must miss the cache")
     assert(second != first, "retrained centroids must reflect the new data")
+  }
+
+  test("rewriting a directory's embeddings retrains the quantizer") {
+    checkRetrain(Files.createTempDirectory("ivfcache").toString)
+  }
+
+  // a URI-form directory names the same files through the Hadoop
+  // filesystem, so its fingerprint must see the rewrite too
+  test("rewriting a file: URI directory's embeddings retrains the quantizer") {
+    checkRetrain("file:" + Files.createTempDirectory("ivfcache"))
   }
 }

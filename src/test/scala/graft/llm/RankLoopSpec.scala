@@ -1,8 +1,5 @@
 package graft.llm
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, GraftSql}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -29,20 +26,6 @@ class RankLoopSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def persisted: Set[Int] =
     spark.sparkContext.getPersistentRDDs.keySet.toSet
-
-  /** Spark jobs launched while `body` runs. */
-  private def jobsDuring(body: => Unit): Int = {
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    GraftSql.awaitListenerBus(spark)
-    spark.sparkContext.addSparkListener(listener)
-    try { body; GraftSql.awaitListenerBus(spark) }
-    finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get()
-  }
 
   test("sizedView's exact stats and fold come from its one job") {
     val df = spark.range(0L, 1000L, 1L, 3).toDF("v")
