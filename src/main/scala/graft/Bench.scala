@@ -328,10 +328,18 @@ object Bench {
     // ("parsed": null in BENCH_r03.json). A file can't be truncated by a
     // log window.
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_METRIC.json")
-    try {
-      val w = new java.io.PrintWriter(outFile, "UTF-8")
-      try w.println(line) finally w.close()
-    } catch { case _: Throwable => () }
+    // a failed artifact write is reported on stderr, never fatal: stdout
+    // must still end with the metric lines
+    def writeArtifact(file: String)(write: => Unit): Unit =
+      try write catch {
+        case e: Throwable => System.err.println(s"[graft] write $file " +
+          s"failed: ${e.getClass.getName}: ${e.getMessage}")
+      }
+    def writeLine(file: String, s: String): Unit = writeArtifact(file) {
+      val w = new java.io.PrintWriter(file, "UTF-8")
+      try w.println(s) finally w.close()
+    }
+    writeLine(outFile, line)
     // PER-QUERY round-over-round evidence (round 18): the driver's
     // stdout capture is a 2000-char tail and it parses the LAST JSON
     // line inside it — r01–r05 (full per-query line last) all captured
@@ -345,10 +353,7 @@ object Bench {
     // rounds produce. Additions only: the full line (with "queries"),
     // the BENCH_OUT file and the compact tail line are unchanged.
     val queriesFile = "BENCH_QUERIES.json"
-    try {
-      val w = new java.io.PrintWriter(queriesFile, "UTF-8")
-      try w.println(line) finally w.close()
-    } catch { case _: Throwable => () }
+    writeLine(queriesFile, line)
     println(line)
     // Standing 10× scale artifact (opt-in: SPARK_GRAFT_BENCH_10X=1):
     // regenerate the seeded 10× corpus, time the scale-sensitive family
@@ -404,12 +409,9 @@ object Bench {
       }.mkString("{", ",", "}")
       val j10 =
         s"""{"metric":"bench_10x","base_sf":${jstr(sfDir)},"n_queries":${rows.size},"queries":$qjson}"""
-      try {
-        val w = new java.io.PrintWriter("BENCH_10x.json", "UTF-8")
-        try w.println(j10) finally w.close()
-      } catch { case _: Throwable => () }
+      writeLine("BENCH_10x.json", j10)
       // refresh STATUS.md between the BENCH_10X markers
-      try {
+      writeArtifact("STATUS.md") {
         val p = java.nio.file.Paths.get("STATUS.md")
         val begin = "<!-- BENCH_10X_BEGIN -->"
         val end = "<!-- BENCH_10X_END -->"
@@ -431,7 +433,7 @@ object Bench {
             "\n" + table + "\n" + md.substring(e)
           java.nio.file.Files.write(p, patched.getBytes("UTF-8"))
         }
-      } catch { case _: Throwable => () }
+      }
     }
     spark.stop()
     // Compact totals-only object as the very LAST stdout line (after

@@ -389,14 +389,13 @@ object Dedup {
     * O(diameter) of plain propagation: a 300-doc chain of template
     * near-dups converges in ~9 rounds instead of 300 (spec-proved).
     * Each round is two hash-partitioned joins + a map-side-combined
-    * `min`; labels are materialized per round through
-    * [[org.apache.spark.sql.GraftSql.persistedView]] — the Catalyst plan
-    * stays flat (like a checkpoint) but RDD lineage is PRESERVED, so an
-    * executor loss recomputes instead of failing, and each superseded
-    * round's storage is unpersisted so executor memory stays O(1) in the
-    * iteration count.
-    * The per-round convergence check is one driver-side `isEmpty` — no
-    * data collected.
+    * `min`, run by the [[Rounds]] loop: the round's one job materializes
+    * the labels (flat Catalyst plan, RDD lineage PRESERVED, so an
+    * executor loss recomputes instead of failing; the superseded round
+    * is released, so executor memory stays O(1) in the iteration count)
+    * and counts the labels that changed — zero is the fixpoint, so no
+    * convergence job of its own. The edge materialization's job likewise
+    * counts NULL endpoints.
     *
     * Ids keep their ORIGINAL column type end-to-end (any orderable atomic
     * type — long, string, UUID-as-string — works; `min` is the label
@@ -405,49 +404,47 @@ object Dedup {
   def connectedComponents(
       pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 50): DataFrame = {
+    import org.apache.spark.sql.GraftSql.{sizedView, unpersistCheckpoint,
+      unpersistCheckpointTree}
     val aType = pairs.schema(aCol).dataType
     val bType = pairs.schema(bCol).dataType
     require(aType == bType,
       s"id columns must share a type; got $aCol: $aType, $bCol: $bType")
     val e = pairs.select(col(aCol).as("a"), col(bCol).as("b"))
-    val edges = org.apache.spark.sql.GraftSql.persistedView(
-      e.union(e.select(col("b").as("a"), col("a").as("b"))))
-    require(
-      edges.filter(col("a").isNull || col("b").isNull).isEmpty,
-      s"connectedComponents: NULL ids in ($aCol, $bCol) — NULL never " +
-        "equi-joins, so its edges would silently vanish; filter or fix ids")
-    var labels = org.apache.spark.sql.GraftSql.persistedView(
-      edges.select(col("a").as("id")).distinct()
+    val (edges, nulls) = sizedView(
+      e.union(e.select(col("b").as("a"), col("a").as("b"))),
+      r => if (r.isNullAt(0) || r.isNullAt(1)) 1L else 0L)
+    try {
+      require(nulls == 0L,
+        s"connectedComponents: NULL ids in ($aCol, $bCol) — NULL never " +
+          "equi-joins, so its edges would silently vanish; filter or fix ids")
+      val init = sizedView(edges.select(col("a").as("id")).distinct()
         .select(col("id"), col("id").as("lbl")))
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val prop = edges.join(labels, edges("a") === labels("id"))
-        .select(edges("b").as("id"), col("lbl"))
-      val jump = labels.as("x")
-        .join(labels.as("p"), col("x.lbl") === col("p.id"))
-        .select(col("x.id").as("id"), col("p.lbl").as("lbl"))
-      // The node's OWN current label rides through the union (non-null
-      // only on the `labels` contribution, which has exactly one row per
-      // id), so convergence is a partition-local filter over the already-
-      // persisted result — no per-round join against the previous state.
-      // `labels` keeps the extra column between rounds: projecting it
-      // away would wrap the persisted RDD in a Project and defeat
-      // unpersistCheckpoint.
-      val lblType = labels.schema("lbl").dataType
-      val next = org.apache.spark.sql.GraftSql.persistedView(
-        labels.select(col("id"), col("lbl")).withColumn("own", col("lbl"))
-          .union(prop.withColumn("own", lit(null).cast(lblType)))
-          .union(jump.withColumn("own", lit(null).cast(lblType)))
-          .groupBy("id").agg(min("lbl").as("lbl"), min("own").as("own")))
-      converged = next.filter(col("lbl") < col("own")).isEmpty
-      org.apache.spark.sql.GraftSql.unpersistCheckpoint(labels)
-      labels = next
-      iter += 1
-    }
-    require(converged, s"connectedComponents did not converge in $maxIter rounds")
-    org.apache.spark.sql.GraftSql.unpersistCheckpoint(edges)
-    labels.select(col("id").as("doc_id"), col("lbl").as("cluster_id"))
+      // scalar: labels changed by the round (-1 before the first)
+      val (labels, changed, _) =
+        Rounds.run(init, -1L, maxIter, stop = _ == 0L) { (labels, _, _) =>
+          val prop = edges.join(labels, edges("a") === labels("id"))
+            .select(edges("b").as("id"), col("lbl"))
+          val jump = labels.as("x")
+            .join(labels.as("p"), col("x.lbl") === col("p.id"))
+            .select(col("x.id").as("id"), col("p.lbl").as("lbl"))
+          // The node's OWN current label rides through the union (non-null
+          // only on the `labels` contribution, which has exactly one row
+          // per id), so the change test is row-local — no per-round join
+          // against the previous state.
+          val lblType = labels.schema("lbl").dataType
+          (labels.select(col("id"), col("lbl")).withColumn("own", col("lbl"))
+            .union(prop.withColumn("own", lit(null).cast(lblType)))
+            .union(jump.withColumn("own", lit(null).cast(lblType)))
+            .groupBy("id").agg(min("lbl").as("lbl"), min("own").as("own"))
+            .select(col("id"), col("lbl"), (col("lbl") < col("own")).as("chg")),
+            r => if (!r.isNullAt(2) && r.getBoolean(2)) 1L else 0L)
+        }
+      if (changed != 0L) unpersistCheckpointTree(labels)
+      require(changed == 0L,
+        s"connectedComponents did not converge in $maxIter rounds")
+      labels.select(col("id").as("doc_id"), col("lbl").as("cluster_id"))
+    } finally unpersistCheckpoint(edges)
   }
 
   /** Bound near-dup PAIR EMISSION to the `k` best pairs per document —
@@ -550,7 +547,8 @@ object Dedup {
     val out = nr.join(cc, Seq("rep"), "left")
       .select(col("id").as("doc_id"),
         coalesce(col("cluster_id"), col("rep")).as("cluster_id"))
-      .localCheckpoint() // materialize before releasing nr's storage
+      .localCheckpoint() // materialize before releasing what it read
+    org.apache.spark.sql.GraftSql.unpersistCheckpointTree(cc)
     org.apache.spark.sql.GraftSql.unpersistCheckpoint(nr)
     org.apache.spark.sql.GraftSql.unpersistCheckpoint(p)
     out
@@ -778,7 +776,8 @@ object Dedup {
     val losers = clusters
       .filter(col("doc_id") =!= col("cluster_id"))
       .select(col("doc_id").as("__graft_loser"))
-    antiJoinDropSized(df, idCol, losers)
+    try antiJoinDropSized(df, idCol, losers)
+    finally org.apache.spark.sql.GraftSql.unpersistCheckpoint(clusters)
   }
 
   /** The drop-losers LEFT ANTI join, planned from MEASURED statistics
@@ -824,7 +823,8 @@ object Dedup {
     val losers = clusters.join(winners, "cluster_id")
       .filter(col("doc_id") =!= col("keep"))
       .select(col("doc_id").as("__graft_loser"))
-    antiJoinDropSized(df, idCol, losers)
+    try antiJoinDropSized(df, idCol, losers)
+    finally org.apache.spark.sql.GraftSql.unpersistCheckpoint(clusters)
   }
 
   /** The (doc_id, lo, hi) 64-bit fingerprint relation behind

@@ -1,6 +1,7 @@
 package graft.llm
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Graph centrality as a data-quality signal — the web-graph PageRank
@@ -22,7 +23,9 @@ import org.apache.spark.sql.functions._
   * summed in a single dst-keyed `groupBy` — the standard distributed
   * PageRank shape (edge-partitioned joins, no driver-side graph). The
   * job that materializes a round also folds the dangling-node mass,
-  * which enters the next round as a literal.
+  * which enters the next round as a literal. Every iterative operator
+  * here (PageRank/TrustRank, HITS, BFS) runs on that one loop,
+  * [[Rounds]].
   */
 object Graph {
 
@@ -43,8 +46,8 @@ object Graph {
 
   /** The one rank loop behind [[pageRank]] (`seeds` = None: every node
     * is a seed) and [[trustRank]] (`seeds` = a relation with a `node`
-    * column). Returns `(node, r)`. `observe` sees each round's plan
-    * after it ran (specs assert its shape).
+    * column), run by [[Rounds]]. Returns `(node, r)`. `observe` sees
+    * each round's plan after it ran (specs assert its shape).
     *
     * Setup is two materializations: the distinct non-NULL edges, and
     * ONE node aggregate over `(src, 1) ∪ (dst, 0) ∪ (seed, NULL)` summed
@@ -71,52 +74,50 @@ object Graph {
     val e = sizedView(edges
       .select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull).distinct())
-    val everySeed = lit(if (seeds.isEmpty) 1L else 0L)
-    val ends = e.select(col("src").as("node"), lit(1L).as("deg"),
-        everySeed.as("seed"))
-      .union(e.select(col("dst"), lit(0L), everySeed))
-    val tagged = seeds.fold(ends)(s => ends.union(s.select(
-      col("node").cast(idType), lit(null).cast("bigint"), lit(1L))))
-    // low 32 bits: seeds; high 32 bits: dangling seeds (N < 2^32)
-    val (nodes, packed) = sizedView(tagged.groupBy("node")
-        .agg(sum("deg").as("outdeg"), max("seed").as("is_seed"))
-        .filter(col("outdeg").isNotNull),
-      r => r.getLong(2) * (if (r.getLong(1) == 0L) (1L << 32) + 1 else 1L))
-    val nSeeds = packed & 0xffffffffL
-    if (nSeeds == 0) { unpersistCheckpoint(e); unpersistCheckpoint(nodes) }
-    require(nSeeds > 0, seeds.fold("pageRank needs a non-empty edge list")(
-      _ => "trustRank needs at least one seed present in the graph"))
-    val init = scale / nSeeds // integer division — identical in the oracle
-    val base = init * (dampDen - dampNum) / dampDen
-    var rank = nodes.select(col("node"), col("outdeg"), col("is_seed"),
-      (col("is_seed") * init).as("r"))
-    var dangling = (packed >>> 32) * init
-    for (i <- 1 to iters) {
-      // per-edge contribution: INTEGER division (`div`, not `/` — Spark's
-      // `/` on longs is double division, whose truncation could diverge
-      // from the oracle's exact `//` near integer boundaries)
-      val contrib = rank.join(e, col("node") === col("src"))
-        .select(col("dst").as("node"), lit(0L).as("outdeg"),
-          lit(0L).as("is_seed"), expr("r div outdeg").as("c"))
-      val round = rank
-        .select(col("node"), col("outdeg"), col("is_seed"), lit(0L).as("c"))
-        .union(contrib)
-        .groupBy("node").agg(sum("outdeg").as("outdeg"),
-          sum("is_seed").as("is_seed"), sum("c").as("in_sum"))
-        .select(col("node"), col("outdeg"), col("is_seed"), expr(
-          s"is_seed * $base + ($dampNum * (in_sum + is_seed * " +
-            s"${dangling / nSeeds})) div $dampDen").as("r"))
-      // each round is persisted (flat lineage) and its job also sums
-      // the mass on dangling nodes for the next round
-      val (next, d) = sizedView(round,
-        r => if (r.getLong(1) == 0L) r.getLong(3) else 0L)
-      observe(round)
-      unpersistCheckpoint(if (i == 1) nodes else rank)
-      rank = next
-      dangling = d
-    }
-    unpersistCheckpoint(e)
-    rank.select(col("node"), col("r"))
+    try {
+      val everySeed = lit(if (seeds.isEmpty) 1L else 0L)
+      val ends = e.select(col("src").as("node"), lit(1L).as("deg"),
+          everySeed.as("seed"))
+        .union(e.select(col("dst"), lit(0L), everySeed))
+      val tagged = seeds.fold(ends)(s => ends.union(s.select(
+        col("node").cast(idType), lit(null).cast("bigint"), lit(1L))))
+      // low 32 bits: seeds; high 32 bits: dangling seeds (N < 2^32)
+      val (nodes, packed) = sizedView(tagged.groupBy("node")
+          .agg(sum("deg").as("outdeg"), max("seed").as("is_seed"))
+          .filter(col("outdeg").isNotNull),
+        r => r.getLong(2) * (if (r.getLong(1) == 0L) (1L << 32) + 1 else 1L))
+      val nSeeds = packed & 0xffffffffL
+      if (nSeeds == 0) unpersistCheckpoint(nodes)
+      require(nSeeds > 0, seeds.fold("pageRank needs a non-empty edge list")(
+        _ => "trustRank needs at least one seed present in the graph"))
+      val init = scale / nSeeds // integer division — identical in the oracle
+      val base = init * (dampDen - dampNum) / dampDen
+      // the round's job also sums the mass on dangling nodes, the next
+      // round's literal
+      val (rank, _, _) = Rounds.run(
+          nodes.select(col("node"), col("outdeg"), col("is_seed"),
+            (col("is_seed") * init).as("r")),
+          (packed >>> 32) * init, iters, observe = observe) {
+        (rank, dangling, _) =>
+          // per-edge contribution: INTEGER division (`div`, not `/` —
+          // Spark's `/` on longs is double division, whose truncation
+          // could diverge from the oracle's exact `//` near integer
+          // boundaries)
+          val contrib = rank.join(e, col("node") === col("src"))
+            .select(col("dst").as("node"), lit(0L).as("outdeg"),
+              lit(0L).as("is_seed"), expr("r div outdeg").as("c"))
+          (rank.select(col("node"), col("outdeg"), col("is_seed"),
+              lit(0L).as("c"))
+            .union(contrib)
+            .groupBy("node").agg(sum("outdeg").as("outdeg"),
+              sum("is_seed").as("is_seed"), sum("c").as("in_sum"))
+            .select(col("node"), col("outdeg"), col("is_seed"), expr(
+              s"is_seed * $base + ($dampNum * (in_sum + is_seed * " +
+                s"${dangling / nSeeds})) div $dampDen").as("r")),
+            r => if (r.getLong(1) == 0L) r.getLong(3) else 0L)
+      }
+      rank.select(col("node"), col("r"))
+    } finally unpersistCheckpoint(e)
   }
 
   /** The DuckDB twin of [[pageRank]] as a WITH-clause body: unrolled
@@ -152,31 +153,6 @@ object Graph {
        |$rounds""".stripMargin
   }
 
-  /** HITS hubs & authorities (Kleinberg 1999) over a DIRECTED edge list
-    * — the two-sided centrality PageRank can't express: a node is a good
-    * HUB if it points at good authorities, a good AUTHORITY if good hubs
-    * point at it (link-farm detection, seed-list expansion, quality
-    * priors on bipartite graphs).
-    *
-    * Same exact-arithmetic discipline as [[pageRank]]: scores are
-    * `scale`-scaled longs; each half-iteration is one edge equi-join +
-    * one key-grouped long sum, then L1 normalization by a
-    * provably-single-row global sum (integer division) — long sums are
-    * order-free, so the result is bit-identical across partitionings and
-    * engines, and the oracle unrolls the identical rounds.
-    *
-    * Overflow headroom: normalized scores sum to ≤ `scale`, so every
-    * raw sum ≤ `scale · maxDegree` and every normalization product
-    * ≤ `scale² · maxDegree` — the default `scale` = 10^6 keeps products
-    * under 2^63 for degrees up to ~9·10^6 (host-graph out-degrees are
-    * orders of magnitude below that). `scale` must also exceed the node
-    * count or normalization underflows to zero (required below).
-    *
-    * Scale posture: per round, TWO edge-keyed equi-joins + grouped sums
-    * (src-keyed then dst-keyed) — the standard distributed HITS shape;
-    * no driver-side graph, the only driver values are the two global
-    * normalization scalars per round (broadcast single-row aggregates).
-    * Output: (node, auth_scaled, hub_scaled) for ALL nodes. */
   /** EXACT PER-NODE TRIANGLE COUNTS over the undirected simple graph
     * induced by `edges(srcCol, dstCol)` (direction, multi-edges and
     * self-loops dropped) — the local community signal centrality can't
@@ -263,58 +239,80 @@ object Graph {
        |               FROM (SELECT unnest([x, y, z]) AS node FROM tri) n
        |               GROUP BY node)""".stripMargin
 
+  /** HITS hubs & authorities (Kleinberg 1999) over a DIRECTED edge list
+    * — the two-sided centrality PageRank can't express: a node is a good
+    * HUB if it points at good authorities, a good AUTHORITY if good hubs
+    * point at it (link-farm detection, seed-list expansion, quality
+    * priors on bipartite graphs).
+    *
+    * Same exact-arithmetic discipline as [[pageRank]]: scores are
+    * `scale`-scaled longs; each half-iteration is one key-grouped long
+    * sum along the edges, then L1 normalization by the half-step's
+    * global sum (integer division) — long sums are order-free, so the
+    * result is bit-identical across partitionings and engines, and the
+    * oracle unrolls the identical rounds.
+    *
+    * Overflow headroom: normalized scores sum to ≤ `scale`, so every
+    * raw sum ≤ `scale · maxDegree` and every normalization product
+    * ≤ `scale² · maxDegree` — the default `scale` = 10^6 keeps products
+    * under 2^63 for degrees up to ~9·10^6 (host-graph out-degrees are
+    * orders of magnitude below that). `scale` must also exceed the node
+    * count or normalization underflows to zero (required below).
+    *
+    * Scale posture: the [[Rounds]] loop over 2·`iters` half-steps,
+    * authority then hub. The state holds one row per node and one per
+    * edge; a half-step is ONE window sum keyed by the receiving endpoint
+    * (dst for authority, src for hub), so node rows get their raw score
+    * and edge rows the score the next half-step sends — one exchange, no
+    * join, no driver-side graph. The half-step's job also folds its L1
+    * sum, which normalizes the scores as a literal in the next half-step
+    * (and the final hub column). Setup is two materializations: the
+    * distinct edges, and the distinct nodes, whose job counts them.
+    * Output: (node, auth_scaled, hub_scaled) for ALL nodes. */
   def hits(
       edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 3, scale: Long = 1000000L): DataFrame = {
     require(iters >= 1, "need iters >= 1")
-    import org.apache.spark.sql.GraftSql.{persistedView, unpersistCheckpoint}
+    import org.apache.spark.sql.GraftSql.{sizedView, unpersistCheckpoint}
     require(edges.schema(srcCol).dataType == edges.schema(dstCol).dataType,
       s"node id columns must share a type; got $srcCol: " +
         s"${edges.schema(srcCol).dataType}, $dstCol: " +
         s"${edges.schema(dstCol).dataType}")
-    val e = persistedView(edges
+    val e = sizedView(edges
       .select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
-    val nodes = persistedView(
+    val (nodes, n) = try sizedView(
       e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
-        .distinct())
-    val n = nodes.count() // driver scalar: init is a literal
+        .distinct(), _ => 1L)
+    catch { case t: Throwable => unpersistCheckpoint(e); throw t }
+    if (n == 0 || scale < 2 * n) {
+      unpersistCheckpoint(e); unpersistCheckpoint(nodes)
+    }
     require(n > 0, "hits needs a non-empty edge list")
     require(scale >= 2 * n,
       s"scale ($scale) must be >= 2x the node count ($n) or integer " +
         "normalization underflows")
-    var hub = nodes.select(col("node"), lit(scale / n).as("h"))
-    var prev: Option[DataFrame] = None
-    for (_ <- 1 to iters) {
-      // authority update: sum incoming hub mass, L1-normalize to scale
-      val araw = hub.join(e, col("node") === col("src"))
-        .select(col("dst").as("node"), col("h").as("c"))
-        .groupBy("node").agg(sum("c").as("raw"))
-      val asum = araw.agg(sum("raw").as("s"))
-      val a = nodes.join(araw, Seq("node"), "left")
-        .crossJoin(broadcast(asum))
-        .select(col("node"), expr(
-          s"coalesce((raw * $scale) div s, CAST(0 AS BIGINT))").as("a"))
-      // hub update: sum outgoing authority mass, L1-normalize
-      val hraw = a.join(e, col("node") === col("dst"))
-        .select(col("src").as("node"), col("a").as("c"))
-        .groupBy("node").agg(sum("c").as("raw"))
-      val hsum = hraw.agg(sum("raw").as("s"))
-      val h = nodes.join(hraw, Seq("node"), "left")
-        .crossJoin(broadcast(hsum))
-        .select(col("node"), expr(
-          s"coalesce((raw * $scale) div s, CAST(0 AS BIGINT))").as("h"))
-      // checkpoint the round (truncates the growing two-join lineage),
-      // release the superseded round's storage
-      val both = persistedView(a.join(h, Seq("node"))
-        .select(col("node"), col("a"), col("h")))
-      prev.foreach(unpersistCheckpoint)
-      prev = Some(both)
-      hub = both.select(col("node"), col("h"))
+    // node rows carry src = dst = node; an edge with a NULL endpoint
+    // sends nothing from it, but its mass still counts toward the L1 sum
+    val init = nodes.select(col("node").as("src"), col("node").as("dst"),
+        lit(false).as("edge"))
+      .union(e.select(col("src"), col("dst"), lit(true)))
+      .select(col("src"), col("dst"), col("edge"), lit(0L).as("a"),
+        lit(scale / n).as("h"))
+    def normalized(c: String, l1: Long): Column =
+      if (l1 == 0L) lit(0L) else expr(s"($c * $scale) div $l1")
+    val (state, hubL1, _) = Rounds.run(init, 0L, 2 * iters) {
+      (st, l1, r) =>
+        val (from, to, sent, got, at) =
+          if (r % 2 == 1) ("src", "dst", "h", "a", 3)
+          else ("dst", "src", "a", "h", 4)
+        (st.withColumn(sent, if (r == 1) col(sent) else normalized(sent, l1))
+            .withColumn(got, sum(when(col("edge") && col(from).isNotNull,
+              col(sent)).otherwise(0L)).over(Window.partitionBy(to))),
+          row => if (row.getBoolean(2)) 0L else row.getLong(at))
     }
-    val out = prev.get.select(col("node"), col("a").as("auth_scaled"),
-      col("h").as("hub_scaled"))
-    unpersistCheckpoint(e); unpersistCheckpoint(nodes)
-    out
+    state.filter(!col("edge") && col("src").isNotNull)
+      .select(col("src").as("node"), col("a").as("auth_scaled"),
+        normalized("h", hubL1).as("hub_scaled"))
   }
 
   /** TrustRank (Gyöngyi, Garcia-Molina & Pedersen 2004) — PageRank with
@@ -433,7 +431,7 @@ object Graph {
     * prioritization, Common-Crawl's seed-distance stratification,
     * Gyöngyi's "trust attenuates with distance" argument made literal):
     * depth(v) = length of the shortest directed path from ANY seed,
-    * computed as `maxHops` rounds of frontier relaxation. Nodes not
+    * computed as up to `maxHops` rounds of frontier relaxation. Nodes not
     * reached within `maxHops` are absent (the caller's outer join
     * decides a sentinel).
     *
@@ -441,14 +439,16 @@ object Graph {
     * (join / distinct / anti-join) — no FP, no tie-breaks; the result
     * is independent of partitioning and engine by construction.
     *
-    * Scale posture: round r is ONE src-keyed equi-join of the CURRENT
-    * FRONTIER (not the full reached set) against the edge list, a
-    * distinct on the frontier's span, and one key-partitioned LEFT ANTI
-    * join against the reached relation — the textbook distributed BFS
-    * (Pregel's message set, expressed relationally). Per-round work is
-    * O(edges out of frontier); the reached relation is persisted and
-    * grows monotonically, `maxHops` bounds the plan size. No windows,
-    * no driver-side graph; the only driver state is the loop counter.
+    * Scale posture: hop r is one [[Rounds]] round — the CURRENT FRONTIER
+    * (the reached rows at depth r-1, not the full reached set) src-keyed
+    * equi-joined against the edge list, a distinct on its span, one
+    * key-partitioned LEFT ANTI join against the reached relation, and
+    * the union with it materialized as the next reached relation — the
+    * textbook distributed BFS (Pregel's message set, expressed
+    * relationally). Per-hop work is O(edges out of frontier). The hop's
+    * job also counts the rows it added; the loop ends after the first
+    * hop that adds none (later hops would find nothing). No windows, no
+    * driver-side graph.
     *
     * Seeds outside the graph's node set are dropped (semi join) so both
     * engines agree on the universe. Returns `(node, depth)` for every
@@ -457,38 +457,29 @@ object Graph {
       edges: DataFrame, srcCol: String, dstCol: String,
       seeds: DataFrame, seedCol: String, maxHops: Int = 4): DataFrame = {
     require(maxHops >= 1 && maxHops <= 12, "maxHops must be in [1, 12]")
-    import org.apache.spark.sql.GraftSql.{persistedView, unpersistCheckpoint}
+    import org.apache.spark.sql.GraftSql.{sizedView, unpersistCheckpoint}
     require(edges.schema(srcCol).dataType == edges.schema(dstCol).dataType,
       s"node id columns must share a type; got $srcCol: " +
         s"${edges.schema(srcCol).dataType}, $dstCol: " +
         s"${edges.schema(dstCol).dataType}")
-    val e = persistedView(edges
+    val e = sizedView(edges
       .select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-    val d0 = seeds.select(col(seedCol).as("node")).distinct()
-      .join(nodes, Seq("node"), "left_semi")
-      .withColumn("depth", lit(0L))
-    var reached = persistedView(d0)
-    var frontier = reached
-    // every persisted per-round frame EXCEPT the final reached relation
-    // (which is the result) is released once the loop is done — each
-    // round's union is eagerly materialized, so parents are safe to drop
-    val retired = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    for (r <- 1 to maxHops) {
-      val next = persistedView(frontier
-        .join(e, col("node") === col("src"))
-        .select(col("dst").as("node")).distinct()
-        .join(reached, Seq("node"), "left_anti")
-        .withColumn("depth", lit(r.toLong)))
-      retired += reached
-      retired += next
-      reached = persistedView(reached.unionByName(next))
-      frontier = next
-    }
-    retired.foreach(unpersistCheckpoint)
-    unpersistCheckpoint(e)
-    reached
+    try {
+      val nodes = e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct()
+      val (d0, nSeeds) = sizedView(seeds.select(col(seedCol).as("node"))
+        .distinct().join(nodes, Seq("node"), "left_semi")
+        .withColumn("depth", lit(0L)), _ => 1L)
+      Rounds.run(d0, nSeeds, maxHops, stop = _ == 0L) { (reached, _, r) =>
+        val found = reached.filter(col("depth") === r - 1)
+          .join(e, col("node") === col("src"))
+          .select(col("dst").as("node")).distinct()
+          .join(reached, Seq("node"), "left_anti")
+          .withColumn("depth", lit(r.toLong))
+        (reached.unionByName(found),
+          row => if (row.getLong(1) == r) 1L else 0L)
+      }._1
+    } finally unpersistCheckpoint(e)
   }
 
   /** The DuckDB twin of [[bfsDepth]] as a WITH-clause body over

@@ -27,14 +27,14 @@ object Similarity {
   /** Left-fold dot product — the native codegen expression (identical
     * semantics to `aggregate(zip_with(a, b, _*_), 0d, _+_)`, ~order of
     * magnitude faster than the interpreted HOF chain). */
-  private def dot(a: Column, b: Column): Column = {
+  private[llm] def dot(a: Column, b: Column): Column = {
     import org.apache.spark.sql.GraftSql
     GraftSql.column(graft.functions.DotProduct(
       GraftSql.expression(a), GraftSql.expression(b)))
   }
 
   /** L2 norm (same fold shape). */
-  private def norm(a: Column): Column = sqrt(dot(a, a))
+  private[llm] def norm(a: Column): Column = sqrt(dot(a, a))
 
   /** Brute-force cosine top-k: exact baseline. `queries` is the (small)
     * query-vector side — broadcast — and each corpus partition scores
@@ -595,7 +595,7 @@ object Similarity {
     * into the plan per side — ~1.7 s of driver-side planning per query
     * build at 15 planes, 10× the execution cost (the [[ArgmaxCell]]
     * plan-size lesson, applied to LSH). Bit-identical arithmetic. */
-  private def bucketExpr(v: Column, signs: Seq[Seq[Int]]): Column = {
+  private[llm] def bucketExpr(v: Column, signs: Seq[Seq[Int]]): Column = {
     import org.apache.spark.sql.GraftSql
     GraftSql.column(graft.functions.PlaneBucket(
       GraftSql.expression(v), signs.map(_.map(_.toDouble))))
@@ -804,9 +804,10 @@ object Similarity {
     *    pairs per node. Candidates union the current edges (a neighbor
     *    is never lost — per-node top-k is monotone across rounds),
     *    dedup, rescore by exact cosine, and keep the per-node top-k via
-    *    the bounded TopKAgg. Iteration-invariant vectors are
-    *    localCheckpoint'ed once; per-round results checkpoint to keep
-    *    lineage flat (as Graph's rank loop materializes each round).
+    *    the bounded TopKAgg. The vectors are materialized once (the
+    *    job also counts them) and released after the last round; each
+    *    round is one [[Rounds]] materialization (flat lineage, the
+    *    superseded round released), as Graph's rank loop runs.
     *
     * Every round is two corpus-key equi-joins + one k²-bounded
     * self-join — no broadcast of anything corpus-sized, no windows, no
@@ -820,65 +821,67 @@ object Similarity {
   def nnDescentGraph(emb: DataFrame, idCol: String, vecCol: String,
       k: Int = 5, rounds: Int = 2, dim: Int = 64): DataFrame = {
     require(k >= 1 && rounds >= 0)
-    val n = emb.select(col(idCol).as("nid"), col(vecCol).as("v"))
-      .withColumn("nrm", norm(col("v")))
-      .localCheckpoint()
-    val planes = nnDescentPlanes(n.count(), k)
-    val signs = planeSigns(2 * planes, dim)
-    val b = n
-      .withColumn("__b1", bucketExpr(col("v"), signs.slice(0, planes)))
-      .withColumn("__b2",
-        bucketExpr(col("v"), signs.slice(planes, 2 * planes)))
-      .withColumn("__tb", explode(array(
-        struct(lit(0L).as("t"), col("__b1").as("bk")),
-        struct(lit(1L).as("t"), col("__b2").as("bk")))))
-      .select(col("nid"), col("v"), col("nrm"),
-        col("__tb.t").as("t"), col("__tb.bk").as("bk"))
-    // fresh aliases on every shared-lineage column (corpus self-joins)
-    val q0 = b.select(col("nid").as("qid"), col("v").as("qv"),
-      col("nrm").as("qn"), col("t").as("t"), col("bk").as("bk"))
-    val scored0 = b.join(q0, Seq("t", "bk"))
-      .filter(col("nid") =!= col("qid"))
-      .select(col("qid"), col("nid"),
-        (dot(col("qv"), col("v")) / (col("qn") * col("nrm"))).as("sim"))
-      // a pair found by both tables scores identically — group-min dedup
-      .groupBy("qid", "nid").agg(min("sim").as("sim"))
-    val topk = udaf(new graft.functions.TopKAgg(k))
-    // per-node top-k with the RAW double sim carried between rounds
-    // (the reverse cap ranks on it); the public rounded/ranked shape is
-    // applied once at the end
-    def keepK(scored: DataFrame): DataFrame = scored
-      .groupBy("qid").agg(topk(col("sim"), col("nid")).as("top"))
-      .select(col("qid"), explode(col("top")).as("e"))
-      .select(col("qid"), col("e.id").as("nid"), col("e.score").as("sim"))
-    var cur = keepK(scored0).localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val rev = cur
-        .select(col("nid").as("qid"), col("qid").as("nid"), col("sim"))
-      val revCapped = keepK(rev)
-      val e = cur.select("qid", "nid")
-        .unionByName(revCapped.select("qid", "nid"))
-        .select(col("qid").as("u"), col("nid").as("x"))
-      val eR = e.select(col("u").as("u2"), col("x").as("y"))
-      val cand = e.join(eR, col("u") === col("u2"))
-        .filter(col("x") =!= col("y"))
-        .select(col("x").as("qid"), col("y").as("nid"))
-        .unionByName(cur.select("qid", "nid"))
-        .distinct()
-      val scored = cand
-        .join(n.select(col("nid").as("qid"), col("v").as("qv"),
-          col("nrm").as("qn")), Seq("qid"))
-        .join(n, Seq("nid"))
+    import org.apache.spark.sql.GraftSql.{sizedView, unpersistCheckpoint}
+    val (n, count) = sizedView(emb.select(col(idCol).as("nid"),
+      col(vecCol).as("v")).withColumn("nrm", norm(col("v"))), _ => 1L)
+    try {
+      val planes = nnDescentPlanes(count, k)
+      val signs = planeSigns(2 * planes, dim)
+      val b = n
+        .withColumn("__b1", bucketExpr(col("v"), signs.slice(0, planes)))
+        .withColumn("__b2",
+          bucketExpr(col("v"), signs.slice(planes, 2 * planes)))
+        .withColumn("__tb", explode(array(
+          struct(lit(0L).as("t"), col("__b1").as("bk")),
+          struct(lit(1L).as("t"), col("__b2").as("bk")))))
+        .select(col("nid"), col("v"), col("nrm"),
+          col("__tb.t").as("t"), col("__tb.bk").as("bk"))
+      // fresh aliases on every shared-lineage column (corpus self-joins)
+      val q0 = b.select(col("nid").as("qid"), col("v").as("qv"),
+        col("nrm").as("qn"), col("t").as("t"), col("bk").as("bk"))
+      val scored0 = b.join(q0, Seq("t", "bk"))
+        .filter(col("nid") =!= col("qid"))
         .select(col("qid"), col("nid"),
           (dot(col("qv"), col("v")) / (col("qn") * col("nrm"))).as("sim"))
-      cur = keepK(scored).localCheckpoint()
-    }
-    // public contract: rank by (sim DESC, nid ASC), round like topK
-    cur.groupBy("qid").agg(topk(col("sim"), col("nid")).as("top"))
-      .select(col("qid"), posexplode(col("top")))
-      .select(col("qid"), col("col.id").as("nid"),
-        (col("pos") + 1).as("rank"),
-        round(col("col.score"), 6).as("sim"))
+        // a pair found by both tables scores identically — group-min dedup
+        .groupBy("qid", "nid").agg(min("sim").as("sim"))
+      val topk = udaf(new graft.functions.TopKAgg(k))
+      // per-node top-k with the RAW double sim carried between rounds
+      // (the reverse cap ranks on it); the public rounded/ranked shape is
+      // applied once at the end
+      def keepK(scored: DataFrame): DataFrame = scored
+        .groupBy("qid").agg(topk(col("sim"), col("nid")).as("top"))
+        .select(col("qid"), explode(col("top")).as("e"))
+        .select(col("qid"), col("e.id").as("nid"), col("e.score").as("sim"))
+      val (cur, _, _) = Rounds.run(sizedView(keepK(scored0)), 0L, rounds) {
+        (cur, _, _) =>
+          val rev = cur
+            .select(col("nid").as("qid"), col("qid").as("nid"), col("sim"))
+          val revCapped = keepK(rev)
+          val e = cur.select("qid", "nid")
+            .unionByName(revCapped.select("qid", "nid"))
+            .select(col("qid").as("u"), col("nid").as("x"))
+          val eR = e.select(col("u").as("u2"), col("x").as("y"))
+          val cand = e.join(eR, col("u") === col("u2"))
+            .filter(col("x") =!= col("y"))
+            .select(col("x").as("qid"), col("y").as("nid"))
+            .unionByName(cur.select("qid", "nid"))
+            .distinct()
+          val scored = cand
+            .join(n.select(col("nid").as("qid"), col("v").as("qv"),
+              col("nrm").as("qn")), Seq("qid"))
+            .join(n, Seq("nid"))
+            .select(col("qid"), col("nid"),
+              (dot(col("qv"), col("v")) / (col("qn") * col("nrm"))).as("sim"))
+          (keepK(scored), _ => 0L)
+      }
+      // public contract: rank by (sim DESC, nid ASC), round like topK
+      cur.groupBy("qid").agg(topk(col("sim"), col("nid")).as("top"))
+        .select(col("qid"), posexplode(col("top")))
+        .select(col("qid"), col("col.id").as("nid"),
+          (col("pos") + 1).as("rank"),
+          round(col("col.score"), 6).as("sim"))
+    } finally unpersistCheckpoint(n)
   }
 
   /** IVF (inverted-file) ANN — the second scale path, complementing

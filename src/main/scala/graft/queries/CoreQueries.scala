@@ -1421,9 +1421,9 @@ object CoreQueries {
     // supplier graph — the two-sided centrality PageRank can't express
     // (a part is a good hub if supplied by authoritative suppliers and
     // vice versa). Integer fixed point end to end (graft.llm.Graph
-    // .hits): per round two edge equi-joins + grouped long sums, L1
-    // normalization by a single-row global scalar — bit-identical
-    // across engines, oracle unrolled.
+    // .hits): per half-step one window sum along the edges, L1
+    // normalization by the previous half-step's folded sum —
+    // bit-identical across engines, oracle unrolled.
     "graph_hits" -> ((s, dir) => {
       val li = lineitem(s, dir)
       val edges = li.select((col("l_partkey") * 2).as("src"),
