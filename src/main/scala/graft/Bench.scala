@@ -1,15 +1,29 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
+  /** JSON string literal: quote, backslash and control chars escaped. */
+  private[graft] def jstr(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""; case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  // a failed artifact write is reported on stderr, never fatal: stdout
+  // must still end with the metric lines
+  private[graft] def writeArtifact(file: String)(write: => Unit): Unit =
+    try write catch {
+      case e: Throwable => System.err.println(s"[graft] write $file " +
+        s"failed: ${e.getClass.getName}: ${e.getMessage}")
+    }
+
+  private[graft] def writeLine(file: String, s: String): Unit =
+    writeArtifact(file) {
+      val w = new java.io.PrintWriter(file, "UTF-8")
+      try w.println(s) finally w.close()
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(LocalSession.envCpus)
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup: run every query once at the smallest SF so
     // whole-stage-codegen compilation (janino cache, keyed by generated
@@ -32,11 +46,6 @@ object Bench {
             s"$name failed: ${e.getClass.getName}: ${e.getMessage}")
         }
       }
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // CONTROL query (constant work, data-independent): a seeded 1e7-row
     // hash+aggregate over spark.range. Its cost is fixed across rounds and
     // scale factors, so any drift in its timing measures the BOX (load,
@@ -279,32 +288,14 @@ object Bench {
     }.mkString("{", ",", "}")
     val total = results.collect { case (_, Right(v)) => v }.sum
     val nerr = results.count(_._2.isLeft)
-    // CACHE-AMORTIZED rows + their COLD build cost (ADVICE r11 medium):
-    // mm_video_near_dup / mm_mp4_near_dup read the session-cached pair
-    // graph priced inside their *_dedup siblings, so their per-query
-    // medians are cached-scan timings, not operator cost. The artifact
-    // now (a) names them, and (b) carries the pair-graph build timed
-    // COLD (cache evicted first) as its own rows — run AFTER the timed
-    // loop so the eviction can't perturb any per-query median.
-    // round 14: web_link_graph / web_host_rank read the session-cached
-    // webEdges extraction (one corpus HTML scan serves the family) —
-    // their medians are cached-scan timings; the extraction is priced
-    // as the web_edges_build cold row
-    val cacheAmortized = Seq("mm_mp4_near_dup", "mm_video_near_dup",
-      "web_link_graph", "web_host_rank")
-    // (label, cold seconds, pair rows) via ScaleProbe.timeBuild (evict →
-    // build → eager materialization) — the same rows the scale probe
-    // emits, so BENCH and PROBE tables price the build identically
-    def coldBuilds(dir: String): Seq[(String, Double, Long)] =
-      ScaleProbe.buildFamily.map { q =>
-        val (t, n) = ScaleProbe.timeBuild(spark, q, dir)
-        (q, t, n)
-      }
-    val coldMain = coldBuilds(sfDir)
-    val coldJson = coldMain
-      .map { case (k, v, _) => s"${jstr(k)}:${f"$v%.3f"}" }
-      .mkString("{", ",", "}")
-    val amortJson = cacheAmortized.map(jstr).mkString("[", ",", "]")
+    // COLD builds of the shared artifacts the cache-amortized rows read
+    // (ScaleProbe.timeBuild: evict → build → eager materialization, the
+    // same rows the scale probe emits), run AFTER the timed loop so the
+    // eviction can't perturb any per-query median
+    val coldJson = ScaleProbe.buildFamily.map { q =>
+        s"${jstr(q)}:${f"${ScaleProbe.timeBuild(spark, q, sfDir)._1}%.3f"}"
+      }.mkString("{", ",", "}")
+    val amortJson = ScaleProbe.cacheAmortized.map(jstr).mkString("[", ",", "]")
     val ctl = {
       val base =
         f""""control_pre_s":$controlPre%.3f,"control_post_s":$controlPost%.3f"""
@@ -328,17 +319,6 @@ object Bench {
     // ("parsed": null in BENCH_r03.json). A file can't be truncated by a
     // log window.
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_METRIC.json")
-    // a failed artifact write is reported on stderr, never fatal: stdout
-    // must still end with the metric lines
-    def writeArtifact(file: String)(write: => Unit): Unit =
-      try write catch {
-        case e: Throwable => System.err.println(s"[graft] write $file " +
-          s"failed: ${e.getClass.getName}: ${e.getMessage}")
-      }
-    def writeLine(file: String, s: String): Unit = writeArtifact(file) {
-      val w = new java.io.PrintWriter(file, "UTF-8")
-      try w.println(s) finally w.close()
-    }
     writeLine(outFile, line)
     // PER-QUERY round-over-round evidence (round 18): the driver's
     // stdout capture is a 2000-char tail and it parses the LAST JSON
@@ -355,86 +335,6 @@ object Bench {
     val queriesFile = "BENCH_QUERIES.json"
     writeLine(queriesFile, line)
     println(line)
-    // Standing 10× scale artifact (opt-in: SPARK_GRAFT_BENCH_10X=1):
-    // regenerate the seeded 10× corpus, time the scale-sensitive family
-    // on base and 10× data, write BENCH_10x.json, and refresh the
-    // marker-delimited table in STATUS.md — so scale REGRESSIONS (not
-    // just sf0.1 wall-clock) are round-over-round signal. File-only
-    // output: nothing here may print after the compact stdout line.
-    if (sys.env.get("SPARK_GRAFT_BENCH_10X").contains("1")) {
-      val dir10 = sys.env.getOrElse("SPARK_GRAFT_10X_DIR", "tmp_bench10x")
-      ScaleProbe.ensureCorpus(spark, sfDir, dir10)
-      // STEADY-STATE discipline: warm each (query, dir) once, then take
-      // the MEDIAN of three timed runs — the same protocol as the main
-      // metric above. The warmup absorbs the cache-build asymmetry (the
-      // main bench leaves session caches — shared pair sets, IVF
-      // indexes — warm for the BASE dir but cold for the 10× corpus;
-      // single-shot timing reported that as "ratio 279" on jaccard
-      // pairs), and the median absorbs one-off JIT/GC spikes that a
-      // single timed run reports as fake superlinearity (measured:
-      // knn_lsh_multitable 3.6 s spike vs 0.85 s steady ⇒ "11.65").
-      val batchRows =
-        ScaleProbe.family.filter(SparkEntry.queries.contains).map { q =>
-          ScaleProbe.time(spark, q, sfDir)
-          val (tb, nb) = ScaleProbe.timeMedian3(spark, q, sfDir)
-          ScaleProbe.time(spark, q, dir10)
-          val (tx, nx) = ScaleProbe.timeMedian3(spark, q, dir10)
-          (q, tb, tx, nb, nx)
-        }
-      // streaming twins under the same warm + median-3 discipline (see
-      // ScaleProbe.streamFamily): real file-source streams drained to a
-      // memory sink, so watermarked state paths get scale rows too
-      val streamRows = ScaleProbe.streamFamily.map { q =>
-        ScaleProbe.timeStream(spark, q, sfDir)
-        val (tb, nb) = ScaleProbe.timeStreamMedian3(spark, q, sfDir)
-        ScaleProbe.timeStream(spark, q, dir10)
-        val (tx, nx) = ScaleProbe.timeStreamMedian3(spark, q, dir10)
-        (q, tb, tx, nb, nx)
-      }
-      // the pair-graph BUILD at both scales, timed cold (single-shot:
-      // a cold build is by definition unrepeatable in one session, and
-      // at seconds-scale JIT noise is a small fraction) — the scale
-      // evidence the cache-amortized *_near_dup rows cannot carry.
-      // coldMain already timed the base dir cold (evict-first) above;
-      // re-running it here would evict and rebuild both graphs a second
-      // time for an identical number (ADVICE r12 low) — only the 10×
-      // column needs fresh timing.
-      val coldRows = coldMain.zip(coldBuilds(dir10)).map {
-        case ((q, tb, nb), (_, tx, nx)) => (q, tb, tx, nb, nx)
-      }
-      val rows = batchRows ++ streamRows ++ coldRows
-      val qjson = rows.map { case (q, tb, tx, nb, nx) =>
-        s"${jstr(q)}:{${jstr("base_s")}:${f"$tb%.3f"},${jstr("x10_s")}:${f"$tx%.3f"}," +
-          s"${jstr("ratio")}:${f"${tx / tb}%.2f"},${jstr("base_rows")}:$nb,${jstr("x10_rows")}:$nx}"
-      }.mkString("{", ",", "}")
-      val j10 =
-        s"""{"metric":"bench_10x","base_sf":${jstr(sfDir)},"n_queries":${rows.size},"queries":$qjson}"""
-      writeLine("BENCH_10x.json", j10)
-      // refresh STATUS.md between the BENCH_10X markers
-      writeArtifact("STATUS.md") {
-        val p = java.nio.file.Paths.get("STATUS.md")
-        val begin = "<!-- BENCH_10X_BEGIN -->"
-        val end = "<!-- BENCH_10X_END -->"
-        val table = (
-          Seq(s"| query | base (s) | 10× (s) | ratio | rows base → 10× |",
-              "|---|---|---|---|---|") ++
-          rows.map { case (q, tb, tx, nb, nx) =>
-            val label = if (cacheAmortized.contains(q)) s"$q †" else q
-            f"| $label | $tb%.2f | $tx%.2f | ${tx / tb}%.1f | $nb%,d → $nx%,d |" }
-          ++ Seq("",
-            "† reads the session-cached pair graph priced in its " +
-              "`*_dedup` sibling — the operator's true cost and scale " +
-              "evidence are the `mm_*_pairs_build` cold rows above.")
-          ).mkString("\n")
-        val md = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        val (b, e) = (md.indexOf(begin), md.indexOf(end))
-        if (b >= 0 && e > b) {
-          val patched = md.substring(0, b + begin.length) +
-            "\n" + table + "\n" + md.substring(e)
-          java.nio.file.Files.write(p, patched.getBytes("UTF-8"))
-        }
-      }
-    }
     spark.stop()
     // Compact totals-only object as the very LAST stdout line (after
     // spark.stop() so no shutdown logging can follow it): the driver's

@@ -4,9 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale-up probe (VERDICT r3 #6): synthesize a seeded ~10× corpus from
-  * an existing SF dir, run the dedup/ANN family on both, and print the
-  * wall-time curve — evidence (not promise) that the banded joins and
-  * O(log n) connected components stay near-linear when the data grows.
+  * an existing SF dir, time the scale-sensitive family on both, and
+  * record the wall-time curve — evidence (not promise) that the banded
+  * joins and O(log n) connected components stay near-linear when the
+  * data grows.
   *
   * The expansion preserves the dup-rate STRUCTURE the operators exist
   * for: per original doc, one exact copy (new id), one ~10%-word-mutated
@@ -15,7 +16,9 @@ import org.apache.spark.sql.functions._
   * mutations are hash-seeded — the corpus is reproducible bit-for-bit.
   *
   * Usage: runMain graft.ScaleProbe [baseSfDir] [outDir]
-  * Writes parquet only under the repo-local outDir (default tmp_scale10).
+  * Writes the 10× parquet under outDir (default tmp_bench10x), then
+  * `BENCH_10x.json` and the STATUS.md table between the BENCH_10X
+  * markers in the working directory.
   */
 object ScaleProbe {
 
@@ -38,9 +41,10 @@ object ScaleProbe {
     * ranks 1..V with P(rank = r) ∝ 1/r — P(rank ≤ x) = ln(x)/ln(V), so
     * rank = ⌊exp(u·ln V)⌋. The base testdata's documents carry a ~31-
     * token vocabulary, which makes any postings×queries TERM join
-    * degenerate quadratically (every term's df ≈ N — `VocabProbe`
-    * quantifies it; the r15 standing row knn_sparse_tfidf "42×/decade"
-    * measured the fixture, not the operator). The scaled probe corpora
+    * degenerate quadratically (every term's df ≈ N — STATUS.md's
+    * Zipfian-vocabulary contrast table quantifies it; the r15 standing
+    * row knn_sparse_tfidf "42×/decade" measured the fixture, not the
+    * operator). The scaled probe corpora
     * therefore regenerate text over a realistic 65 536-word Zipf
     * vocabulary: common terms still exist (df(z1) ≈ N — exactly what
     * df-pruning is FOR), but the tail is heavy and term-join
@@ -101,33 +105,25 @@ object ScaleProbe {
   }
 
   /** Synthesize the seeded 10× corpus from `baseDir` into `outDir`
-    * (idempotent — skipped when the parquet already exists). Shared by
-    * the standalone probe main and Bench's `SPARK_GRAFT_BENCH_10X`
-    * standing-artifact mode. */
-  def ensureCorpus(spark: SparkSession, baseDir: String, outDir: String,
-      tables: Set[String] = Set.empty): Unit = {
+    * (idempotent — each table is skipped when its parquet exists). */
+  def ensureCorpus(spark: SparkSession, baseDir: String, outDir: String)
+      : Unit = {
     import spark.implicits._
-    // `tables` non-empty restricts generation to the named tables — the
-    // PROBE1000 path only needs events + embeddings, and a full 1000×
-    // corpus would spend minutes (and ~15 GB) writing lineitem/orders
-    // nobody reads. Empty set (default) = everything.
-    def wanted(t: String): Boolean = tables.isEmpty || tables.contains(t)
-    if (wanted("documents") &&
-        !new java.io.File(s"$outDir/documents.parquet").exists()) {
+    def missing(t: String): Boolean =
+      !new java.io.File(s"$outDir/$t.parquet").exists()
+    if (missing("documents")) {
       Tables.read(spark, baseDir, "documents").as[Doc]
         .flatMap(d => (0 until 10).map(mutate(d, _)))
         .repartition(32)
         .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
     }
-    if (wanted("embeddings") &&
-        !new java.io.File(s"$outDir/embeddings.parquet").exists()) {
+    if (missing("embeddings")) {
       Tables.read(spark, baseDir, "embeddings").as[Emb]
         .flatMap(e => (0 until 10).map(jitter(e, _)))
         .repartition(32)
         .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
     }
-    if (wanted("events") &&
-        !new java.io.File(s"$outDir/events.parquet").exists()) {
+    if (missing("events")) {
       Tables.read(spark, baseDir, "events").as[Ev]
         .flatMap(e => (0 until 10).map(shift(e, _)))
         .repartition(32)
@@ -140,26 +136,21 @@ object ScaleProbe {
     // cardinality on the probe side grows, dimension sides don't,
     // which is exactly the shape Bloom/CMS exist for); customers
     // copied unchanged as the constant build side. Each table gated on
-    // its OWN name (ADVICE r11: SPARK_GRAFT_PROBE_TABLES=orders passed
-    // validation but generated nothing while everything hid behind the
-    // lineitem gate).
-    if (wanted("lineitem") &&
-        !new java.io.File(s"$outDir/lineitem.parquet").exists()) {
+    // its OWN file.
+    if (missing("lineitem")) {
       Tables.read(spark, baseDir, "lineitem").as[Li]
         .flatMap(l => (0 until 10).map(liRep(l, _)))
         .repartition(32)
         .write.mode("overwrite").parquet(s"$outDir/lineitem.parquet")
     }
-    if (wanted("orders") &&
-        !new java.io.File(s"$outDir/orders.parquet").exists()) {
+    if (missing("orders")) {
       Tables.read(spark, baseDir, "orders").as[Ord]
         .flatMap(o => (0 until 10).map(r =>
           o.copy(o_orderkey = o.o_orderkey * 10 + r)))
         .repartition(32)
         .write.mode("overwrite").parquet(s"$outDir/orders.parquet")
     }
-    if (wanted("customer") &&
-        !new java.io.File(s"$outDir/customer.parquet").exists()) {
+    if (missing("customer")) {
       Tables.read(spark, baseDir, "customer")
         .write.mode("overwrite").parquet(s"$outDir/customer.parquet")
     }
@@ -167,23 +158,21 @@ object ScaleProbe {
     // (the broadcast dim — copied UNCHANGED: fact side grows, dimension
     // side doesn't, the shape broadcast joins exist for); corpora built
     // before this round upgrade in place
-    if (wanted("part") &&
-        !new java.io.File(s"$outDir/part.parquet").exists()) {
+    if (missing("part")) {
       Tables.read(spark, baseDir, "part")
         .write.mode("overwrite").parquet(s"$outDir/part.parquet")
     }
     // round-8 continuation guard: the subquery/semi-anti family reads
     // `supplier` (another unchanged broadcast dim); corpora built before
     // it upgrade in place
-    if (wanted("supplier") &&
-        !new java.io.File(s"$outDir/supplier.parquet").exists()) {
+    if (missing("supplier")) {
       Tables.read(spark, baseDir, "supplier")
         .write.mode("overwrite").parquet(s"$outDir/supplier.parquet")
     }
     // round-9 guard: the Q2/Q7/Q8/Q20 shapes read the `nation`/`region`
     // geography dims (tiny, broadcast, copied unchanged)
     Seq("nation", "region").foreach { t =>
-      if (wanted(t) && !new java.io.File(s"$outDir/$t.parquet").exists()) {
+      if (missing(t)) {
         Tables.read(spark, baseDir, t)
           .write.mode("overwrite").parquet(s"$outDir/$t.parquet")
       }
@@ -359,7 +348,7 @@ object ScaleProbe {
     // its input is the UNSCALED customer dim, and the 64-word synthetic
     // name vocabulary caps q-gram diversity, so a probe row would price
     // the fixture's degenerate gram df, not the operator (the
-    // knn_sparse_tfidf / VocabProbe lesson) — real name corpora carry
+    // knn_sparse_tfidf / Zipfian-contrast lesson) — real name corpora carry
     // gram diversity that grows with the data, which is what bounds the
     // Gravano filter's join fan-out.
     "graph_bfs_depth", "sample_epochs", "x_winsorize", "text_oov_rate",
@@ -377,8 +366,8 @@ object ScaleProbe {
     // pruned read, floats touched at shortlist cardinality only
     "rag_context_pack_pq",
     // production-depth BPE encode: distinct-word contraction + the
-    // constant-plan-size rank-priority expression (depth ladder priced
-    // separately by graft.BpeDepthProbe)
+    // constant-plan-size rank-priority expression (its 8 → 1024 depth
+    // ladder is recorded in STATUS.md, round-17 measurements)
     "text_bpe_encode",
     // Aho–Corasick blocklist: one automaton pass per doc — expected
     // per-row cost flat in lexicon size, ~1×/decade per-row scan
@@ -393,8 +382,8 @@ object ScaleProbe {
     // (x_er_names_gram, gate-checked at sf0.01) is NOT standing-rowed:
     // its candidate join is alphabet-bounded-quadratic by mechanism
     // (~0.1·N² rows at 50k names — a median-3 row grinds for most of an
-    // hour pricing a known exponent); graft.ErGramProbe prices both
-    // schemes' candidate stages single-shot, the VocabProbe pattern.
+    // hour pricing a known exponent); STATUS.md's round-17 entity-
+    // resolution notes compare the two schemes.
     "x_er_names_seg",
     // corpus-vs-corpus retrieval: the NN-descent k-NN graph — O(N·k²)
     // per local-join round (candidates = neighbors-of-neighbors with
@@ -457,14 +446,6 @@ object ScaleProbe {
       case other =>
         throw new IllegalArgumentException(s"unknown build probe: $other")
     }
-
-  /** Median of three cold builds ([[timeBuild]] evicts per run, so every
-    * rep pays the full build — the median absorbs JIT/GC spikes only). */
-  def timeBuildMedian3(
-      spark: SparkSession, name: String, dir: String): (Double, Long) = {
-    val runs = (1 to 3).map(_ => timeBuild(spark, name, dir))
-    (runs.map(_._1).sorted.apply(1), runs.head._2)
-  }
 
   /** Streaming-twin probe rows (r9 item #4): each runs the REAL
     * streaming operator as a parquet file-source stream over the probe
@@ -612,13 +593,6 @@ object ScaleProbe {
     (secs, n)
   }
 
-  /** Median of three drains — same discipline as [[timeMedian3]]. */
-  def timeStreamMedian3(
-      spark: SparkSession, name: String, dir: String): (Double, Long) = {
-    val runs = (1 to 3).map(_ => timeStream(spark, name, dir))
-    (runs.map(_._1).sorted.apply(1), runs.head._2)
-  }
-
   /** Time one declared query against one SF dir: (seconds, rows). Same
     * `toRdd.count()` materialization as Bench (see Bench.scala on why
     * `df.count()` would be wrong). */
@@ -628,99 +602,91 @@ object ScaleProbe {
     ((System.nanoTime() - t0) / 1e9, n)
   }
 
-  /** Median of three timed runs (after the caller's warmup) — the same
-    * discipline as the main bench metric. A single timed run is exposed
-    * to one-off JIT-compile and GC spikes, which at a sub-second steady
-    * state masquerade as scale regressions: `knn_lsh_multitable` at 10×
+  /** Median of three timed runs of `run` (after the caller's warmup) —
+    * the same discipline as the main bench metric: (median seconds, the
+    * first run's rows). A single timed run is exposed to one-off
+    * JIT-compile and GC spikes, which at a sub-second steady state
+    * masquerade as scale regressions: `knn_lsh_multitable` at 10×
     * measured 3.6 s single-shot vs 0.85 s steady (ratio "11.65" vs the
     * real ≈2), with run-to-run spikes reproducibly bimodal. */
-  def timeMedian3(spark: SparkSession, name: String, dir: String): (Double, Long) = {
-    val runs = (1 to 3).map(_ => time(spark, name, dir))
+  def median3(run: => (Double, Long)): (Double, Long) = {
+    val runs = (1 to 3).map(_ => run)
     (runs.map(_._1).sorted.apply(1), runs.head._2)
   }
 
+  /** Rows whose bench medians time a read of a session-stored artifact
+    * priced elsewhere: the `mm_*_near_dup` rows read the pair graph built
+    * by their `*_dedup` siblings, and `web_link_graph` / `web_host_rank`
+    * read the shared link extraction — their build costs are the
+    * [[buildFamily]] cold rows. */
+  val cacheAmortized: Seq[String] = Seq("mm_mp4_near_dup",
+    "mm_video_near_dup", "web_link_graph", "web_host_rank")
+
+  /** Build the 10× corpus under `outDir`, time [[family]],
+    * [[streamFamily]] and [[buildFamily]] on `baseDir` and on it, and
+    * write `BENCH_10x.json` plus the STATUS.md BENCH_10X table. */
   def main(args: Array[String]): Unit = {
     val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val outDir = if (args.length > 1) args(1) else "tmp_scale10"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val outDir = if (args.length > 1) args(1) else "tmp_bench10x"
+    val spark = LocalSession(LocalSession.envCpus)
     spark.sparkContext.setLogLevel("WARN")
-
-    // SPARK_GRAFT_PROBE_TABLES: restrict corpus generation to the named
-    // tables — the PROBE1000 third-decade run only reads events +
-    // embeddings and must not spend ~15 GB on a 1000× lineitem
-    val probeTables = sys.env.getOrElse("SPARK_GRAFT_PROBE_TABLES", "")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSet
-    require(probeTables.subsetOf(Tables.names.toSet),
-      s"unknown table(s) in SPARK_GRAFT_PROBE_TABLES: " +
-        probeTables.diff(Tables.names.toSet).toSeq.sorted.mkString(", "))
-    ensureCorpus(spark, baseDir, outDir, probeTables)
-
-    // SPARK_GRAFT_PROBE_SKIP: comma-separated query names to exclude —
-    // used at the 100× decade for the LICENSED dense-worst-case rows
-    // whose cost is quadratic BY CONSTRUCTION (knn_sparse_tfidf on the
-    // 31-term corpus: query count × corpus both grow 10×/decade, ratio
-    // 39 at 10× — hours at 100×; the realistic-vocabulary scaling
-    // evidence lives in graft.VocabProbe instead).
-    val skip = sys.env.getOrElse("SPARK_GRAFT_PROBE_SKIP", "")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSet
-    if (skip.nonEmpty) println(s"skipping (licensed rows): ${skip.mkString(", ")}")
-    // SPARK_GRAFT_PROBE_ONLY: restrict to named queries — used to append
-    // scale evidence for late-round additions without re-timing the
-    // whole family
-    val only = sys.env.getOrElse("SPARK_GRAFT_PROBE_ONLY", "")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSet
-    // A typo'd name would silently produce an empty/partial probe run
-    // that still exits 0 and looks like complete scale evidence — fail
-    // loudly instead (same for a stale skip-list entry).
-    val familySet = family.toSet ++ streamFamily ++ buildFamily
-    val unknown = (only ++ skip).diff(familySet)
-    require(unknown.isEmpty,
-      s"unknown probe query name(s): ${unknown.toSeq.sorted.mkString(", ")} — " +
-        s"known: ${(family ++ streamFamily ++ buildFamily).mkString(", ")}")
-    val picked =
-      if (only.nonEmpty) family.filter(only) else family.filterNot(skip)
-    val pickedStream =
-      if (only.nonEmpty) streamFamily.filter(only)
-      else streamFamily.filterNot(skip)
-    val pickedBuild =
-      if (only.nonEmpty) buildFamily.filter(only)
-      else buildFamily.filterNot(skip)
-    // SPARK_GRAFT_PROBE_REPS=1 switches to single-shot timing (no warm
-    // run, no median) — for third-decade SPOT probes whose per-run cost
-    // is minutes (JIT noise is then a negligible fraction and the
-    // median discipline would triple a ~10-minute row).
-    val reps = sys.env.getOrElse("SPARK_GRAFT_PROBE_REPS", "3").toInt
-    def measure(q: String, dir: String): (Double, Long) =
-      if (reps <= 1) time(spark, q, dir)
-      else { time(spark, q, dir); timeMedian3(spark, q, dir) }
-    def measureStream(q: String, dir: String): (Double, Long) =
-      if (reps <= 1) timeStream(spark, q, dir)
-      else { timeStream(spark, q, dir); timeStreamMedian3(spark, q, dir) }
-    println(f"${"query"}%-22s ${"base_s"}%8s ${"x10_s"}%8s ${"ratio"}%6s ${"base_rows"}%10s ${"x10_rows"}%10s")
-    picked.foreach { q =>
-      val (tb, nb) = measure(q, baseDir)
-      val (tx, nx) = measure(q, outDir)
-      println(f"$q%-22s $tb%8.2f $tx%8.2f ${tx / tb}%6.1f $nb%10d $nx%10d")
+    ensureCorpus(spark, baseDir, outDir)
+    // STEADY-STATE discipline: warm each (query, dir) once, then take the
+    // median of three timed runs. The warmup absorbs the store-build
+    // asymmetry (a base dir whose shared pair sets and IVF indexes are
+    // already stored next to a cold 10× corpus: single-shot timing
+    // reported that as "ratio 279" on jaccard pairs).
+    def warmMedian3(run: => (Double, Long)): (Double, Long) = {
+      run; median3(run)
     }
-    pickedStream.foreach { q =>
-      val (tb, nb) = measureStream(q, baseDir)
-      val (tx, nx) = measureStream(q, outDir)
-      println(f"$q%-22s $tb%8.2f $tx%8.2f ${tx / tb}%6.1f $nb%10d $nx%10d")
+    def row(q: String)(timed: String => (Double, Long))
+        : (String, Double, Double, Long, Long) = {
+      val (tb, nb) = timed(baseDir)
+      val (tx, nx) = timed(outDir)
+      (q, tb, tx, nb, nx)
     }
-    def measureBuild(q: String, dir: String): (Double, Long) =
-      if (reps <= 1) timeBuild(spark, q, dir)
-      else { timeBuild(spark, q, dir); timeBuildMedian3(spark, q, dir) }
-    pickedBuild.foreach { q =>
-      val (tb, nb) = measureBuild(q, baseDir)
-      val (tx, nx) = measureBuild(q, outDir)
-      println(f"$q%-22s $tb%8.2f $tx%8.2f ${tx / tb}%6.1f $nb%10d $nx%10d")
-    }
+    val rows =
+      family.filter(SparkEntry.queries.contains).map(q =>
+        row(q)(dir => warmMedian3(time(spark, q, dir)))) ++
+      // streaming twins: real file-source streams drained to a memory
+      // sink, so watermarked state paths get scale rows too
+      streamFamily.map(q =>
+        row(q)(dir => warmMedian3(timeStream(spark, q, dir)))) ++
+      // the shared-artifact BUILDS, single-shot cold: a cold build is
+      // unrepeatable in one session without the eviction, and at
+      // seconds-scale JIT noise is a small fraction — the scale evidence
+      // the cache-amortized rows cannot carry
+      buildFamily.map(q => row(q)(dir => timeBuild(spark, q, dir)))
     spark.stop()
+    import Bench.{jstr, writeArtifact, writeLine}
+    val qjson = rows.map { case (q, tb, tx, nb, nx) =>
+      s"${jstr(q)}:{${jstr("base_s")}:${f"$tb%.3f"},${jstr("x10_s")}:${f"$tx%.3f"}," +
+        s"${jstr("ratio")}:${f"${tx / tb}%.2f"},${jstr("base_rows")}:$nb,${jstr("x10_rows")}:$nx}"
+    }.mkString("{", ",", "}")
+    writeLine("BENCH_10x.json",
+      s"""{"metric":"bench_10x","base_sf":${jstr(baseDir)},"n_queries":${rows.size},"queries":$qjson}""")
+    writeArtifact("STATUS.md") {
+      val p = java.nio.file.Paths.get("STATUS.md")
+      val begin = "<!-- BENCH_10X_BEGIN -->"
+      val end = "<!-- BENCH_10X_END -->"
+      val table = (
+        Seq(s"| query | base (s) | 10× (s) | ratio | rows base → 10× |",
+            "|---|---|---|---|---|") ++
+        rows.map { case (q, tb, tx, nb, nx) =>
+          val label = if (cacheAmortized.contains(q)) s"$q †" else q
+          f"| $label | $tb%.2f | $tx%.2f | ${tx / tb}%.1f | $nb%,d → $nx%,d |" }
+        ++ Seq("",
+          "† reads the session-cached pair graph priced in its " +
+            "`*_dedup` sibling — the operator's true cost and scale " +
+            "evidence are the `mm_*_pairs_build` cold rows above.")
+        ).mkString("\n")
+      val md = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+      val (b, e) = (md.indexOf(begin), md.indexOf(end))
+      if (b >= 0 && e > b) {
+        val patched = md.substring(0, b + begin.length) +
+          "\n" + table + "\n" + md.substring(e)
+        java.nio.file.Files.write(p, patched.getBytes("UTF-8"))
+      }
+    }
   }
 }

@@ -771,13 +771,23 @@ object Dedup {
     * [[nearDupClustersFromPairs]]). */
   def dropNearDuplicatesFromPairs(
       pairs: DataFrame, df: DataFrame, idCol: String,
-      textCol: String): DataFrame = {
-    val clusters = nearDupClustersFromPairs(pairs, df, idCol, textCol)
+      textCol: String): DataFrame =
+    dropClusterLosers(df, idCol,
+      nearDupClustersFromPairs(pairs, df, idCol, textCol))
+
+  /** `df` minus every non-representative member of `clusters` — a
+    * (doc_id, cluster_id) labeling whose representative is the member
+    * with doc_id = cluster_id — via [[antiJoinDropSized]]. Takes
+    * ownership of `clusters`: its materialized labels are released once
+    * the anti-join has materialized the losers, and the returned frame
+    * no longer reads them. */
+  private[graft] def dropClusterLosers(
+      df: DataFrame, idCol: String, clusters: DataFrame): DataFrame = {
     val losers = clusters
       .filter(col("doc_id") =!= col("cluster_id"))
       .select(col("doc_id").as("__graft_loser"))
     try antiJoinDropSized(df, idCol, losers)
-    finally org.apache.spark.sql.GraftSql.unpersistCheckpoint(clusters)
+    finally org.apache.spark.sql.GraftSql.unpersistCheckpointTree(clusters)
   }
 
   /** The drop-losers LEFT ANTI join, planned from MEASURED statistics

@@ -496,7 +496,8 @@ object Fuzzy {
   // The 64-word fixture above deliberately CAPS gram diversity (its
   // point is a cheap, collision-free gate); a scale row priced on it
   // would measure the fixture's degenerate gram df, not the operator
-  // (the VocabProbe lesson). erName2 is the probe generator: full names
+  // (the lesson of STATUS.md's Zipfian-vocabulary contrast table).
+  // erName2 is the probe generator: full names
   // with the two statistical properties that govern edit-join fan-out
   // on real person/vendor records —
   //   * a HEAD-HEAVY given name (two-draw octave-Zipf over 2^16 ranks:

@@ -1161,9 +1161,9 @@ object CoreQueries {
     // document frequency ~N/250 (real names carry gram diversity that
     // grows with the data), so the candidate count is quadratic in the
     // fixture's N by construction — the same degenerate-vocabulary
-    // class the sparse-retrieval probes license and VocabProbe
-    // quantifies. 150 entities at sf0.01 still exercise both dirt
-    // classes and the clean path.
+    // class the sparse-retrieval probes license and STATUS.md's
+    // Zipfian-vocabulary contrast table quantifies. 150 entities at
+    // sf0.01 still exercise both dirt classes and the clean path.
     "x_entity_resolution" -> ((s, dir) => {
       val f = graft.llm.Fuzzy
       val c = Tables.read(s, dir, "customer")

@@ -120,6 +120,8 @@ object LlmQueries {
               s"with df > $cap before the pair join"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       p.count() // materialize eagerly so consumers never race the build
+      // p is materialized and nothing else reads the demux checkpoint
+      org.apache.spark.sql.GraftSql.unpersistCheckpoint(fr)
       p
     }
 
@@ -142,6 +144,7 @@ object LlmQueries {
               s"with df > $cap before the pair join"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       p.count() // materialize eagerly so consumers never race the build
+      org.apache.spark.sql.GraftSql.unpersistCheckpoint(sm) // as videoPairs
       p
     }
 
@@ -1686,6 +1689,8 @@ object LlmQueries {
         k = 5, rounds = 2)
       val comp = Dedup.connectedComponents(
         g.filter(col("sim") >= 0.35).select("qid", "nid"), "qid", "nid")
+      // CC materialized its own edge relation: the graph is unread now
+      org.apache.spark.sql.GraftSql.unpersistCheckpointTree(g)
       e.select(col("vec_id"))
         .join(comp.select(col("doc_id").as("vec_id"), col("cluster_id")),
           Seq("vec_id"), "left")
@@ -1988,10 +1993,10 @@ object LlmQueries {
     // loop over the vocabulary-sized table), encoded by the rank-
     // priority native expression over the DISTINCT-WORD contraction
     // with a vocabulary-keyed join back — per-row cost and plan size
-    // independent of merge depth (BpeDepthProbe prices the chain vs
-    // this at 8..1024 merges). The oracle re-derives the same 64
-    // merges through the unrolled SQL trainer and replays the replace
-    // chain, so BOTH the driver-trainer's equality with the
+    // independent of merge depth (STATUS.md's round-17 BPE depth ladder
+    // prices the chain vs this at 8..1024 merges). The oracle re-derives
+    // the same 64 merges through the unrolled SQL trainer and replays the
+    // replace chain, so BOTH the driver-trainer's equality with the
     // distributed trainer AND the priority encode's equality with
     // sequential merge application are hash-gated.
     "text_bpe_encode" -> ((s, dir) =>
@@ -2110,10 +2115,8 @@ object LlmQueries {
         // checkpoint or the decode pipeline runs once per consumer
         .localCheckpoint()
       val pairs = Dedup.hammingPairs64(hashes, hammingMax = 3)
-      val losers = Dedup.connectedComponents(pairs, "id_a", "id_b")
-        .filter(col("doc_id") =!= col("cluster_id"))
-        .select(col("doc_id").as("__graft_loser"))
-      Dedup.antiJoinDropSized(hashes, "doc_id", losers)
+      Dedup.dropClusterLosers(hashes, "doc_id",
+        Dedup.connectedComponents(pairs, "id_a", "id_b"))
         .select("doc_id", "lo", "hi")
     }),
 
@@ -2157,10 +2160,8 @@ object LlmQueries {
         .localCheckpoint() // pair build + survivor probe — one decode pass
       val pairs = Dedup.hammingPairs64(
         fps.select("doc_id", "lo", "hi"), hammingMax = 3)
-      val losers = Dedup.connectedComponents(pairs, "id_a", "id_b")
-        .filter(col("doc_id") =!= col("cluster_id"))
-        .select(col("doc_id").as("__graft_loser"))
-      Dedup.antiJoinDropSized(fps, "doc_id", losers)
+      Dedup.dropClusterLosers(fps, "doc_id",
+        Dedup.connectedComponents(pairs, "id_a", "id_b"))
         .select("doc_id", "fp", "lo", "hi")
     }),
 
@@ -2217,14 +2218,9 @@ object LlmQueries {
     // the dedup consumer: shared-frame pairs → connected components →
     // drop every non-minimum member (the mm_image_dedup skeleton on the
     // video pair graph)
-    "mm_video_dedup" -> ((s, dir) => {
-      val pairs = videoPairs(s, dir)
-      val all = docs(s, dir).select(col("doc_id"))
-      val losers = Dedup.connectedComponents(pairs, "id_a", "id_b")
-        .filter(col("doc_id") =!= col("cluster_id"))
-        .select(col("doc_id").as("__graft_loser"))
-      Dedup.antiJoinDropSized(all, "doc_id", losers)
-    }),
+    "mm_video_dedup" -> ((s, dir) =>
+      Dedup.dropClusterLosers(docs(s, dir).select(col("doc_id")), "doc_id",
+        Dedup.connectedComponents(videoPairs(s, dir), "id_a", "id_b"))),
 
     // ISO-BMFF SAMPLE-TABLE demux over real MP4 containers (ftyp/mdat/
     // moov with stsd/stts/stsc/stsz/stco): every codec sample located
@@ -2250,14 +2246,9 @@ object LlmQueries {
 
     // the dedup consumer: shared-sample pairs → connected components →
     // drop non-minimum members (same pair graph, session-cached)
-    "mm_mp4_dedup" -> ((s, dir) => {
-      val pairs = mp4Pairs(s, dir)
-      val all = docs(s, dir).select(col("doc_id"))
-      val losers = Dedup.connectedComponents(pairs, "id_a", "id_b")
-        .filter(col("doc_id") =!= col("cluster_id"))
-        .select(col("doc_id").as("__graft_loser"))
-      Dedup.antiJoinDropSized(all, "doc_id", losers)
-    }),
+    "mm_mp4_dedup" -> ((s, dir) =>
+      Dedup.dropClusterLosers(docs(s, dir).select(col("doc_id")), "doc_id",
+        Dedup.connectedComponents(mp4Pairs(s, dir), "id_a", "id_b"))),
 
     // WEB-CRAWL URL canonicalization (round 12): the normalization pass
     // a crawl pipeline runs BEFORE text dedup — scheme/host lowering,

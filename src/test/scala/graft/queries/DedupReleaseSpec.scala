@@ -1,0 +1,68 @@
+package graft.queries
+
+import java.nio.file.{Files, Path, Paths}
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.GraftSql
+
+import graft.{Artifacts, SparkEntry, SparkSpec, Tables}
+
+/** Storage hygiene of the registry's pairs → components → anti-join
+  * builders and of the media pair-graph builds, on temp copies of
+  * sf0.001's documents and embeddings: once a query's output is
+  * released, nothing it persisted is left; a pair-graph build pins only
+  * the stored relation, which the store's eviction releases. */
+class DedupReleaseSpec extends SparkSpec {
+
+  private def persisted: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  private val tempDirs = scala.collection.mutable.Buffer[Path]()
+
+  override def afterAll(): Unit =
+    try tempDirs.foreach { dir =>
+      Seq("documents", "embeddings").foreach(t =>
+        Tables.invalidateCache(s"$dir/$t.parquet"))
+      FileUtils.deleteDirectory(dir.toFile)
+    } finally super.afterAll()
+
+  private def tempCopy(): String = {
+    val dir = Files.createTempDirectory("dedup-release")
+    tempDirs += dir
+    Seq("documents", "embeddings").foreach(t =>
+      Files.copy(Paths.get(sf(), s"$t.parquet"), dir.resolve(s"$t.parquet")))
+    dir.toString
+  }
+
+  // the stored pair graphs the video and MP4 dedup queries read are
+  // built before any baseline is taken
+  private lazy val warmDir: String = {
+    val dir = tempCopy()
+    LlmQueries.videoPairs(spark, dir)
+    LlmQueries.mp4Pairs(spark, dir)
+    dir
+  }
+
+  for (name <- Seq("mm_image_dedup", "mm_audio_dedup", "mm_video_dedup",
+      "mm_mp4_dedup", "dedup_semdedup_graph"))
+    test(s"$name leaves nothing persisted once its output is released") {
+      val dir = warmDir
+      val before = persisted
+      val out = SparkEntry.queries(name)(spark, dir)
+      assert(out.queryExecution.toRdd.count() > 0)
+      GraftSql.unpersistCheckpointTree(out)
+      assert(persisted -- before == Set.empty)
+    }
+
+  for ((kind, build) <- Seq[(String, String => Any)](
+      "videoPairs" -> (LlmQueries.videoPairs(spark, _)),
+      "mp4Pairs" -> (LlmQueries.mp4Pairs(spark, _))))
+    test(s"$kind pins only its stored relation, released by eviction") {
+      val dir = tempCopy()
+      val before = persisted
+      build(dir)
+      assert((persisted -- before).size == 1)
+      Artifacts.evict(spark, Set(kind))
+      assert(persisted -- before == Set.empty)
+    }
+}
