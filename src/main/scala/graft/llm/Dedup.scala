@@ -1,8 +1,11 @@
 package graft.llm
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import TextOps._
 
@@ -89,7 +92,16 @@ object Dedup {
     * that kills the naive join is pruned by construction. */
   def jaccardShinglePairs(
       df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, tau: Double = 0.5): DataFrame = {
+      n: Int = 3, tau: Double = 0.5): DataFrame =
+    jaccardPairsOwned(df, idCol, textCol, n, tau)._1
+
+  /** [[jaccardShinglePairs]] with the two `localCheckpoint`ed frames its
+    * pairs read (the shingle sets and the prefix index): a caller that
+    * materializes everything it needs from the pairs releases exactly
+    * these, by identity, with `GraftSql.unpersistCheckpoint`. */
+  private def jaccardPairsOwned(
+      df: DataFrame, idCol: String, textCol: String,
+      n: Int, tau: Double): (DataFrame, Seq[DataFrame]) = {
     val sets = shingleSets(df, idCol, textCol, n)
     // Exploded view WITH the size carried along — explode of a per-row
     // array, so (unlike the round-2 groupBy-then-join-back) deriving
@@ -127,7 +139,7 @@ object Dedup {
           least(col("a.sz") - col("a.rk"), col("b.sz") - col("b.rk")) + 1 >= alpha)
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .distinct()
-    cands
+    val pairs = cands
       .join(sets.select(col("doc_id").as("id_a"), col("s32").as("sa")), "id_a")
       .join(sets.select(col("doc_id").as("id_b"), col("s32").as("sb")), "id_b")
       .withColumn("inter", size(array_intersect(col("sa"), col("sb"))))
@@ -138,6 +150,7 @@ object Dedup {
           (col("size_a") + col("size_b") - col("inter")), 6))
       .filter(col("jaccard") >= tau)
       .select("id_a", "id_b", "inter", "size_a", "size_b", "jaccard")
+    (pairs, Seq(sets, prefix))
   }
 
   /** INCREMENTAL ingestion dedup, pair stage: cross-side Jaccard pairs
@@ -406,18 +419,12 @@ object Dedup {
       maxIter: Int = 50): DataFrame = {
     import org.apache.spark.sql.GraftSql.{sizedView, unpersistCheckpoint,
       unpersistCheckpointTree}
-    val aType = pairs.schema(aCol).dataType
-    val bType = pairs.schema(bCol).dataType
-    require(aType == bType,
-      s"id columns must share a type; got $aCol: $aType, $bCol: $bType")
+    pairIdType(pairs, aCol, bCol)
     val e = pairs.select(col(aCol).as("a"), col(bCol).as("b"))
     val (edges, nulls) = sizedView(
-      e.union(e.select(col("b").as("a"), col("a").as("b"))),
-      r => if (r.isNullAt(0) || r.isNullAt(1)) 1L else 0L)
+      e.union(e.select(col("b").as("a"), col("a").as("b"))), nullEnds)
     try {
-      require(nulls == 0L,
-        s"connectedComponents: NULL ids in ($aCol, $bCol) — NULL never " +
-          "equi-joins, so its edges would silently vanish; filter or fix ids")
+      require(nulls == 0L, nullIdsMessage(aCol, bCol))
       val init = sizedView(edges.select(col("a").as("id")).distinct()
         .select(col("id"), col("id").as("lbl")))
       // scalar: labels changed by the round (-1 before the first)
@@ -506,52 +513,163 @@ object Dedup {
       .select("id", "rep")
   }
 
-  /** [[connectedComponents]] with CLIQUE PRE-CONTRACTION: nodes known to
-    * be mutually connected (exact duplicates, via `repMap: (id, rep)`)
-    * are collapsed to their representative BEFORE the iterative CC, and
-    * the component labels fan back out afterwards. On a duplicate-heavy
+  /** The shared id type of the pair columns `aCol` and `bCol`. */
+  private def pairIdType(
+      pairs: DataFrame, aCol: String, bCol: String): DataType = {
+    val aType = pairs.schema(aCol).dataType
+    val bType = pairs.schema(bCol).dataType
+    require(aType == bType,
+      s"id columns must share a type; got $aCol: $aType, $bCol: $bType")
+    aType
+  }
+
+  /** `sizedView` fold over (a, b) rows: 1 for a row with a NULL id. */
+  private val nullEnds: InternalRow => Long =
+    r => if (r.isNullAt(0) || r.isNullAt(1)) 1L else 0L
+
+  private def nullIdsMessage(aCol: String, bCol: String): String =
+    s"connectedComponents: NULL ids in ($aCol, $bCol) — NULL never " +
+      "equi-joins, so its edges would silently vanish; filter or fix ids"
+
+  /** Connected components of a pair graph, planned from its MEASURED
+    * size: one job materializes the (a, b) projection
+    * (`GraftSql.sizedView`), counting NULL ids on the way, and the exact
+    * byte size picks the route.
+    *
+    * '''Driver route''' — the pairs fit Spark's broadcast bound
+    * (`GraftSql.fitsBroadcast`: `0 ≤ bytes ≤
+    * spark.sql.autoBroadcastJoinThreshold`, so -1 never fits) and the id
+    * type has value equality and a Spark ordering on the driver
+    * (integral, date, timestamp, decimal, boolean, binary-collation
+    * string). One more job collects the pairs; [[driverComponents]]
+    * union-finds them and the labels come back as a local relation.
+    * These are the bytes a broadcast join would collect anyway, and none
+    * of the contraction's or the label rounds' jobs run.
+    *
+    * '''Distributed route''' — everything else: CLIQUE PRE-CONTRACTION,
+    * then the iterative [[connectedComponents]]. Nodes known to be
+    * mutually connected (exact duplicates, via `repMap: (id, rep)`) are
+    * collapsed to their representative BEFORE the iterative CC, and the
+    * component labels fan back out afterwards. On a duplicate-heavy
     * corpus (the regime where near-dup dedup matters) this shrinks the
     * CC input by the duplicate factor — the 100× stress probe's dup-soup
     * graph is near-complete, and a complete subgraph of k exact copies
     * contributes k·(k-1)/2 edges that propagation would otherwise chew
-    * through every round.
+    * through every round. Lossless: contracting edges between
+    * already-connected nodes preserves components, and because each rep
+    * IS the min id of its clique, the contracted component's min-label
+    * equals the original component's min doc id. Docs whose clique has
+    * no external edge get their rep as the label directly. `maxIter`
+    * bounds this route's label rounds only; the driver route runs no
+    * rounds and never reads `repMap`.
     *
-    * Lossless: contracting edges between already-connected nodes
-    * preserves components, and because each rep IS the min id of its
-    * clique, the contracted component's min-label equals the original
-    * component's min doc id. Docs whose clique has no external edge get
-    * their rep as the label directly. */
+    * Both routes return the same relation — every pair-graph node with
+    * its component's minimum id, `(doc_id, cluster_id)` in the ids'
+    * column type — and both reject NULL ids with [[connectedComponents]]'
+    * message. Neither leaves the pair materialization persisted. */
   def connectedComponentsContracted(
       pairs: DataFrame, aCol: String, bCol: String,
       repMap: DataFrame, maxIter: Int = 50): DataFrame = {
-    // pairs feed TWO consumers (node set + edge contraction): materialize
-    // once — recomputing the full pair pipeline per consumer cost more
-    // than the contraction saved on low-dup corpora
-    val p = org.apache.spark.sql.GraftSql.persistedView(
-      pairs.select(col(aCol), col(bCol)))
+    import org.apache.spark.sql.GraftSql.{fitsBroadcast, sizedView,
+      unpersistCheckpoint}
+    val idType = pairIdType(pairs, aCol, bCol)
+    // pairs feed TWO consumers on the distributed route (node set + edge
+    // contraction): materialize once — recomputing the full pair
+    // pipeline per consumer cost more than the contraction saved on
+    // low-dup corpora
+    val (p, nulls) = sizedView(pairs.select(col(aCol), col(bCol)), nullEnds)
+    if (nulls != 0L) unpersistCheckpoint(p)
+    require(nulls == 0L, nullIdsMessage(aCol, bCol))
+    try {
+      if (fitsBroadcast(p) && driverOrdered(idType)) driverComponents(p, idType)
+      else contractedComponents(p, aCol, bCol, repMap, maxIter)
+    } finally unpersistCheckpoint(p)
+  }
+
+  /** [[connectedComponentsContracted]]'s distributed route over the
+    * materialized pair view `p`. */
+  private def contractedComponents(
+      p: DataFrame, aCol: String, bCol: String,
+      repMap: DataFrame, maxIter: Int): DataFrame = {
+    import org.apache.spark.sql.GraftSql.{persistedView, unpersistCheckpoint,
+      unpersistCheckpointTree}
     val nodes = p.select(col(aCol).as("id"))
       .union(p.select(col(bCol).as("id"))).distinct()
     // every pair-graph node's representative (itself when not an exact dup)
-    val nr = org.apache.spark.sql.GraftSql.persistedView(
+    val nr = persistedView(
       nodes.join(repMap, Seq("id"), "left")
         .select(col("id"), coalesce(col("rep"), col("id")).as("rep")))
-    val contracted = p
-      .join(nr.select(col("id").as(aCol), col("rep").as("__ra")), aCol)
-      .join(nr.select(col("id").as(bCol), col("rep").as("__rb")), bCol)
-      .filter(col("__ra") =!= col("__rb")) // clique-internal edges vanish
-      .select(col("__ra"), col("__rb")).distinct()
-    val cc = connectedComponents(contracted, "__ra", "__rb", maxIter)
-      .select(col("doc_id").as("rep"), col("cluster_id"))
-    // fan out: clique members inherit their rep's component label; cliques
-    // with no external edges ARE their own component, labeled by the rep
-    val out = nr.join(cc, Seq("rep"), "left")
-      .select(col("id").as("doc_id"),
-        coalesce(col("cluster_id"), col("rep")).as("cluster_id"))
-      .localCheckpoint() // materialize before releasing what it read
-    org.apache.spark.sql.GraftSql.unpersistCheckpointTree(cc)
-    org.apache.spark.sql.GraftSql.unpersistCheckpoint(nr)
-    org.apache.spark.sql.GraftSql.unpersistCheckpoint(p)
-    out
+    try {
+      val contracted = p
+        .join(nr.select(col("id").as(aCol), col("rep").as("__ra")), aCol)
+        .join(nr.select(col("id").as(bCol), col("rep").as("__rb")), bCol)
+        .filter(col("__ra") =!= col("__rb")) // clique-internal edges vanish
+        .select(col("__ra"), col("__rb")).distinct()
+      val cc = connectedComponents(contracted, "__ra", "__rb", maxIter)
+        .select(col("doc_id").as("rep"), col("cluster_id"))
+      // fan out: clique members inherit their rep's component label;
+      // cliques with no external edges ARE their own component, labeled
+      // by the rep
+      val out = nr.join(cc, Seq("rep"), "left")
+        .select(col("id").as("doc_id"),
+          coalesce(col("cluster_id"), col("rep")).as("cluster_id"))
+        .localCheckpoint() // materialize before releasing what it read
+      unpersistCheckpointTree(cc)
+      out
+    } finally unpersistCheckpoint(nr)
+  }
+
+  /** Id types whose driver values (Catalyst internal values) have value
+    * equality and a Spark ordering that agrees with join equality —
+    * floats (±0.0), binary and nested types are left out. */
+  private def driverOrdered(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType | DateType |
+        TimestampType | TimestampNTZType | BooleanType => true
+    case _: DecimalType => true
+    case StringType => true // the default UTF8_BINARY collation only
+    case _ => false
+  }
+
+  /** [[connectedComponentsContracted]]'s driver route over the
+    * materialized pair view `p` (two non-NULL `t` columns): one job
+    * collects its rows, then union-find runs over dense node indices.
+    * Nodes are numbered in Spark's ordering for `t` (sorted, not hashed),
+    * so pointing the larger root at the smaller leaves every root at its
+    * component's minimum id — `min`'s answer, string ids included
+    * (UTF-8 binary order, not `String.compareTo`). State is a few arrays
+    * over the endpoints, a small multiple of `p`'s measured bytes. */
+  private def driverComponents(p: DataFrame, t: DataType): DataFrame = {
+    val ord = TypeUtils.getInterpretedOrdering(t)
+    val cmp: java.util.Comparator[AnyRef] = (x, y) => ord.compare(x, y)
+    val rows = p.queryExecution.toRdd.map(_.copy()).collect()
+    val ends = new Array[AnyRef](2 * rows.length)
+    for (i <- rows.indices; j <- 0 to 1) ends(2 * i + j) = rows(i).get(j, t)
+    // distinct endpoints in ascending order: sort, then compact in place
+    val nodes = ends.clone()
+    java.util.Arrays.sort(nodes, cmp)
+    var n = 0
+    for (i <- nodes.indices)
+      if (n == 0 || cmp.compare(nodes(n - 1), nodes(i)) != 0) {
+        nodes(n) = nodes(i); n += 1
+      }
+    val parent = Array.range(0, n)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    def index(v: AnyRef): Int =
+      java.util.Arrays.binarySearch(nodes, 0, n, v, cmp)
+    for (e <- ends.indices by 2) {
+      val ra = find(index(ends(e)))
+      val rb = find(index(ends(e + 1)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    val nullable = p.schema.exists(_.nullable)
+    val schema = StructType(Seq(StructField("doc_id", t, nullable),
+      StructField("cluster_id", t, nullable)))
+    org.apache.spark.sql.GraftSql.localRelation(p.sparkSession, schema,
+      (0 until n).map(k => InternalRow(nodes(k), nodes(find(k)))))
   }
 
   /** [[connectedComponents]] for pair graphs whose edges are CONFINED to
@@ -587,11 +705,7 @@ object Dedup {
   def connectedComponentsPerKey(
       pairs: DataFrame, aCol: String, bCol: String,
       keyCol: String): DataFrame = {
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    val idType = pairs.schema(aCol).dataType
-    require(idType == pairs.schema(bCol).dataType,
-      s"id columns must share a type; got $aCol: $idType, " +
-        s"$bCol: ${pairs.schema(bCol).dataType}")
+    val idType = pairIdType(pairs, aCol, bCol)
     require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
       s"connectedComponentsPerKey needs integral ids, got $idType — " +
         "use connectedComponents for arbitrary orderable ids")
@@ -631,21 +745,27 @@ object Dedup {
       .select(col("doc_id").cast(idType), col("cluster_id").cast(idType))
   }
 
-  /** Near-dup cluster assignment over the exact-Jaccard pair graph with
-    * exact-dup cliques pre-contracted — the production path behind
-    * `dedup_clusters` and [[dropNearDuplicates]]. Identical output to
-    * `connectedComponents(jaccardShinglePairs(...))`, cheaper on
-    * duplicate-heavy corpora. */
+  /** Near-dup cluster assignment over the exact-Jaccard pair graph — the
+    * production path behind `dedup_clusters` and [[dropNearDuplicates]].
+    * Identical output to `connectedComponents(jaccardShinglePairs(...))`.
+    * The returned labels are materialized, so the pairs' shingle-set and
+    * prefix-index checkpoints are released before it returns. */
   def nearDupClusters(
       df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, tau: Double = 0.5): DataFrame =
-    nearDupClustersFromPairs(
-      jaccardShinglePairs(df, idCol, textCol, n, tau), df, idCol, textCol)
+      n: Int = 3, tau: Double = 0.5): DataFrame = {
+    val (pairs, owned) = jaccardPairsOwned(df, idCol, textCol, n, tau)
+    try nearDupClustersFromPairs(pairs, df, idCol, textCol)
+    finally owned.foreach(org.apache.spark.sql.GraftSql.unpersistCheckpoint)
+  }
 
   /** [[nearDupClusters]] over PRECOMPUTED pairs — the build-once shape:
     * one pair materialization serves pair emission, clustering and
     * dedup (deterministic inputs ⇒ identical results, one shuffle paid
-    * instead of three). */
+    * instead of three). Runs [[connectedComponentsContracted]]: a pair
+    * graph that measures within the broadcast bound is union-found on
+    * the driver; a larger one has its exact-dup cliques (`df`'s
+    * normalized-text md5 groups) contracted before the label rounds.
+    * Either way the result is materialized and no longer reads `pairs`. */
   def nearDupClustersFromPairs(
       pairs: DataFrame, df: DataFrame, idCol: String,
       textCol: String): DataFrame =
@@ -754,18 +874,25 @@ object Dedup {
   /** End-to-end near-dup dedup MATERIALIZATION: the input rows minus
     * non-representative cluster members — i.e. each near-dup cluster
     * keeps exactly its smallest-id document, everything unclustered
-    * passes through. Pairs → components → LEFT ANTI join with NO
-    * broadcast hint: the loser set is the DUPLICATE SET, and at
-    * web-crawl dup density (30–50 %) that is corpus-proportional — a
-    * forced hint (which Spark always honors on an equi-anti-join) would
-    * collect it to the driver and OOM at scale. AQE picks broadcast at
-    * runtime when the loser side actually fits, which on a typical
-    * single-digit-percent-dup corpus it does — same plan, no cliff. */
+    * passes through. Pairs → components → LEFT ANTI:
+    *  - pairs: [[jaccardShinglePairs]];
+    *  - components: [[nearDupClustersFromPairs]] — union-find on the
+    *    driver when the pair graph measures within the broadcast bound,
+    *    contraction plus label rounds otherwise. The labels come back
+    *    materialized, so the pairs' two checkpoints (shingle sets, prefix
+    *    index) are released right there: this call created them and
+    *    nothing else reads them;
+    *  - LEFT ANTI: [[dropClusterLosers]], with NO broadcast hint: the
+    *    loser set is the DUPLICATE SET, and at web-crawl dup density
+    *    (30–50 %) that is corpus-proportional — a forced hint (which
+    *    Spark always honors on an equi-anti-join) would collect it to
+    *    the driver and OOM at scale. The loser set's measured size picks
+    *    broadcast when it fits — no cliff.
+    * The returned frame reads only `df` and the materialized losers. */
   def dropNearDuplicates(
       df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, tau: Double = 0.5): DataFrame =
-    dropNearDuplicatesFromPairs(
-      jaccardShinglePairs(df, idCol, textCol, n, tau), df, idCol, textCol)
+    dropClusterLosers(df, idCol, nearDupClusters(df, idCol, textCol, n, tau))
 
   /** [[dropNearDuplicates]] over precomputed pairs (see
     * [[nearDupClustersFromPairs]]). */

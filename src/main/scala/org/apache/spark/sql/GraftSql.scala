@@ -94,6 +94,29 @@ object GraftSql {
     (view, parts.map(_._3).sum)
   }
 
+  /** Whether `df`'s plan statistics fit the broadcast-join bound — the
+    * `0 ≤ sizeInBytes ≤ spark.sql.autoBroadcastJoinThreshold` rule
+    * static join selection applies before it collects a broadcast side
+    * (so a threshold of -1 never fits). Meant for a [[sizedView]], whose
+    * size is measured, not estimated. */
+  def fitsBroadcast(df: DataFrame): Boolean = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
+    BroadcastRule.canBroadcastBySize(
+      ds.queryExecution.analyzed, ds.sparkSession.sessionState.conf)
+  }
+
+  private object BroadcastRule
+    extends org.apache.spark.sql.catalyst.optimizer.JoinSelectionHelper
+
+  /** A frame over driver-held rows (a `LocalRelation`): `rows` carry
+    * Catalyst internal values in `schema`'s column order. */
+  def localRelation(
+      spark: SparkSession, schema: org.apache.spark.sql.types.StructType,
+      rows: Seq[InternalRow]): DataFrame =
+    ofRows(spark, org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+      org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema),
+      rows))
+
   /** Release the storage blocks behind a [[persistedView]] (or
     * `localCheckpoint()`ed) DataFrame. Iterative algorithms that
     * materialize per round would otherwise accumulate one superseded

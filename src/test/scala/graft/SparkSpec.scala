@@ -11,12 +11,21 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 
-  /** Runs `body` with the session time zone set to `zone`. */
-  def withSessionZone[T](zone: String)(body: => T): T = {
-    val prior = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", zone)
-    try body finally spark.conf.set("spark.sql.session.timeZone", prior)
+  /** Runs `body` with each session conf in `pairs` set, then restores
+    * (or unsets) each one. */
+  def withConf[T](pairs: (String, String)*)(body: => T): T = {
+    val saved = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
   }
+
+  /** Runs `body` with the session time zone set to `zone`. */
+  def withSessionZone[T](zone: String)(body: => T): T =
+    withConf("spark.sql.session.timeZone" -> zone)(body)
 
   /** Count every Spark job launched while running `f`. (Call-site
     * matching is useless here: Spark 4 submits collect stages through

@@ -40,16 +40,6 @@ class IvfSkewSpec extends SparkSpec {
     here
   }
 
-  private def withConf[A](pairs: (String, String)*)(body: => A): A = {
-    val saved = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   test("AQE splits the hot-cell partition of the IVF pair join, " +
       "results unchanged") {
     val idx = hotCellIndex(4000)

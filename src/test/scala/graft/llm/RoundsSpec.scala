@@ -177,9 +177,36 @@ class RoundsSpec extends SparkSpec {
     val before = persisted
     val kept = Dedup.dropNearDuplicates(docs, "doc_id", "text")
     release(kept)
-    // jaccardShinglePairs' two localCheckpoints back the pair frame
+    // jaccardShinglePairs' two localCheckpoints are released by the call
+    // that made them, once the clusters are materialized
     val left = persisted -- before
     left.foreach(spark.sparkContext.getPersistentRDDs(_).unpersist())
-    assert(left.size == 2)
+    assert(left.isEmpty)
+  }
+
+  test("near-dup clusters: 4 own jobs on the driver route, 9 when " +
+      "distributed; dropping near-duplicates adds 1") {
+    val docs = graft.Tables.read(spark, sf("sf0.001"), "documents")
+    // the kind of each own job ("sizedView at Dedup.scala:580" → sizedView)
+    def kinds(f: => DataFrame): Seq[String] = {
+      var out: DataFrame = null
+      val own = ownJobs { out = f }
+      release(out)
+      own.map(_.takeWhile(_ != ' ')).sorted
+    }
+    def clusters = Dedup.nearDupClusters(docs, "doc_id", "text")
+    def drop = Dedup.dropNearDuplicates(docs, "doc_id", "text")
+    // the shingle sets and prefix index, the sized pair view, its collect
+    assert(kinds(clusters) ==
+      Seq("collect", "localCheckpoint", "localCheckpoint", "sizedView"))
+    // ... and the sized loser set
+    assert(kinds(drop) == (kinds(clusters) :+ "sizedView").sorted)
+    // a bound of -1 forces the distributed route: the same two checkpoints
+    // and pair view, the node representatives, the edges, initial labels
+    // and 2 rounds of connectedComponents, and the fan-out's checkpoint
+    val (dc, dd) = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(
+      (kinds(clusters), kinds(drop)))
+    assert(dc.size == 9, dc.mkString(", "))
+    assert(dd.size == 10, dd.mkString(", "))
   }
 }
