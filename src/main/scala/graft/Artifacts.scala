@@ -5,7 +5,8 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, GraftSql, SparkSession}
+import org.apache.spark.sql.{Dataset, GraftSql, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** The one store of artifacts derived from a table snapshot: resolved
   * parquet schemas ([[Tables]]), persisted relations (pair graphs, ANN
@@ -26,9 +27,10 @@ import org.apache.spark.sql.{DataFrame, GraftSql, SparkSession}
   *  - Stopped sessions. Entries whose session's SparkContext is stopped
   *    are dropped on the next call (their blocks died with the context),
   *    so the store pins no stopped session.
-  *  - Release. Each entry carries its own release action: [[unpersist]]
-  *    for persisted relations, [[unpersistCheckpoint]] for
-  *    `GraftSql.persistedView` frames, [[keep]] for driver-side models.
+  *  - Release, one rule for every entry: a stored DataFrame is uncached
+  *    when it is a cached relation (`storageLevel` set), else its
+  *    `LogicalRDD` leaf (a `GraftSql.sizedView`) is unpersisted; any
+  *    other value (a driver-side model) needs no release.
   *  - Builds nest (`curationDrops` builds `jaccardPairs`; every relation
   *    build reads through [[Tables]], hence through this store), so a
   *    build never runs inside the shared map's `compute`: the map holds a
@@ -42,14 +44,14 @@ import org.apache.spark.sql.{DataFrame, GraftSql, SparkSession}
   * DetectAmbiguousSelfJoin). */
 private[graft] object Artifacts {
 
-  /** Releases one artifact; the flag asks for a blocking release. */
-  type Release = (Any, Boolean) => Unit
-
-  val keep: Release = (_, _) => ()
-  val unpersist: Release =
-    (df, blocking) => df.asInstanceOf[DataFrame].unpersist(blocking)
-  val unpersistCheckpoint: Release =
-    (df, _) => GraftSql.unpersistCheckpoint(df.asInstanceOf[DataFrame])
+  /** Releases one artifact; `blocking` applies to cached relations. */
+  private def release(artifact: Any, blocking: Boolean): Unit =
+    artifact match {
+      case ds: Dataset[_] if ds.storageLevel != StorageLevel.NONE =>
+        ds.unpersist(blocking)
+      case ds: Dataset[_] => GraftSql.unpersistCheckpoint(ds.toDF())
+      case _ => ()
+    }
 
   /** An artifact built at most once, by the first caller that forces it.
     * A released value is kept: a caller still holding the cell reads a
@@ -61,14 +63,14 @@ private[graft] object Artifacts {
       if (value.isEmpty) value = Some(build())
       value.get
     }
-    def release(r: Release, blocking: Boolean): Unit =
-      synchronized(value.foreach(r(_, blocking)))
+    def release(blocking: Boolean): Unit =
+      synchronized(value.foreach(Artifacts.release(_, blocking)))
   }
 
-  private final class Snapshot(val fp: String, onRelease: Release) {
+  private final class Snapshot(val fp: String) {
     val cells = new ConcurrentHashMap[Any, Cell]()
     def release(blocking: Boolean): Unit =
-      cells.values.asScala.foreach(_.release(onRelease, blocking))
+      cells.values.asScala.foreach(_.release(blocking))
   }
 
   private val entries =
@@ -87,9 +89,9 @@ private[graft] object Artifacts {
 
   /** The `kind` artifact of the table at `path` under `params`: served
     * from this session's snapshot of the table if its fingerprint still
-    * matches, else built once by `build` and released by `release`. */
-  def apply[A](s: SparkSession, kind: String, path: String, params: Any = (),
-      release: Release = keep)(build: => A): A = {
+    * matches, else built once by `build`. */
+  def apply[A](s: SparkSession, kind: String, path: String, params: Any = ())(
+      build: => A): A = {
     dropStopped()
     val fp = fingerprint(s, path)
     var superseded: Option[Snapshot] = None
@@ -97,7 +99,7 @@ private[graft] object Artifacts {
       if (cur != null && cur.fp == fp) cur
       else {
         superseded = Option(cur)
-        new Snapshot(fp, release)
+        new Snapshot(fp)
       })
     superseded.foreach(_.release(blocking = false))
     snap.cells.computeIfAbsent(params, _ => new Cell(() => build))

@@ -77,16 +77,18 @@ final class OnlineStore(
       .drop("__graft_rn")
     // Materialize eagerly: the store's contract is "a write is durable
     // once write() returns" — and it decouples reads from the (possibly
-    // temp-view-backed) batch plan. One row per key: always small.
-    val persisted = org.apache.spark.sql.GraftSql.persistedView(merged)
+    // temp-view-backed) batch plan. One row per key: always small. The
+    // same job counts the keys for the serving-cache bound.
+    val (persisted, keys) =
+      org.apache.spark.sql.GraftSql.sizedView(merged, _ => 1L)
     state.foreach(org.apache.spark.sql.GraftSql.unpersistCheckpoint)
     state = Some(persisted)
     // Refresh the serving cache only when it fits the bound: one collect
-    // per WRITE, zero jobs per read. `servingCacheKeys = 0` short-circuits
-    // before the count — a cache-off write runs NO driver-bound action at
-    // all (asserted by OnlineStoreSpec's collect-free-write test).
+    // per WRITE, zero jobs per read. A cache-off write
+    // (`servingCacheKeys = 0`) runs NO driver-bound action at all
+    // (asserted by OnlineStoreSpec's collect-free-write test).
     cache =
-      if (servingCacheKeys > 0 && persisted.count() <= servingCacheKeys)
+      if (servingCacheKeys > 0 && keys <= servingCacheKeys)
         (persisted.collect().map { r =>
           val fields = r.schema.fieldNames.map(f => f -> r.getAs[Any](f)).toMap
           joinKeys.map(fields(_)) -> fields

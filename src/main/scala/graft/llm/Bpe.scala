@@ -69,44 +69,47 @@ object Bpe {
   final case class Merge(rank: Int, lhs: String, rhs: String, freq: Long)
 
   /** Learn `nMerges` merges over `corpus(textCol)`. Stops early if the
-    * vocabulary runs out of adjacent pairs (degenerate corpora). */
+    * vocabulary runs out of adjacent pairs (degenerate corpora).
+    *
+    * Runs on [[Rounds]]: the vocabulary relation is re-read every round,
+    * so it is materialized, and so is each round's merged successor
+    * (lineage would otherwise grow one replace per round AND re-run the
+    * corpus tokenization). Each materialization also counts the words
+    * whose symbol string still holds two symbols (a doubled inner
+    * separator); the next round's top pair exists exactly when that
+    * count is nonzero, so the count is the loop's stop scalar. */
   def train(corpus: DataFrame, textCol: String, nMerges: Int): Seq[Merge] = {
     require(nMerges >= 1, "need nMerges >= 1")
-    import org.apache.spark.sql.GraftSql.{persistedView, unpersistCheckpoint}
-    // the vocabulary relation is re-read every round: checkpoint it, and
-    // checkpoint each round's merged successor (lineage would otherwise
-    // grow one replace per round AND re-run the corpus tokenization)
-    var cur = persistedView(symInit(corpus, textCol))
+    import org.apache.spark.sql.GraftSql.{sizedView, unpersistCheckpoint}
+    val inner = org.apache.spark.unsafe.types.UTF8String.fromString(Sep + Sep)
+    val pairable: org.apache.spark.sql.catalyst.InternalRow => Long =
+      r => if (r.getUTF8String(1).contains(inner)) 1L else 0L
     val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
-    var exhausted = false
-    for (rank <- 1 to nMerges if !exhausted) {
-      val syms = cur.withColumn("__syms",
-        split(regexp_replace(col("__s"), s"^$Sep|$Sep$$", ""), Sep + Sep))
-      // adjacent pairs, weighted by word frequency; argmax via a
-      // distributed TakeOrdered(1) on the (freq DESC, l, r) total order
-      val top = syms
-        .filter(size(col("__syms")) >= 2)
-        .select(col("__wcnt"), explode(expr(
-          "transform(sequence(1, size(__syms) - 1), " +
-            "i -> struct(__syms[i-1] AS l, __syms[i] AS r))")).as("__p"))
-        .groupBy(col("__p.l").as("__l"), col("__p.r").as("__r"))
-        .agg(sum("__wcnt").as("__freq"))
-        .orderBy(col("__freq").desc, col("__l"), col("__r"))
-        .limit(1)
-        .collect()
-      if (top.isEmpty) exhausted = true
-      else {
+    val (init, pairs) = sizedView(symInit(corpus, textCol), pairable)
+    val (last, _, _) = Rounds.run(init, pairs, nMerges, stop = _ == 0L) {
+      (cur, _, rank) =>
+        val syms = cur.withColumn("__syms",
+          split(regexp_replace(col("__s"), s"^$Sep|$Sep$$", ""), Sep + Sep))
+        // adjacent pairs, weighted by word frequency; argmax via a
+        // distributed TakeOrdered(1) on the (freq DESC, l, r) total order
+        val top = syms
+          .filter(size(col("__syms")) >= 2)
+          .select(col("__wcnt"), explode(expr(
+            "transform(sequence(1, size(__syms) - 1), " +
+              "i -> struct(__syms[i-1] AS l, __syms[i] AS r))")).as("__p"))
+          .groupBy(col("__p.l").as("__l"), col("__p.r").as("__r"))
+          .agg(sum("__wcnt").as("__freq"))
+          .orderBy(col("__freq").desc, col("__l"), col("__r"))
+          .limit(1)
+          .collect()
         val (l, r, f) =
           (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         merges += Merge(rank, l, r, f)
-        val next = persistedView(cur.select(col("__wcnt"),
+        (cur.select(col("__wcnt"),
           replace(col("__s"), lit(Sep + l + Sep + Sep + r + Sep),
-            lit(Sep + l + r + Sep)).as("__s")))
-        unpersistCheckpoint(cur)
-        cur = next
-      }
+            lit(Sep + l + r + Sep)).as("__s")), pairable)
     }
-    unpersistCheckpoint(cur)
+    unpersistCheckpoint(last)
     merges.toSeq
   }
 

@@ -72,11 +72,11 @@ object Curation {
       fullPairs: DataFrame, fullScores: DataFrame,
       tauContam: Double = 0.8): DataFrame = {
     import org.apache.spark.sql.GraftSql.{
-      persistedView, unpersistCheckpoint, unpersistCheckpointTree}
+      sizedView, unpersistCheckpoint, unpersistCheckpointTree}
     // Quality survivors ranked within their content-hash group — ONE
     // corpus scan + one narrow (id, md5) hash-partitioned shuffle,
     // materialized once for its two consumers below.
-    val ranked = persistedView(
+    val ranked = sizedView(
       corpus.filter(TextAnalysis.qualityKeepExpr(col(textCol)))
         .select(col(idCol).as("doc_id"),
           md5(normText(col(textCol))).as("__h"))
@@ -103,12 +103,11 @@ object Curation {
     val contam = fullScores
       .filter(col("contamination") >= tauContam)
       .select(col("doc_id"))
-    // sizedView, not persistedView (r18): the drop set is materialized
-    // with MEASURED statistics attached, so the curate anti-join plans
+    // the drop set's MEASURED statistics let the curate anti-join plan
     // its broadcast decision statically from the true size — and since
     // callers cache this frame (curationDrops), the measurement is paid
     // once per corpus snapshot, not per query
-    val drops = org.apache.spark.sql.GraftSql.sizedView(
+    val drops = sizedView(
       exactLosers.union(nearLosers).union(contam).distinct()
         .select(col("doc_id").as("__graft_drop")))
     unpersistCheckpoint(ranked)

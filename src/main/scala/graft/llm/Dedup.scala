@@ -1,6 +1,7 @@
 package graft.llm
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.GraftSql.sizedView
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.expressions.Window
@@ -61,20 +62,20 @@ object Dedup {
     * The DuckDB oracles hash with the identical function, so results
     * match exactly even in the (≈2^-32) event of a hash collision.
     *
-    * The result is `localCheckpoint`ed: four-plus downstream branches
-    * (freq, both prefix-index join sides, both verify sides) read it, and
-    * the checkpointed relation is ~50× smaller than the text corpus — one
-    * corpus scan per dedup query instead of one per branch. (Plain
-    * `persist` was tried in round 2 and rejected: InMemoryRelation stats
-    * flipped join strategies for the worse.) */
+    * The result is materialized (`GraftSql.sizedView`): four-plus
+    * downstream branches (freq, both prefix-index join sides, both verify
+    * sides) read it, and the materialized relation is ~50× smaller than
+    * the text corpus — one corpus scan per dedup query instead of one per
+    * branch. (Plain `persist` was tried in round 2 and rejected:
+    * InMemoryRelation stats flipped join strategies for the worse; the
+    * view's measured row count and byte size were re-checked at sf0.1.) */
   private def shingleSets(
       df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    df.select(col(idCol).as("doc_id"), words(col(textCol)).as("w"))
+    sizedView(df.select(col(idCol).as("doc_id"), words(col(textCol)).as("w"))
       .select(col("doc_id"), wordNgrams("w", n).as("gs"))
       .select(col("doc_id"),
         sort_array(array_distinct(transform(col("gs"), g => hash32(g))))
-          .as("s32"))
-      .localCheckpoint()
+          .as("s32")))
 
   /** Exact n-gram Jaccard near-dup pairs with PREFIX FILTERING (Chaudhuri
     * et al., the standard exact similarity-join pruning): order each doc's
@@ -95,8 +96,8 @@ object Dedup {
       n: Int = 3, tau: Double = 0.5): DataFrame =
     jaccardPairsOwned(df, idCol, textCol, n, tau)._1
 
-  /** [[jaccardShinglePairs]] with the two `localCheckpoint`ed frames its
-    * pairs read (the shingle sets and the prefix index): a caller that
+  /** [[jaccardShinglePairs]] with the two materialized frames its pairs
+    * read (the shingle sets and the prefix index): a caller that
     * materializes everything it needs from the pairs releases exactly
     * these, by identity, with `GraftSql.unpersistCheckpoint`. */
   private def jaccardPairsOwned(
@@ -113,17 +114,16 @@ object Dedup {
     // Rank shingles within each doc by (global df, shingle); index the
     // prefix: rank <= sz - ceil(tau*sz) + 1.
     val w = Window.partitionBy("doc_id").orderBy(col("df"), col("g32"))
-    // localCheckpoint: both sides of the candidate self-join read the
+    // materialized: both sides of the candidate self-join read the
     // prefix index — without it the freq-join + ranking window run twice
     // (measured: 9 exchanges / 2 windows → 6 / 1). The index is tiny
     // (≤ one row per doc × prefix length).
-    val prefix = exSz.join(freq, "g32")
+    val prefix = sizedView(exSz.join(freq, "g32")
       .withColumn("rk", row_number().over(w))
       // ε guards FP noise in τ·sz: it can only LENGTHEN the prefix, so
       // pruning stays lossless.
       .filter(col("rk") <= col("sz") - ceil(lit(tau) * col("sz") - lit(1e-9)) + 1)
-      .select("doc_id", "g32", "sz", "rk")
-      .localCheckpoint()
+      .select("doc_id", "g32", "sz", "rk"))
     // PPJoin residual filters, both lossless for J >= tau:
     //  - size compatibility: τ·|A| <= |B| <= |A|/τ;
     //  - positional: the suffixes after the colliding prefix entry must
@@ -179,13 +179,12 @@ object Dedup {
     val exC = exploded(setsC)
     val freqC = exC.groupBy("g32").agg(count(lit(1)).as("df"))
     val w = Window.partitionBy("doc_id").orderBy(col("df"), col("g32"))
-    def prefix(ex: DataFrame) = ex
+    def prefix(ex: DataFrame) = sizedView(ex
       .join(freqC, Seq("g32"), "left")
       .withColumn("df", coalesce(col("df"), lit(0L)))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= col("sz") - ceil(lit(tau) * col("sz") - lit(1e-9)) + 1)
-      .select("doc_id", "g32", "sz", "rk")
-      .localCheckpoint()
+      .select("doc_id", "g32", "sz", "rk"))
     val pN = prefix(exN)
     val pC = prefix(exC) // corpus-only function of (corpus, tau) — cacheable
     val alpha = ceil(
@@ -259,7 +258,7 @@ object Dedup {
       needles: DataFrame, haystack: DataFrame, idCol: String,
       textCol: String, n: Int = 3, c: Double = 0.9): DataFrame = {
     require(c > 0 && c <= 1, "containment threshold must be in (0, 1]")
-    // Both shingle relations are EAGERLY localCheckpoint'ed (the
+    // Both shingle relations are EAGERLY materialized (the
     // connectedComponents pattern): the plan below references the
     // needle sets twice (prefix build + exact verify) and the haystack
     // sets three times (df stats, candidate postings, verify), and
@@ -273,9 +272,7 @@ object Dedup {
     // a posting list is BUILT once, not re-derived per consumer.
     val setsN = shingleSets(needles, idCol, textCol, n)
       .filter(size(col("s32")) > 0)
-      .localCheckpoint()
     val setsH = shingleSets(haystack, idCol, textCol, n)
-      .localCheckpoint()
     val postings = setsH.select(col("doc_id"), explode(col("s32")).as("g32"))
     val freqH = postings.groupBy("g32").agg(count(lit(1)).as("df"))
     val w = Window.partitionBy("doc_id").orderBy(col("df"), col("g32"))
@@ -417,7 +414,7 @@ object Dedup {
   def connectedComponents(
       pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 50): DataFrame = {
-    import org.apache.spark.sql.GraftSql.{sizedView, unpersistCheckpoint,
+    import org.apache.spark.sql.GraftSql.{unpersistCheckpoint,
       unpersistCheckpointTree}
     pairIdType(pairs, aCol, bCol)
     val e = pairs.select(col(aCol).as("a"), col(bCol).as("b"))
@@ -570,8 +567,7 @@ object Dedup {
   def connectedComponentsContracted(
       pairs: DataFrame, aCol: String, bCol: String,
       repMap: DataFrame, maxIter: Int = 50): DataFrame = {
-    import org.apache.spark.sql.GraftSql.{fitsBroadcast, sizedView,
-      unpersistCheckpoint}
+    import org.apache.spark.sql.GraftSql.{fitsBroadcast, unpersistCheckpoint}
     val idType = pairIdType(pairs, aCol, bCol)
     // pairs feed TWO consumers on the distributed route (node set + edge
     // contraction): materialize once — recomputing the full pair
@@ -591,12 +587,12 @@ object Dedup {
   private def contractedComponents(
       p: DataFrame, aCol: String, bCol: String,
       repMap: DataFrame, maxIter: Int): DataFrame = {
-    import org.apache.spark.sql.GraftSql.{persistedView, unpersistCheckpoint,
+    import org.apache.spark.sql.GraftSql.{unpersistCheckpoint,
       unpersistCheckpointTree}
     val nodes = p.select(col(aCol).as("id"))
       .union(p.select(col(bCol).as("id"))).distinct()
     // every pair-graph node's representative (itself when not an exact dup)
-    val nr = persistedView(
+    val nr = sizedView(
       nodes.join(repMap, Seq("id"), "left")
         .select(col("id"), coalesce(col("rep"), col("id")).as("rep")))
     try {
@@ -610,10 +606,10 @@ object Dedup {
       // fan out: clique members inherit their rep's component label;
       // cliques with no external edges ARE their own component, labeled
       // by the rep
-      val out = nr.join(cc, Seq("rep"), "left")
+      // materialize before releasing what it read
+      val out = sizedView(nr.join(cc, Seq("rep"), "left")
         .select(col("id").as("doc_id"),
-          coalesce(col("cluster_id"), col("rep")).as("cluster_id"))
-        .localCheckpoint() // materialize before releasing what it read
+          coalesce(col("cluster_id"), col("rep")).as("cluster_id")))
       unpersistCheckpointTree(cc)
       out
     } finally unpersistCheckpoint(nr)
@@ -749,7 +745,7 @@ object Dedup {
     * production path behind `dedup_clusters` and [[dropNearDuplicates]].
     * Identical output to `connectedComponents(jaccardShinglePairs(...))`.
     * The returned labels are materialized, so the pairs' shingle-set and
-    * prefix-index checkpoints are released before it returns. */
+    * prefix-index materializations are released before it returns. */
   def nearDupClusters(
       df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, tau: Double = 0.5): DataFrame = {
@@ -784,7 +780,7 @@ object Dedup {
     * are deliberately not counted.)
     *
     * Plan: per-row positional window hashes (pure array exprs, no
-    * shuffle), checkpointed once and read by all three branches; the
+    * shuffle), materialized once and read by all three branches; the
     * standard inverted-index explode; shared-window vocabulary =
     * DISTINCT (doc, window) → window-keyed count > 1; one equi-join back.
     * Everything is window-hash-keyed — linear in corpus token count, no
@@ -794,11 +790,11 @@ object Dedup {
   def duplicatedSpans(
       df: DataFrame, idCol: String, textCol: String,
       n: Int = 8): DataFrame = {
-    val g32 = df.select(col(idCol).as("doc_id"), words(col(textCol)).as("w"))
-      .select(col("doc_id"),
-        transform(wordNgrams("w", n), g => hash32(g)).as("gs"))
-      .filter(size(col("gs")) > 0)
-      .localCheckpoint()
+    val g32 = sizedView(
+      df.select(col(idCol).as("doc_id"), words(col(textCol)).as("w"))
+        .select(col("doc_id"),
+          transform(wordNgrams("w", n), g => hash32(g)).as("gs"))
+        .filter(size(col("gs")) > 0))
     val ex = g32.select(col("doc_id"), explode(col("gs")).as("g"))
     val shared = ex.distinct()
       .groupBy("g").agg(count(lit(1)).as("nd"))
@@ -879,9 +875,9 @@ object Dedup {
     *  - components: [[nearDupClustersFromPairs]] — union-find on the
     *    driver when the pair graph measures within the broadcast bound,
     *    contraction plus label rounds otherwise. The labels come back
-    *    materialized, so the pairs' two checkpoints (shingle sets, prefix
-    *    index) are released right there: this call created them and
-    *    nothing else reads them;
+    *    materialized, so the pairs' two materializations (shingle sets,
+    *    prefix index) are released right there: this call created them
+    *    and nothing else reads them;
     *  - LEFT ANTI: [[dropClusterLosers]], with NO broadcast hint: the
     *    loser set is the DUPLICATE SET, and at web-crawl dup density
     *    (30–50 %) that is corpus-proportional — a forced hint (which

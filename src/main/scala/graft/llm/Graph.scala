@@ -181,14 +181,14 @@ object Graph {
     * every node on ≥1 triangle. */
   def triangles(
       edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    import org.apache.spark.sql.GraftSql.{persistedView, unpersistCheckpoint}
+    import org.apache.spark.sql.GraftSql.{sizedView, unpersistCheckpoint}
     require(edges.schema(srcCol).dataType == edges.schema(dstCol).dataType,
       s"node id columns must share a type; got $srcCol: " +
         s"${edges.schema(srcCol).dataType}, $dstCol: " +
         s"${edges.schema(dstCol).dataType}")
     // canonical simple undirected edges (u < v); materialized once —
     // the degree join and both triangle joins all read it
-    val e = persistedView(edges
+    val e = sizedView(edges
       .filter(col(srcCol) =!= col(dstCol))
       .select(least(col(srcCol), col(dstCol)).as("u"),
         greatest(col(srcCol), col(dstCol)).as("v"))
@@ -199,7 +199,7 @@ object Graph {
     // orientation: (degree, node)-smaller endpoint first. u < v holds
     // canonically, so on an exact degree tie the canonical order IS the
     // node-order tiebreak — one comparison decides both components.
-    val o = persistedView(e
+    val o = sizedView(e
       .join(deg.select(col("n").as("u"), col("dg").as("du")), Seq("u"))
       .join(deg.select(col("n").as("v"), col("dg").as("dv")), Seq("v"))
       .select(
@@ -209,7 +209,7 @@ object Graph {
       .join(o.select(col("a").as("y"), col("b").as("z")), Seq("y"))
     val tri = paths.join(o,
       paths("x") === o("a") && paths("z") === o("b"), "left_semi")
-    val out = persistedView(tri
+    val out = sizedView(tri
       .select(explode(array(col("x"), col("y"), col("z"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("tri_cnt")))
     unpersistCheckpoint(e); unpersistCheckpoint(o)

@@ -5,7 +5,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 
 /** The one round loop behind every iterative operator ([[Graph]]'s
   * PageRank/TrustRank, HITS and BFS, [[Dedup.connectedComponents]],
-  * [[Similarity.nnDescentGraph]]).
+  * [[Similarity.nnDescentGraph]], the RP-tree trainer's level descent
+  * and [[Bpe.train]]'s merge rounds).
   *
   * A round is ONE job: `step(state, scalar, round)` returns the round's
   * plan and a row fold; [[GraftSql.sizedView]] materializes the plan

@@ -1,6 +1,7 @@
 package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftSql.{sizedView, unpersistCheckpoint}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (`array<float>`).
@@ -312,13 +313,13 @@ object Similarity {
 
   /** The shared quantized TF-IDF posting index: `(wts, norms)` with
     * `wts(doc_id, term, w)` and `norms(doc_id, nsq)`, df-gated at
-    * `maxDfFraction`. localCheckpoint'ed: wts feeds THREE consumers
-    * (norms, the query-side relation, the posting probe) and norms
-    * feeds two — without it the corpus explode + tf/df aggregation
-    * chain re-runs per consumer (measured 7.7 s → 3.8 s at sf0.1); the
-    * checkpointed postings relation is ~|docs|·|vocab-per-doc| rows of
-    * longs, far smaller than the text corpus (the shingleSets rationale
-    * in Dedup). */
+    * `maxDfFraction`. Both are materialized (`GraftSql.sizedView`): wts
+    * feeds THREE consumers (norms, the query-side relation, the posting
+    * probe) and norms feeds two — without it the corpus explode + tf/df
+    * aggregation chain re-runs per consumer (measured 7.7 s → 3.8 s at
+    * sf0.1); the materialized postings relation is
+    * ~|docs|·|vocab-per-doc| rows of longs, far smaller than the text
+    * corpus (the shingleSets rationale in Dedup). */
   private def tfidfIndex(docs: DataFrame, idCol: String, textCol: String,
       maxDfFraction: Double): (DataFrame, DataFrame) = {
     val n = docs.count() // licensed driver scalar (the tfIdf license)
@@ -329,16 +330,14 @@ object Similarity {
       .filter(col("df") <= lit(math.ceil(n * maxDfFraction).toLong))
     // dfreq is the VOCABULARY relation — Heaps-law growth with the
     // corpus, so no forced broadcast; AQE broadcasts it when it fits
-    val wts = tf.join(dfreq, "term")
+    val wts = sizedView(tf.join(dfreq, "term")
       .withColumn("w",
         round(col("tf") * log(lit(n.toDouble) / col("df")) * 1000)
           .cast("long"))
       .filter(col("w") > 0)
-      .select("doc_id", "term", "w")
-      .localCheckpoint()
-    val norms = wts.groupBy("doc_id")
-      .agg(sum(col("w") * col("w")).as("nsq"))
-      .localCheckpoint()
+      .select("doc_id", "term", "w"))
+    val norms = sizedView(wts.groupBy("doc_id")
+      .agg(sum(col("w") * col("w")).as("nsq")))
     (wts, norms)
   }
 
@@ -821,7 +820,6 @@ object Similarity {
   def nnDescentGraph(emb: DataFrame, idCol: String, vecCol: String,
       k: Int = 5, rounds: Int = 2, dim: Int = 64): DataFrame = {
     require(k >= 1 && rounds >= 0)
-    import org.apache.spark.sql.GraftSql.{sizedView, unpersistCheckpoint}
     val (n, count) = sizedView(emb.select(col(idCol).as("nid"),
       col(vecCol).as("v")).withColumn("nrm", norm(col("v"))), _ => 1L)
     try {
@@ -1040,35 +1038,35 @@ object Similarity {
     // it. The limit's single-partition residue is repartitioned away
     // before the iteration passes; S is small by construction.
     val sample = trainSampleSize(corpus.count(), nList)
-    val tr = base.orderBy(col("h"), col("id")).limit(sample.toInt)
-      .repartition(col("id")).persist()
+    val tr = sizedView(base.orderBy(col("h"), col("id")).limit(sample.toInt)
+      .repartition(col("id")))
+    try {
+      val seeds = tr
+        .orderBy(col("h"), col("id")).limit(nList)
+        .select("vq").collect() // TakeOrdered — rows arrive in seed order
 
-    val seeds = tr
-      .orderBy(col("h"), col("id")).limit(nList)
-      .select("vq").collect() // TakeOrdered — rows arrive in seed order
+      var cents: IndexedSeq[(Seq[Double], Double)] = seeds.map { r =>
+        withNormPair(r.getSeq[Long](0).map(_.toDouble).toIndexedSeq)
+      }.toIndexedSeq
 
-    var cents: IndexedSeq[(Seq[Double], Double)] = seeds.map { r =>
-      withNormPair(r.getSeq[Long](0).map(_.toDouble).toIndexedSeq)
-    }.toIndexedSeq
-
-    for (_ <- 0 until iters) {
-      val sums = tr
-        .withColumn("cell", argmaxCell(col("vqd"), col("qnrm"), cents))
-        .select(col("cell"), posexplode(col("vq")))
-        .groupBy("cell", "pos")
-        .agg(sum("col").as("s"), count(lit(1)).as("cnt"))
-        .collect()
-      val byCell = sums.groupBy(_.getAs[Int]("cell"))
-      cents = cents.zipWithIndex.map { case (old, cid) =>
-        byCell.get(cid).fold(old) { rows =>
-          withNormPair(rows.sortBy(_.getAs[Int]("pos"))
-            .map(r => r.getAs[Long]("s").toDouble / r.getAs[Long]("cnt"))
-            .toIndexedSeq)
+      for (_ <- 0 until iters) {
+        val sums = tr
+          .withColumn("cell", argmaxCell(col("vqd"), col("qnrm"), cents))
+          .select(col("cell"), posexplode(col("vq")))
+          .groupBy("cell", "pos")
+          .agg(sum("col").as("s"), count(lit(1)).as("cnt"))
+          .collect()
+        val byCell = sums.groupBy(_.getAs[Int]("cell"))
+        cents = cents.zipWithIndex.map { case (old, cid) =>
+          byCell.get(cid).fold(old) { rows =>
+            withNormPair(rows.sortBy(_.getAs[Int]("pos"))
+              .map(r => r.getAs[Long]("s").toDouble / r.getAs[Long]("cnt"))
+              .toIndexedSeq)
+          }
         }
       }
-    }
-    tr.unpersist()
-    cents.map(_._1)
+      cents.map(_._1)
+    } finally unpersistCheckpoint(tr)
   }
 
   /** The INVERTED-FILE index body: every corpus row with its assigned
@@ -1330,45 +1328,45 @@ object Similarity {
       .withColumn("h", TextOps.hash32(
         concat(lit("pq:"), col("id").cast("string"))))
     val sample = trainSampleSize(corpus.count(), ksub)
-    val tr = base.orderBy(col("h"), col("id")).limit(sample.toInt)
-      .repartition(col("id")).persist()
-
-    val seedRows = tr.orderBy(col("h"), col("id")).limit(ksub)
-      .select("vq").collect()
-    var books: IndexedSeq[IndexedSeq[Seq[Double]]] =
-      (0 until m).map { s =>
-        seedRows.toIndexedSeq.map { r =>
-          r.getSeq[Long](0).slice(s * dsub, (s + 1) * dsub)
-            .map(_.toDouble): Seq[Double]
+    val tr = sizedView(base.orderBy(col("h"), col("id")).limit(sample.toInt)
+      .repartition(col("id")))
+    try {
+      val seedRows = tr.orderBy(col("h"), col("id")).limit(ksub)
+        .select("vq").collect()
+      var books: IndexedSeq[IndexedSeq[Seq[Double]]] =
+        (0 until m).map { s =>
+          seedRows.toIndexedSeq.map { r =>
+            r.getSeq[Long](0).slice(s * dsub, (s + 1) * dsub)
+              .map(_.toDouble): Seq[Double]
+          }
         }
-      }
 
-    for (_ <- 0 until iters) {
-      // one pass: every (row, subspace) assignment + exact-long
-      // component sums per (subspace, cell, dim) — nList·dim-scale
-      // result rows to the driver, same budget as the IVF trainer
-      val sums = tr
-        .select(col("vq"), posexplode(pqEncode(col("vqd"), books))
-          .as(Seq("sub", "cell")))
-        .select(col("sub"), col("cell"),
-          posexplode(slice(col("vq"), col("sub") * dsub + 1, lit(dsub))))
-        .groupBy("sub", "cell", "pos")
-        .agg(sum("col").as("s"), count(lit(1)).as("cnt"))
-        .collect()
-      val byKey = sums.groupBy(r =>
-        (r.getAs[Int]("sub"), r.getAs[Int]("cell")))
-      books = books.zipWithIndex.map { case (cb, s) =>
-        cb.zipWithIndex.map { case (old, c) =>
-          byKey.get((s, c)).fold(old) { rows =>
-            rows.sortBy(_.getAs[Int]("pos"))
-              .map(r => r.getAs[Long]("s").toDouble / r.getAs[Long]("cnt"))
-              .toSeq
+      for (_ <- 0 until iters) {
+        // one pass: every (row, subspace) assignment + exact-long
+        // component sums per (subspace, cell, dim) — nList·dim-scale
+        // result rows to the driver, same budget as the IVF trainer
+        val sums = tr
+          .select(col("vq"), posexplode(pqEncode(col("vqd"), books))
+            .as(Seq("sub", "cell")))
+          .select(col("sub"), col("cell"),
+            posexplode(slice(col("vq"), col("sub") * dsub + 1, lit(dsub))))
+          .groupBy("sub", "cell", "pos")
+          .agg(sum("col").as("s"), count(lit(1)).as("cnt"))
+          .collect()
+        val byKey = sums.groupBy(r =>
+          (r.getAs[Int]("sub"), r.getAs[Int]("cell")))
+        books = books.zipWithIndex.map { case (cb, s) =>
+          cb.zipWithIndex.map { case (old, c) =>
+            byKey.get((s, c)).fold(old) { rows =>
+              rows.sortBy(_.getAs[Int]("pos"))
+                .map(r => r.getAs[Long]("s").toDouble / r.getAs[Long]("cnt"))
+                .toSeq
+            }
           }
         }
       }
-    }
-    tr.unpersist()
-    books
+      books
+    } finally unpersistCheckpoint(tr)
   }
 
   /** The PQ-ENCODED corpus — `(id, codes, rnrm)`: `m` small-int codes
@@ -1784,10 +1782,17 @@ object Similarity {
             "reduce `scale` or split groups")).cast("long"))
         .otherwise(col("ssqDec").cast("long")))
       .drop("ssqDec")
+    // mean at 6 dp, rounded half away from zero on EXACT integers —
+    // sq·10^6/(n·scale) → (2·10^6·|sq| + n·scale) div (2·n·scale), signed —
+    // then one division by 10^6: rounding the double quotient instead
+    // rounds its decimal form (Spark) or its binary value (DuckDB), and
+    // the two disagree on half-way quotients
+    val q6 = expr(s"(2000000 * abs(sq) + n * ${scale}L) div (2 * n * ${scale}L)")
     s.join(ss, "g").select(
       col("g"), col("pos"), col("n").cast("long").as("n_vecs"),
       col("sq").as("sum_fixed"),
-      round(col("sq").cast("double") / (col("n") * scale), 6).as("mean"),
+      (when(col("sq") < 0, -q6).otherwise(q6).cast("double") / lit(1e6))
+        .as("mean"),
       when(col("ssq") > 0,
         round(col("sq").cast("double") /
           sqrt(col("ssq").cast("double")), 6)).as("unit"))
@@ -1875,12 +1880,14 @@ object Similarity {
     * band's rank mass instead of a priority queue (deterministic,
     * engine-mirrorable, no driver-side search state).
     *
-    * Training lineage is [[DataFrame.localCheckpoint]]ed per level
-    * (the connectedComponents treatment): level l's aggregate reads
-    * the level-(l−1) checkpoint instead of re-running the projection
+    * Training materializes one relation per level on [[Rounds]] (the
+    * connectedComponents treatment): level l's aggregate reads the
+    * level-(l−1) materialization instead of re-running the projection
     * chain plus l broadcast joins from the base relation — O(depth)
     * corpus scans total, not O(depth²), which is what matters exactly
-    * when [[autoDepth]] reaches 10 on third-decade corpora. */
+    * when [[autoDepth]] reaches 10 on third-decade corpora. Each level's
+    * relation is released once the next is materialized, the last once
+    * its medians are collected, so a trained model pins nothing. */
   def trainRpTreeBanded(corpus: DataFrame, idCol: String, vecCol: String,
       depth: Int = 3, dim: Int = 64, sampleK: Int = 1024,
       planeOffset: Int = 0, spillPermille: Int = RpSpillPermille)
@@ -1908,24 +1915,28 @@ object Similarity {
     val band = s"(($sz * $spillPermille) div 1000)"
     def pick(rank: String) =
       s"CAST(element_at($arr, CAST($rank AS INT)) AS BIGINT)"
-    var cur = projs.withColumn("__node", lit(0L)).localCheckpoint()
-    (0 until depth).map { l =>
-      val med = cur.groupBy("__node")
-        .agg(samp(col("__h"), col(s"p$l").cast("double")).as("smp"))
-        .select(col("__node"),
-          expr(pick(medRank)).as("m"),
-          expr(pick(s"greatest(1, $medRank - $band)")).as("lo"),
-          expr(pick(s"least($sz, $medRank + $band)")).as("hi"))
-        .collect()
-        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
-        .toMap
-      // the last level's medians need no descended relation — don't
-      // materialize one (each checkpoint is an eager corpus pass)
-      if (l < depth - 1)
-        cur = rpDescend(cur, med.map { case (n, (m, _, _)) => n -> m },
-          s"p$l", l).localCheckpoint()
-      med
+    def medians(cur: DataFrame, l: Int) = cur.groupBy("__node")
+      .agg(samp(col("__h"), col(s"p$l").cast("double")).as("smp"))
+      .select(col("__node"),
+        expr(pick(medRank)).as("m"),
+        expr(pick(s"greatest(1, $medRank - $band)")).as("lo"),
+        expr(pick(s"least($sz, $medRank + $band)")).as("hi"))
+      .collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
+      .toMap
+    val meds = IndexedSeq.newBuilder[Map[Long, (Long, Long, Long)]]
+    // round r descends level r−1; the last level's medians need no
+    // descended relation — don't materialize one (each is a corpus pass)
+    val (last, _, _) = Rounds.run(
+        sizedView(projs.withColumn("__node", lit(0L))), 0L, depth - 1) {
+      (cur, _, r) =>
+        val med = medians(cur, r - 1)
+        meds += med
+        (rpDescend(cur, med.map { case (n, (m, _, _)) => n -> m },
+          s"p${r - 1}", r - 1), _ => 0L)
     }
+    try (meds += medians(last, depth - 1)).result()
+    finally unpersistCheckpoint(last)
   }
 
   /** Corpus-scaled TREE DEPTH — the RP tree's candidate lever, the

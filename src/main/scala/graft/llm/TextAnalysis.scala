@@ -544,11 +544,11 @@ object TextAnalysis {
       textCol: String): DataFrame = {
     val cw = corpus.select(words(col(textCol)).as("w"))
     // |vocab| rows, read twice (scalar V below + the scoring join):
-    // localCheckpoint so the corpus explode+count runs once per call
-    val uni = cw.select(explode(col("w")).as("u"))
-      .groupBy("u").agg(count(lit(1)).as("c1"))
-      .localCheckpoint()
-    val vocab = uni.count() // driver scalar → literal in the formula
+    // materialized once, and V (a driver scalar → literal in the formula)
+    // is the same job's row count
+    val (uni, vocab) = org.apache.spark.sql.GraftSql.sizedView(
+      cw.select(explode(col("w")).as("u"))
+        .groupBy("u").agg(count(lit(1)).as("c1")), _ => 1L)
     val bi = cw.select(col("w"))
       .select(explode(wordNgrams("w", 2)).as("g"))
       .groupBy("g").agg(count(lit(1)).as("c2"))

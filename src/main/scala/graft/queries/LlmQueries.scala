@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.GraftSql.sizedView
 import org.apache.spark.sql.functions._
 
 import graft.{Artifacts, Tables}
@@ -37,6 +38,19 @@ object LlmQueries {
   // the store owns keying, fingerprinting, eviction and release.
   private def docsPath(dir: String) = s"$dir/documents.parquet"
   private def embPath(dir: String) = s"$dir/embeddings.parquet"
+
+  /** A stored relation: `df` cached (`MEMORY_AND_DISK`) and materialized
+    * eagerly, so consumers never race the build; then every persisted
+    * leaf of `df`'s own plan (the build's `sizedView` intermediates) is
+    * released, since the cache no longer reads them. Cached, not a
+    * `sizedView`: the cell-clustered indexes' `cell IN (…)` readers skip
+    * in-memory columnar batches, and a cached relation is no leaf of a
+    * reader's plan, so a reader's release never reaches it. */
+  private def stored(df: DataFrame): DataFrame = {
+    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).count()
+    org.apache.spark.sql.GraftSql.unpersistCheckpointTree(df)
+    df
+  }
 
   /** The artifact kinds `ScaleProbe.timeBuild` evicts before a cold-build
     * row: the pair graphs, the edge relation, the ANN indexes and the
@@ -88,13 +102,8 @@ object LlmQueries {
   private[graft] def jaccardPairs(
       s: SparkSession, dir: String,
       n: Int = 3, tau: Double = 0.5): DataFrame =
-    Artifacts(s, "jaccardPairs", docsPath(dir), (n, tau),
-        Artifacts.unpersist) {
-      val p = Dedup.jaccardShinglePairs(docs(s, dir), "doc_id", "text", n, tau)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      p.count() // materialize eagerly so consumers never race the build
-      p
-    }
+    Artifacts(s, "jaccardPairs", docsPath(dir), (n, tau))(stored(
+      Dedup.jaccardShinglePairs(docs(s, dir), "doc_id", "text", n, tau)))
 
   /** The VIDEO shared-frame near-dup pair graph for `dir`'s documents —
     * demux (no pixel decode) → md5(frame_bytes) inverted index →
@@ -102,50 +111,40 @@ object LlmQueries {
     * `mm_video_near_dup` and `mm_video_dedup` (at 100× the pair build is
     * the dominant cost of both queries). */
   private[graft] def videoPairs(s: SparkSession, dir: String): DataFrame =
-    Artifacts(s, "videoPairs", docsPath(dir), (), Artifacts.unpersist) {
-      val fr = Multimodal.demuxFrames(
+    Artifacts(s, "videoPairs", docsPath(dir)) {
+      // both sides of the hash self-join — demux once
+      val fr = sizedView(Multimodal.demuxFrames(
         Multimodal.synthesizeNearDupVideos(docs(s, dir), "doc_id"))
         .toDF()
         .select(col("doc_id"), md5(col("frame_bytes")).as("frame_md5"))
-        .distinct()
-        // both sides of the hash self-join — demux once
-        .localCheckpoint()
+        .distinct())
       // hot-frame df gate (VERDICT r11 #1): a frame shared by k videos
       // emits k² candidate rows — Dedup.sharedItemPairs drops ubiquitous
       // frames (df > half the corpus) before the self-join and logs it
-      val p = Dedup.sharedItemPairs(fr, "doc_id", "frame_md5",
+      stored(Dedup.sharedItemPairs(fr, "doc_id", "frame_md5",
           nDocs = docCount(s, dir), sharedCol = "shared_frames",
           onDrop = (n, cap) => println(
             s"[graft] videoPairs: dropped $n ubiquitous frame hash(es) " +
-              s"with df > $cap before the pair join"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      p.count() // materialize eagerly so consumers never race the build
-      // p is materialized and nothing else reads the demux checkpoint
-      org.apache.spark.sql.GraftSql.unpersistCheckpoint(fr)
-      p
+              s"with df > $cap before the pair join")))
     }
 
   /** The MP4 shared-sample near-dup pair graph — [[videoPairs]] for the
     * ISO-BMFF sample-table demux ([[Multimodal.demuxMp4Samples]]). */
   private[graft] def mp4Pairs(s: SparkSession, dir: String): DataFrame =
-    Artifacts(s, "mp4Pairs", docsPath(dir), (), Artifacts.unpersist) {
-      val sm = Multimodal.demuxMp4Samples(
+    Artifacts(s, "mp4Pairs", docsPath(dir)) {
+      // both sides of the hash self-join — demux once
+      val sm = sizedView(Multimodal.demuxMp4Samples(
         Multimodal.synthesizeNearDupMp4(docs(s, dir), "doc_id"))
         .toDF()
         .select(col("doc_id"), md5(col("frame_bytes")).as("sample_md5"))
-        .distinct()
-        .localCheckpoint() // both sides of the hash self-join — demux once
+        .distinct())
       // same hot-sample df gate as videoPairs (a silence/keepalive sample
       // shared corpus-wide is the MP4 shape of the ubiquitous frame)
-      val p = Dedup.sharedItemPairs(sm, "doc_id", "sample_md5",
+      stored(Dedup.sharedItemPairs(sm, "doc_id", "sample_md5",
           nDocs = docCount(s, dir), sharedCol = "shared_samples",
           onDrop = (n, cap) => println(
             s"[graft] mp4Pairs: dropped $n ubiquitous sample hash(es) " +
-              s"with df > $cap before the pair join"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      p.count() // materialize eagerly so consumers never race the build
-      org.apache.spark.sql.GraftSql.unpersistCheckpoint(sm) // as videoPairs
-      p
+              s"with df > $cap before the pair join")))
     }
 
   /** The canonicalized HOST LINK-EDGE relation for `dir`'s documents —
@@ -157,18 +156,15 @@ object LlmQueries {
     * from the edge relation (two short host strings per link — orders of
     * magnitude smaller than the page corpus). */
   private[graft] def webEdges(s: SparkSession, dir: String): DataFrame =
-    Artifacts(s, "webEdges", docsPath(dir), (), Artifacts.unpersist) {
+    Artifacts(s, "webEdges", docsPath(dir)) {
       val html = Web.syntheticHtml(col("doc_id"),
         Web.syntheticHost(col("doc_id")), col("text"))
-      val p = docs(s, dir)
+      stored(docs(s, dir)
         .select(Web.syntheticHost(col("doc_id")).as("src_host"),
           explode(Web.extractLinks(html)).as("link"))
         .select(col("src_host"),
           Web.hostOf(Web.canonicalizeUrl(col("link"))).as("dst_host"))
-        .filter(col("dst_host") =!= "")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      p.count() // materialize eagerly so consumers never race the build
-      p
+        .filter(col("dst_host") =!= ""))
     }
 
   /** Contamination scores of `dir`'s documents vs the bench-contract
@@ -178,25 +174,20 @@ object LlmQueries {
     * produced (5.3 s vs 0.8 s at sf0.1). */
   private[graft] def contamScores(
       s: SparkSession, dir: String, n: Int = 3): DataFrame =
-    Artifacts(s, "contamScores", docsPath(dir), n, Artifacts.unpersist) {
+    Artifacts(s, "contamScores", docsPath(dir), n) {
       val d = docs(s, dir)
-      val p = Dedup.contaminationScores(
-        d, d.filter(col("doc_id") % 97 === 0), "doc_id", "text", n)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      p.count() // materialize eagerly so consumers never race the build
-      p
+      stored(Dedup.contaminationScores(
+        d, d.filter(col("doc_id") % 97 === 0), "doc_id", "text", n))
     }
 
   /** The staged curation pipeline's drop-set for `dir`'s documents
     * (exact losers ∪ near-dup losers ∪ contaminated — see
     * [[graft.llm.Curation.dropSet]]), built from the SAME stored pair
     * index and contamination scores the standalone queries share. The
-    * drop-set is a [[org.apache.spark.sql.GraftSql.persistedView]] frame,
-    * so it is released through `unpersistCheckpoint`, not `unpersist`. */
+    * drop-set is a [[org.apache.spark.sql.GraftSql.sizedView]] frame. */
   private[graft] def curationDrops(
       s: SparkSession, dir: String, tau: Double = 0.8): DataFrame =
-    Artifacts(s, "curationDrops", docsPath(dir), tau,
-        Artifacts.unpersistCheckpoint)(
+    Artifacts(s, "curationDrops", docsPath(dir), tau)(
       Curation.dropSet(docs(s, dir), "doc_id", "text",
         jaccardPairs(s, dir), contamScores(s, dir), tau))
 
@@ -253,7 +244,7 @@ object LlmQueries {
     * snapshot and amortizes it — which is what the store models. */
   private[graft] def ivfIndex(
       s: SparkSession, dir: String, iters: Int = 3): DataFrame =
-    Artifacts(s, "ivfIndex", embPath(dir), iters, Artifacts.unpersist) {
+    Artifacts(s, "ivfIndex", embPath(dir), iters) {
       // CELL-CLUSTERED layout: repartition on the cell id and sort rows
       // by it inside each partition before caching, so the in-memory
       // columnar batches carry tight cell min/max stats and the pruned
@@ -264,12 +255,9 @@ object LlmQueries {
       // partitions at the file listing. Row order inside a cell doesn't
       // affect results (every consumer aggregates or ranks with total
       // tie-breaks), so the clustering is results-invariant.
-      val df = Similarity.assignCells(
+      stored(Similarity.assignCells(
         emb(s, dir), "vec_id", "embedding", trainedCentroids(s, dir, iters))
-        .repartition(col("cell")).sortWithinPartitions("cell")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count() // materialize eagerly so consumers never race the build
-      df
+        .repartition(col("cell")).sortWithinPartitions("cell"))
     }
 
   /** The composed IVF-PQ index artifact `(nid, cell, codes, rnrm)` —
@@ -279,15 +267,11 @@ object LlmQueries {
     * candidate read scans codes, never the float corpus. */
   private[graft] def ivfPqIndex(
       s: SparkSession, dir: String, iters: Int = 3): DataFrame =
-    Artifacts(s, "ivfPqIndex", embPath(dir), iters, Artifacts.unpersist) {
-      val df = Similarity.ivfPqIndexBody(
+    Artifacts(s, "ivfPqIndex", embPath(dir), iters)(stored(
+      Similarity.ivfPqIndexBody(
         emb(s, dir), "vec_id", "embedding",
         trainedCentroids(s, dir, iters), trainedPqBooks(s, dir))
-        .repartition(col("cell")).sortWithinPartitions("cell")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
-    }
+        .repartition(col("cell")).sortWithinPartitions("cell")))
 
   /** The FIXED 200-query serving batch (vec_id %100 = 0 ∧ < 20000),
     * persisted: a serving path RECEIVES its query batch — deriving it
@@ -299,13 +283,8 @@ object LlmQueries {
     * exist to isolate. Results unchanged (same rows, same oracle). */
   private[graft] def fixedQueryBatch(
       s: SparkSession, dir: String): DataFrame =
-    Artifacts(s, "fixedQueryBatch", embPath(dir), (), Artifacts.unpersist) {
-      val df = emb(s, dir)
-        .filter(col("vec_id") % 100 === 0 && col("vec_id") < 20000)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
-    }
+    Artifacts(s, "fixedQueryBatch", embPath(dir))(stored(emb(s, dir)
+      .filter(col("vec_id") % 100 === 0 && col("vec_id") < 20000)))
 
   /** The built INVERTED MULTI-INDEX body for `dir`'s embeddings — the
     * [[ivfIndex]] build exactly (eager materialization, cell-clustered
@@ -313,14 +292,11 @@ object LlmQueries {
     * `cellA·kHalf + cellB`. */
   private[graft] def imiIndex(
       s: SparkSession, dir: String, iters: Int = 3): DataFrame =
-    Artifacts(s, "imiIndex", embPath(dir), iters, Artifacts.unpersist) {
+    Artifacts(s, "imiIndex", embPath(dir), iters) {
       val (ca, cb) = trainedImiQuantizers(s, dir, iters)
-      val df = Similarity.assignImiCells(
+      stored(Similarity.assignImiCells(
         emb(s, dir), "vec_id", "embedding", ca, cb)
-        .repartition(col("cell")).sortWithinPartitions("cell")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
+        .repartition(col("cell")).sortWithinPartitions("cell"))
     }
 
   // ── shared oracle fragments (mirror TextOps) ───────────────────────────
@@ -2092,28 +2068,26 @@ object LlmQueries {
     // never all-pairs) — the image-side twin of dedup_simhash
     "mm_image_near_dup" -> ((s, dir) =>
       Dedup.hammingPairs64(
-        Multimodal.imageAHash(
+        // both sides of the banded self-join read the hashes — without
+        // the materialization the PNG decode pipeline runs once per branch
+        sizedView(Multimodal.imageAHash(
           Multimodal.synthesizeNearDupImages(docs(s, dir), "doc_id"))
           .toDF()
           .select(col("doc_id"), col("ahash_lo").as("lo"),
-            col("ahash_hi").as("hi"))
-          // both sides of the banded self-join read the hashes — without
-          // the checkpoint the PNG decode pipeline runs once per branch
-          .localCheckpoint(),
+            col("ahash_hi").as("hi"))),
         hammingMax = 3)),
 
     // the dedup CONSUMER of the image near-dup pairs: hamming clusters
     // → drop every non-minimum member → the surviving image id set
     // (pairs → CC → anti join, the dropNearDuplicates skeleton)
     "mm_image_dedup" -> ((s, dir) => {
-      val hashes = Multimodal.imageAHash(
+      // read by both banded-join sides, CC, and the final anti join —
+      // materialize or the decode pipeline runs once per consumer
+      val hashes = sizedView(Multimodal.imageAHash(
         Multimodal.synthesizeNearDupImages(docs(s, dir), "doc_id"))
         .toDF()
         .select(col("doc_id"), col("ahash_lo").as("lo"),
-          col("ahash_hi").as("hi"))
-        // read by both banded-join sides, CC, and the final anti join —
-        // checkpoint or the decode pipeline runs once per consumer
-        .localCheckpoint()
+          col("ahash_hi").as("hi")))
       val pairs = Dedup.hammingPairs64(hashes, hammingMax = 3)
       Dedup.dropClusterLosers(hashes, "doc_id",
         Dedup.connectedComponents(pairs, "id_a", "id_b"))
@@ -2138,12 +2112,12 @@ object LlmQueries {
     // amplitude shift, so true near-dups land at hamming 0; the audio
     // twin of mm_image_near_dup.
     "mm_audio_near_dup" -> ((s, dir) => {
-      val fps = Multimodal.audioFingerprint(
+      // both banded-join sides — one WAV decode pass
+      val fps = sizedView(Multimodal.audioFingerprint(
         Multimodal.synthesizeNearDupAudio(docs(s, dir), "doc_id"))
         .toDF()
         .select(col("doc_id"), col("fp_lo").as("lo"),
-          col("fp_hi").as("hi"))
-        .localCheckpoint() // both banded-join sides — one WAV decode pass
+          col("fp_hi").as("hi")))
       Dedup.hammingPairs64(fps, hammingMax = 3)
     }),
 
@@ -2152,12 +2126,12 @@ object LlmQueries {
     // mm_image_dedup skeleton on the audio pair graph); the 16-bit
     // family fp rides along as a descriptive column
     "mm_audio_dedup" -> ((s, dir) => {
-      val fps = Multimodal.audioFingerprint(
+      // pair build + survivor probe — one decode pass
+      val fps = sizedView(Multimodal.audioFingerprint(
         Multimodal.synthesizeNearDupAudio(docs(s, dir), "doc_id"))
         .toDF()
         .select(col("doc_id"), col("fp"), col("fp_lo").as("lo"),
-          col("fp_hi").as("hi"))
-        .localCheckpoint() // pair build + survivor probe — one decode pass
+          col("fp_hi").as("hi")))
       val pairs = Dedup.hammingPairs64(
         fps.select("doc_id", "lo", "hi"), hammingMax = 3)
       Dedup.dropClusterLosers(fps, "doc_id",
@@ -3405,7 +3379,8 @@ object LlmQueries {
         |      FROM q2 GROUP BY 1, 2),
         |ss AS (SELECT g, sum(sq * sq) AS ssq FROM s GROUP BY 1)
         |SELECT s.g, s.pos, s.n::BIGINT AS n_vecs, s.sq AS sum_fixed,
-        |       round(s.sq::DOUBLE / (s.n * 10000), 6) AS mean,
+        |       (sign(s.sq) * ((200 * abs(s.sq) + s.n) // (2 * s.n)))::DOUBLE
+        |         / 1000000::DOUBLE AS mean,
         |       CASE WHEN ss.ssq > 0
         |            THEN round(s.sq::DOUBLE / sqrt(ss.ssq::DOUBLE), 6)
         |            END AS unit

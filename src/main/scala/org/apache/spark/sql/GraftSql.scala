@@ -21,38 +21,41 @@ object GraftSql {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** Eagerly materialize a DataFrame into a persisted RDD and return a
-    * frame whose logical plan is just that RDD (`LogicalRDD`) — the
-    * iterative-algorithm primitive. Compared to `localCheckpoint()`:
-    * the Catalyst plan is equally FLAT (re-analysis cost stays O(1) per
-    * iteration instead of growing with the loop), but RDD lineage is
-    * PRESERVED, so (a) an executor loss recomputes the partition instead
-    * of failing the job, and (b) [[unpersistCheckpoint]] on a superseded
-    * round frees its storage without Spark's "cannot be recomputed"
-    * warning. Rows are copied before caching (toRdd reuses mutable
-    * UnsafeRows — the same copy `Dataset.checkpoint` does internally). */
-  def persistedView(df: DataFrame): DataFrame = {
-    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
-    val rdd = ds.queryExecution.toRdd.map(_.copy())
-    rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    rdd.count()
-    ds.sparkSession.internalCreateDataFrame(rdd, ds.schema)
-  }
-
-  /** [[persistedView]] that additionally attaches MEASURED statistics
-    * to the returned leaf: row count and in-memory byte size are folded
-    * over the rows by the materialization job itself and handed to the
-    * `LogicalRDD` as origin stats, so STATIC planning sees the relation's
-    * true size instead of `defaultSizeInBytes` (= "huge"). This is the
-    * honest substitute for a forced broadcast hint (guide §3.1): a
-    * drop-loser / gate relation that measures small plans as the
-    * broadcast side of its join in the INITIAL plan — no shuffle map
-    * stage of the probe side at all — while the same relation at
-    * corpus-proportional size measures big and plans as a sort-merge
-    * join; the decision is data-driven at every scale, with no cliff
-    * and no driver collect beyond what the broadcast itself would do.
-    * The stats are job RESULTS (one per partition), not accumulators, so
-    * they are exact under task retries. */
+  /** THE way an operator materializes a derived relation: one job runs
+    * the plan into a persisted RDD (`MEMORY_AND_DISK`, rows copied —
+    * toRdd reuses mutable UnsafeRows) and returns a frame whose logical
+    * plan is just that RDD (`LogicalRDD`).
+    *  - Flat: re-analysis cost stays O(1) per round of an iterative
+    *    caller instead of growing with the loop.
+    *  - Lineage kept: an executor loss recomputes the partition, and
+    *    [[unpersistCheckpoint]] / [[unpersistCheckpointTree]] release a
+    *    superseded relation as soon as what reads it is materialized.
+    *  - Measured: row count and in-memory byte size are folded over the
+    *    rows by the same job and attached to the leaf as statistics, so
+    *    static planning sees the true size instead of
+    *    `defaultSizeInBytes` (= "huge"). A drop-loser / gate relation
+    *    that measures small plans as the broadcast side of its join in
+    *    the initial plan, while the same relation at corpus-proportional
+    *    size plans as a sort-merge join — no forced hint, no cliff. The
+    *    stats are job results (one per partition), not accumulators, so
+    *    they are exact under task retries.
+    *  - Partitioning: the leaf reports `UnknownPartitioning`, as an eager
+    *    `Dataset.localCheckpoint` does under AQE (`LogicalRDD.fromDataset`
+    *    reads `executedPlan.outputPartitioning`, which
+    *    `AdaptiveSparkPlanExec` leaves unknown).
+    *  - Fresh attribute ids: a `Column` taken from the input frame does
+    *    not resolve against the view.
+    *
+    * What stays outside it: `Dataset.persist` only in the artifact
+    * store's relation builds (`queries.LlmQueries`) and `Example`. The
+    * cell-clustered indexes' `cell IN (…)` readers skip in-memory
+    * columnar batches, and a cached relation is not a `LogicalRDD` leaf,
+    * so [[unpersistCheckpointTree]] over a frame that reads a stored
+    * relation cannot release the store's blocks. The lazy
+    * `localCheckpoint(false)`s of `CoreQueries`' `x_er_names_*` rows are
+    * lazy on purpose and stay too. `MaterializeGuardSpec` fails on any other
+    * `persist`, any eager `localCheckpoint()` and any second
+    * materialization primitive under `src/main`. */
   def sizedView(df: DataFrame): DataFrame = sizedView(df, _ => 0L)._1
 
   /** [[sizedView]] whose one materialization job also returns
@@ -117,7 +120,7 @@ object GraftSql {
       org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema),
       rows))
 
-  /** Release the storage blocks behind a [[persistedView]] (or
+  /** Release the storage blocks behind a [[sizedView]] (or
     * `localCheckpoint()`ed) DataFrame. Iterative algorithms that
     * materialize per round would otherwise accumulate one superseded
     * persisted RDD per iteration. The frame's plan is a `LogicalRDD`

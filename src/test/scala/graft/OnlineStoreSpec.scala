@@ -30,15 +30,15 @@ class OnlineStoreSpec extends SparkSpec {
     val store = new OnlineStore(Seq("k"), "ts", None, servingCacheKeys = 0)
     val offJobs = jobsDuring(store.write(batch3))
     assert(store.cachedKeyCount == 0)
-    // identical write with the cache on runs the SAME persistence jobs
-    // PLUS the bound-check count and the driver collect — so strictly
-    // more jobs. If someone reintroduces a collect into the cache-off
-    // path the two counts converge and this fails.
+    // identical write with the cache on runs the SAME persistence job
+    // (which also counts the keys for the bound check) PLUS the driver
+    // collect — so strictly more jobs. If someone reintroduces a collect
+    // into the cache-off path the two counts converge and this fails.
     val cached = new OnlineStore(Seq("k"), "ts", None)
     val onJobs = jobsDuring(cached.write(batch3))
     assert(offJobs < onJobs,
       s"cache-off write ran $offJobs jobs, cache-on $onJobs — the off " +
-        "path must skip the bound-check count and the driver collect")
+        "path must skip the driver collect")
     assert(cached.cachedKeyCount == 3)
     // fallback point reads: correct, though each one is a Spark read
     assert(store.get(Map("k" -> 2)).get("v") == 2.5)

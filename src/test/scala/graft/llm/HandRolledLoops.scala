@@ -1,7 +1,8 @@
 package graft.llm
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.GraftSql.{persistedView, unpersistCheckpoint}
+import org.apache.spark.sql.GraftSql.unpersistCheckpoint
+import org.apache.spark.sql.OracleViews.persistedView
 import org.apache.spark.sql.functions._
 
 /** Test oracle: HITS, BFS depth, connected components and the NN-descent

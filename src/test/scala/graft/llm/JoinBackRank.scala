@@ -19,7 +19,8 @@ object JoinBackRank {
       scale: Long = 1000000000L): DataFrame = {
     require(iters >= 1 && dampNum >= 0 && dampNum <= dampDen,
       "need iters >= 1 and 0 <= dampNum <= dampDen")
-    import org.apache.spark.sql.GraftSql.{persistedView, unpersistCheckpoint}
+    import org.apache.spark.sql.GraftSql.unpersistCheckpoint
+    import org.apache.spark.sql.OracleViews.persistedView
     require(edges.schema(srcCol).dataType == edges.schema(dstCol).dataType,
       s"node id columns must share a type; got $srcCol: " +
         s"${edges.schema(srcCol).dataType}, $dstCol: " +
@@ -68,7 +69,8 @@ object JoinBackRank {
       scale: Long = 1000000000L): DataFrame = {
     require(iters >= 1 && dampNum >= 0 && dampNum <= dampDen,
       "need iters >= 1 and 0 <= dampNum <= dampDen")
-    import org.apache.spark.sql.GraftSql.{persistedView, unpersistCheckpoint}
+    import org.apache.spark.sql.GraftSql.unpersistCheckpoint
+    import org.apache.spark.sql.OracleViews.persistedView
     require(edges.schema(srcCol).dataType == edges.schema(dstCol).dataType,
       s"node id columns must share a type; got $srcCol: " +
         s"${edges.schema(srcCol).dataType}, $dstCol: " +

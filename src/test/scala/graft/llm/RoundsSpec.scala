@@ -177,7 +177,7 @@ class RoundsSpec extends SparkSpec {
     val before = persisted
     val kept = Dedup.dropNearDuplicates(docs, "doc_id", "text")
     release(kept)
-    // jaccardShinglePairs' two localCheckpoints are released by the call
+    // jaccardShinglePairs' two materializations are released by the call
     // that made them, once the clusters are materialized
     val left = persisted -- before
     left.foreach(spark.sparkContext.getPersistentRDDs(_).unpersist())
@@ -198,12 +198,12 @@ class RoundsSpec extends SparkSpec {
     def drop = Dedup.dropNearDuplicates(docs, "doc_id", "text")
     // the shingle sets and prefix index, the sized pair view, its collect
     assert(kinds(clusters) ==
-      Seq("collect", "localCheckpoint", "localCheckpoint", "sizedView"))
+      Seq("collect", "sizedView", "sizedView", "sizedView"))
     // ... and the sized loser set
     assert(kinds(drop) == (kinds(clusters) :+ "sizedView").sorted)
-    // a bound of -1 forces the distributed route: the same two checkpoints
-    // and pair view, the node representatives, the edges, initial labels
-    // and 2 rounds of connectedComponents, and the fan-out's checkpoint
+    // a bound of -1 forces the distributed route: the same two
+    // materializations and pair view, the node representatives, the edges,
+    // initial labels and 2 rounds of connectedComponents, and the fan-out
     val (dc, dd) = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(
       (kinds(clusters), kinds(drop)))
     assert(dc.size == 9, dc.mkString(", "))

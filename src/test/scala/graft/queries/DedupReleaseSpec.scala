@@ -10,8 +10,9 @@ import graft.{Artifacts, SparkEntry, SparkSpec, Tables}
 /** Storage hygiene of the registry's pairs → components → anti-join
   * builders and of the media pair-graph builds, on temp copies of
   * sf0.001's documents and embeddings: once a query's output is
-  * released, nothing it persisted is left; a pair-graph build pins only
-  * the stored relation, which the store's eviction releases. */
+  * released, nothing it persisted is left; a relation build pins only
+  * the stored relation, which the store's eviction releases; a model
+  * trained through Spark pins nothing. */
 class DedupReleaseSpec extends SparkSpec {
 
   private def persisted: Set[Int] =
@@ -54,15 +55,41 @@ class DedupReleaseSpec extends SparkSpec {
       assert(persisted -- before == Set.empty)
     }
 
-  for ((kind, build) <- Seq[(String, String => Any)](
-      "videoPairs" -> (LlmQueries.videoPairs(spark, _)),
-      "mp4Pairs" -> (LlmQueries.mp4Pairs(spark, _))))
+  // (kind, what must be in the store first, the build)
+  for ((kind, deps, build) <- Seq[(String, String => Any, String => Any)](
+      ("videoPairs", _ => (), LlmQueries.videoPairs(spark, _)),
+      ("mp4Pairs", _ => (), LlmQueries.mp4Pairs(spark, _)),
+      ("jaccardPairs", _ => (), LlmQueries.jaccardPairs(spark, _)),
+      ("contamScores", _ => (), LlmQueries.contamScores(spark, _)),
+      ("webEdges", _ => (), LlmQueries.webEdges(spark, _)),
+      ("curationDrops",
+        d => (LlmQueries.jaccardPairs(spark, d),
+          LlmQueries.contamScores(spark, d)),
+        LlmQueries.curationDrops(spark, _)),
+      ("fixedQueryBatch", _ => (), LlmQueries.fixedQueryBatch(spark, _)),
+      ("ivfIndex", _ => (), LlmQueries.ivfIndex(spark, _)),
+      ("imiIndex", _ => (), LlmQueries.imiIndex(spark, _)),
+      ("ivfPqIndex", _ => (), LlmQueries.ivfPqIndex(spark, _))))
     test(s"$kind pins only its stored relation, released by eviction") {
       val dir = tempCopy()
+      deps(dir)
       val before = persisted
       build(dir)
       assert((persisted -- before).size == 1)
       Artifacts.evict(spark, Set(kind))
+      assert(persisted -- before == Set.empty)
+    }
+
+  for ((kind, build) <- Seq[(String, String => Any)](
+      "trainedCentroids" -> (LlmQueries.trainedCentroids(spark, _)),
+      "trainedPqBooks" -> (LlmQueries.trainedPqBooks(spark, _)),
+      "trainedRpSplits" -> (LlmQueries.trainedRpSplits(spark, _)),
+      "trainedRpForest" -> (LlmQueries.trainedRpForest(spark, _, 2, 3)),
+      "bpeMerges" -> (LlmQueries.bpeMerges(spark, _))))
+    test(s"$kind, a model built through Spark, pins nothing") {
+      val dir = tempCopy()
+      val before = persisted
+      build(dir)
       assert(persisted -- before == Set.empty)
     }
 }
