@@ -77,7 +77,7 @@ object Bench {
     // bad run, so regressions become signal. Failures are reported
     // per-query as {"err": msg} and excluded from `total` so a broken
     // query can never masquerade as a timing.
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
+    val reps = 3
     // INTERLEAVED control sampling: one control run every `ctlEvery`
     // queries, not just pre/post. r10's artifact carried a 5-query
     // regression cluster (up to 7.5×) on untouched, alphabetically
@@ -88,7 +88,7 @@ object Bench {
     // above driftMax × the run's best control gets its queries listed
     // in "suspect_queries" so a reader can discount (or re-measure)
     // them instead of mistaking box noise for a code regression.
-    val ctlEvery = sys.env.getOrElse("SPARK_GRAFT_CONTROL_EVERY", "25").toInt
+    val ctlEvery = 25
     // One full timed pass, bracketed and interleaved by the control
     // query: (pre, results, post, mid-run samples).
     def runLoop(): (Double, Seq[(String, Either[String, Double])], Double,
@@ -150,8 +150,7 @@ object Bench {
     // "contaminated": true so a loaded box can never produce an official
     // bench that masquerades as a code regression. Both control pairs are
     // always recorded for audit.
-    val driftMax =
-      sys.env.getOrElse("SPARK_GRAFT_CONTROL_DRIFT", "1.5").toDouble
+    val driftMax = 1.5
     def drifted(pre: Double, post: Double): Boolean =
       post / pre > driftMax || pre / post > driftMax
     // The r13 failure signature: endpoints CLEAN, the majority of
@@ -207,8 +206,7 @@ object Bench {
     // DURING the query's reps — finer-grained than the window audit,
     // and the only signal when a spike lives entirely between two
     // clean control samples.
-    val repSpreadMax =
-      sys.env.getOrElse("SPARK_GRAFT_REP_SPREAD", "3.0").toDouble
+    val repSpreadMax = 3.0
     def dispersionSuspectsOf(
         spreads: Seq[(String, Double, Double, Double)]): Seq[String] =
       spreads.collect {
@@ -230,16 +228,15 @@ object Bench {
     // drift does, and self-marks contaminated if no attempt gets under
     // the ceiling — so n_suspect above the ceiling can never again ship
     // as a clean artifact.
-    val suspectMax =
-      sys.env.getOrElse("SPARK_GRAFT_SUSPECT_MAX", "10").toInt
+    val suspectMax = 10
     // SELF-HEALING attempts loop (round 16): the r15 official artifact
     // was honest but unusable — the windows-saturated gate flagged it
     // and a single retry wasn't enough for the box's load window to
     // pass, so the round closed with no clean official number. Now the
     // bench re-runs the FULL pass (per-query medians stay comparable;
     // re-running only suspects would time half the suite under a
-    // different cache/JIT state) up to SPARK_GRAFT_BENCH_ATTEMPTS
-    // times, sleeping SPARK_GRAFT_BENCH_SETTLE_MS between attempts so a
+    // different cache/JIT state) up to `maxAttempts`
+    // times, sleeping `settleMs` between attempts so a
     // transient load window can drain, and emits the FIRST clean pass
     // as the artifact. Every discarded attempt is recorded (controls,
     // suspect count, total) — the re-measurement is auditable, never
@@ -251,10 +248,8 @@ object Bench {
       drifted(p, q) || midContaminated(p, q, m) ||
         windowsSaturated(p, q, m, r) ||
         suspectsOf(p, q, m, r, s).size > suspectMax
-    val maxAttempts =
-      math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_ATTEMPTS", "3").toInt)
-    val settleMs =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_SETTLE_MS", "60000").toLong
+    val maxAttempts = 3
+    val settleMs = 60000L
     val discarded =
       scala.collection.mutable.ArrayBuffer[(Double, Double, Int, Double)]()
     val (controlPre, results, controlPost, midCtls, repSpread,

@@ -62,8 +62,8 @@ object Curation {
     * semi-join (pair locality above).
     *
     * The returned frame is SMALL (bounded by the dup + contamination
-    * rate), EAGERLY materialized and persisted (the clustering inside is
-    * iterative, hence eager, so laziness here would be a fiction); every
+    * rate), EAGERLY materialized and persisted (the clustering inside
+    * runs eager jobs, so laziness here would be a fiction); every
     * intermediate is unpersisted before return. Release it with
     * `GraftSql.unpersistCheckpoint` when the corpus snapshot is
     * superseded. */
@@ -93,7 +93,7 @@ object Curation {
       .join(sb, col("id_b") === col("__kb"), "left_semi")
     // Near-dup losers: non-representative members of the connected
     // components over the restricted edge set (representative = min id,
-    // exactly the iterative operator's label).
+    // exactly the operator's label, on either of its routes).
     val labels = Dedup.connectedComponents(restricted, "id_a", "id_b")
     val nearLosers = labels
       .filter(col("doc_id") =!= col("cluster_id"))
@@ -111,10 +111,11 @@ object Curation {
       exactLosers.union(nearLosers).union(contam).distinct()
         .select(col("doc_id").as("__graft_drop")))
     unpersistCheckpoint(ranked)
-    // the labels frame carries a projection over its persisted result, so
-    // the top-level variant would no-op (tree variant is safe here: the
-    // only persisted leaves are CC's own — `restricted` reads the caller's
-    // pair index lazily, and lazy plans contribute no LogicalRDD leaf)
+    // on the rounds route the labels frame carries a projection over its
+    // persisted result, so the top-level variant would no-op (tree variant
+    // is safe here: the only persisted leaves are CC's own — `restricted`
+    // reads the caller's pair index lazily, and lazy plans contribute no
+    // LogicalRDD leaf; the driver route's local labels have none)
     unpersistCheckpointTree(labels)
     drops
   }

@@ -368,20 +368,6 @@ object Dedup {
       .select("id_a", "id_b", "est_sim", "jaccard")
   }
 
-  /** SimHash near-dup pairs over word bigrams (unigrams collapse on small
-    * vocabularies): 64-bit simhash, banded candidate generation over
-    * 4 × 16-bit bands — by pigeonhole any pair with hamming ≤ 3 agrees on
-    * ≥1 band, so recall is EXACT for hammingMax ≤ bands-1 — verified with
-    * the exact hamming distance. Output: (id_a, id_b, hamming).
-    *
-    * Scale: 16-bit bands give 65,536 buckets per band, so the banded
-    * self-join degrades as O(N²/65536) per band at uniform fill — the
-    * round-2 8-bit bands (256 buckets) were quadratic ~256× sooner, fatal
-    * at 10⁹ docs. The 64-bit fingerprint is carried as TWO positive
-    * 32-bit halves (`lo`, `hi`, from md5 hex chars 1-8 and 9-16 of each
-    * bigram) rather than one signed 64-bit value: every number stays in
-    * [0, 2^32), so no shift/overflow sign traps in either engine and the
-    * DuckDB oracle is bit-for-bit reproducible. */
   /** Near-dup CLUSTER ASSIGNMENT — the step after pair generation that an
     * actual dedup pipeline needs: connected components over the pair
     * graph, labeling every involved document with the smallest doc id
@@ -389,66 +375,107 @@ object Dedup {
     * then `cluster_id = doc_id` survivors. Output: (doc_id, cluster_id)
     * for every doc appearing in ≥1 pair.
     *
-    * Algorithm: iterative min-label propagation WITH POINTER JUMPING
-    * (path halving) to a fixpoint. Each round does two rewires in one
-    * aggregation — (a) propagate labels across edges, (b) shortcut each
-    * node's label through its label's own label (every label value IS a
-    * node id, so `lbl(lbl(id))` is a self-join on the label relation) —
-    * then takes the per-node min. The shortcut halves label-chain depth
-    * per round, so convergence is O(log diameter) rounds rather than the
-    * O(diameter) of plain propagation: a 300-doc chain of template
-    * near-dups converges in ~9 rounds instead of 300 (spec-proved).
+    * Planned from the graph's MEASURED size: one job materializes the
+    * (a, b) projection (`GraftSql.sizedView`), counting NULL ids in the
+    * same pass, and its exact byte size picks the route.
+    *
+    * '''Driver route''' — the pairs fit Spark's broadcast bound
+    * (`GraftSql.fitsBroadcast`: `0 ≤ bytes ≤
+    * spark.sql.autoBroadcastJoinThreshold`, so -1 never fits) and the id
+    * type has value equality and a Spark ordering on the driver
+    * ([[driverOrdered]]). One more job collects the pairs;
+    * [[driverComponents]] union-finds them and the labels come back as a
+    * local relation. These are the bytes a broadcast join would collect
+    * anyway: two jobs in all, no label rounds.
+    *
+    * '''Rounds route''' — everything else: [[labelRounds]], min-label
+    * propagation with pointer jumping on [[Rounds]], reading the same
+    * materialization. Given a clique map (`cliques: (id, rep)`, each rep
+    * the min id of a set of nodes known to be mutually connected, such as
+    * exact duplicates), the cliques are first contracted to their reps
+    * and the labels fanned back out afterwards ([[contractedComponents]]).
+    * `maxIter` bounds this route's rounds only — a graph still changing
+    * after `maxIter` rounds fails; the driver route runs no rounds and
+    * never reads `cliques`.
+    *
+    * Ids keep their ORIGINAL column type end-to-end (any orderable atomic
+    * type — long, string, UUID-as-string — works; `min` is the label
+    * order). NULL ids are rejected eagerly, alike on both routes: a NULL
+    * would silently drop edges (NULL never equi-joins) and turn dedup
+    * into a no-op. Both routes return the same rows and schema, and
+    * neither leaves the pair materialization persisted. The rounds
+    * route's result reads its materialized labels (through a projection
+    * when no clique map is given), so release it with
+    * `unpersistCheckpointTree`. */
+  def connectedComponents(
+      pairs: DataFrame, aCol: String, bCol: String,
+      maxIter: Int = 50, cliques: Option[DataFrame] = None): DataFrame = {
+    import org.apache.spark.sql.GraftSql.{fitsBroadcast, unpersistCheckpoint}
+    val idType = pairIdType(pairs, aCol, bCol)
+    val (p, nulls) =
+      sizedView(pairs.select(col(aCol).as("a"), col(bCol).as("b")), nullEnds)
+    try {
+      require(nulls == 0L, nullIdsMessage(aCol, bCol))
+      if (fitsBroadcast(p) && driverOrdered(idType)) driverComponents(p, idType)
+      else cliques.fold(labelRounds(p, maxIter))(
+        contractedComponents(p, _, maxIter))
+    } finally unpersistCheckpoint(p)
+  }
+
+  /** [[connectedComponents]]' rounds route over the materialized pair
+    * view `p` (non-NULL columns a, b): iterative min-label propagation
+    * WITH POINTER JUMPING (path halving) to a fixpoint. Each round does
+    * two rewires in one aggregation — (a) propagate labels across edges,
+    * (b) shortcut each node's label through its label's own label (every
+    * label value IS a node id, so `lbl(lbl(id))` is a self-join on the
+    * label relation) — then takes the per-node min. The shortcut halves
+    * label-chain depth per round, so convergence is O(log diameter)
+    * rounds rather than the O(diameter) of plain propagation: a 300-doc
+    * chain of template near-dups converges in ~9 rounds instead of 300
+    * (spec-proved).
+    *
     * Each round is two hash-partitioned joins + a map-side-combined
     * `min`, run by the [[Rounds]] loop: the round's one job materializes
     * the labels (flat Catalyst plan, RDD lineage PRESERVED, so an
     * executor loss recomputes instead of failing; the superseded round
     * is released, so executor memory stays O(1) in the iteration count)
     * and counts the labels that changed — zero is the fixpoint, so no
-    * convergence job of its own. The edge materialization's job likewise
-    * counts NULL endpoints.
-    *
-    * Ids keep their ORIGINAL column type end-to-end (any orderable atomic
-    * type — long, string, UUID-as-string — works; `min` is the label
-    * order). NULL ids are rejected eagerly: a NULL would silently drop
-    * edges (NULL never equi-joins) and turn dedup into a no-op. */
-  def connectedComponents(
-      pairs: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 50): DataFrame = {
-    import org.apache.spark.sql.GraftSql.{unpersistCheckpoint,
-      unpersistCheckpointTree}
-    pairIdType(pairs, aCol, bCol)
-    val e = pairs.select(col(aCol).as("a"), col(bCol).as("b"))
-    val (edges, nulls) = sizedView(
-      e.union(e.select(col("b").as("a"), col("a").as("b"))), nullEnds)
-    try {
-      require(nulls == 0L, nullIdsMessage(aCol, bCol))
-      val init = sizedView(edges.select(col("a").as("id")).distinct()
-        .select(col("id"), col("id").as("lbl")))
-      // scalar: labels changed by the round (-1 before the first)
-      val (labels, changed, _) =
-        Rounds.run(init, -1L, maxIter, stop = _ == 0L) { (labels, _, _) =>
-          val prop = edges.join(labels, edges("a") === labels("id"))
-            .select(edges("b").as("id"), col("lbl"))
-          val jump = labels.as("x")
-            .join(labels.as("p"), col("x.lbl") === col("p.id"))
-            .select(col("x.id").as("id"), col("p.lbl").as("lbl"))
-          // The node's OWN current label rides through the union (non-null
-          // only on the `labels` contribution, which has exactly one row
-          // per id), so the change test is row-local — no per-round join
-          // against the previous state.
-          val lblType = labels.schema("lbl").dataType
-          (labels.select(col("id"), col("lbl")).withColumn("own", col("lbl"))
-            .union(prop.withColumn("own", lit(null).cast(lblType)))
-            .union(jump.withColumn("own", lit(null).cast(lblType)))
-            .groupBy("id").agg(min("lbl").as("lbl"), min("own").as("own"))
-            .select(col("id"), col("lbl"), (col("lbl") < col("own")).as("chg")),
-            r => if (!r.isNullAt(2) && r.getBoolean(2)) 1L else 0L)
-        }
-      if (changed != 0L) unpersistCheckpointTree(labels)
-      require(changed == 0L,
-        s"connectedComponents did not converge in $maxIter rounds")
-      labels.select(col("id").as("doc_id"), col("lbl").as("cluster_id"))
-    } finally unpersistCheckpoint(edges)
+    * convergence job of its own. The symmetric edge set is a lazy union
+    * over `p`: past `p`, the route pays one job for the initial labels
+    * and one per round. */
+  private def labelRounds(p: DataFrame, maxIter: Int): DataFrame = {
+    import org.apache.spark.sql.GraftSql.unpersistCheckpointTree
+    val edges = p.union(p.select(col("b").as("a"), col("a").as("b")))
+    val init = sizedView(edges.select(col("a").as("id")).distinct()
+      .select(col("id"), col("id").as("lbl")))
+    // scalar: labels changed by the round (-1 before the first)
+    val (labels, changed, _) =
+      Rounds.run(init, -1L, maxIter, stop = _ == 0L) { (labels, _, _) =>
+        val prop = edges.join(labels, edges("a") === labels("id"))
+          .select(edges("b").as("id"), col("lbl"))
+        val jump = labels.as("x")
+          .join(labels.as("p"), col("x.lbl") === col("p.id"))
+          .select(col("x.id").as("id"), col("p.lbl").as("lbl"))
+        // The node's OWN current label rides through the union (non-null
+        // only on the `labels` contribution, which has exactly one row
+        // per id), so the change test is row-local — no per-round join
+        // against the previous state.
+        val lblType = labels.schema("lbl").dataType
+        (labels.select(col("id"), col("lbl")).withColumn("own", col("lbl"))
+          .union(prop.withColumn("own", lit(null).cast(lblType)))
+          .union(jump.withColumn("own", lit(null).cast(lblType)))
+          .groupBy("id").agg(min("lbl").as("lbl"), min("own").as("own"))
+          .select(col("id"), col("lbl"), (col("lbl") < col("own")).as("chg")),
+          r => if (!r.isNullAt(2) && r.getBoolean(2)) 1L else 0L)
+      }
+    if (changed != 0L) unpersistCheckpointTree(labels)
+    require(changed == 0L,
+      s"connectedComponents did not converge in $maxIter rounds")
+    // `min` declares its result nullable; the label is never NULL (ids
+    // are not), and the coalesce gives it the ids' nullability, as on
+    // the driver route
+    labels.select(col("id").as("doc_id"),
+      coalesce(col("lbl"), col("id")).as("cluster_id"))
   }
 
   /** Bound near-dup PAIR EMISSION to the `k` best pairs per document —
@@ -528,77 +555,36 @@ object Dedup {
     s"connectedComponents: NULL ids in ($aCol, $bCol) — NULL never " +
       "equi-joins, so its edges would silently vanish; filter or fix ids"
 
-  /** Connected components of a pair graph, planned from its MEASURED
-    * size: one job materializes the (a, b) projection
-    * (`GraftSql.sizedView`), counting NULL ids on the way, and the exact
-    * byte size picks the route.
-    *
-    * '''Driver route''' — the pairs fit Spark's broadcast bound
-    * (`GraftSql.fitsBroadcast`: `0 ≤ bytes ≤
-    * spark.sql.autoBroadcastJoinThreshold`, so -1 never fits) and the id
-    * type has value equality and a Spark ordering on the driver
-    * (integral, date, timestamp, decimal, boolean, binary-collation
-    * string). One more job collects the pairs; [[driverComponents]]
-    * union-finds them and the labels come back as a local relation.
-    * These are the bytes a broadcast join would collect anyway, and none
-    * of the contraction's or the label rounds' jobs run.
-    *
-    * '''Distributed route''' — everything else: CLIQUE PRE-CONTRACTION,
-    * then the iterative [[connectedComponents]]. Nodes known to be
-    * mutually connected (exact duplicates, via `repMap: (id, rep)`) are
-    * collapsed to their representative BEFORE the iterative CC, and the
-    * component labels fan back out afterwards. On a duplicate-heavy
-    * corpus (the regime where near-dup dedup matters) this shrinks the
-    * CC input by the duplicate factor — the 100× stress probe's dup-soup
-    * graph is near-complete, and a complete subgraph of k exact copies
-    * contributes k·(k-1)/2 edges that propagation would otherwise chew
-    * through every round. Lossless: contracting edges between
-    * already-connected nodes preserves components, and because each rep
-    * IS the min id of its clique, the contracted component's min-label
-    * equals the original component's min doc id. Docs whose clique has
-    * no external edge get their rep as the label directly. `maxIter`
-    * bounds this route's label rounds only; the driver route runs no
-    * rounds and never reads `repMap`.
-    *
-    * Both routes return the same relation — every pair-graph node with
-    * its component's minimum id, `(doc_id, cluster_id)` in the ids'
-    * column type — and both reject NULL ids with [[connectedComponents]]'
-    * message. Neither leaves the pair materialization persisted. */
-  def connectedComponentsContracted(
-      pairs: DataFrame, aCol: String, bCol: String,
-      repMap: DataFrame, maxIter: Int = 50): DataFrame = {
-    import org.apache.spark.sql.GraftSql.{fitsBroadcast, unpersistCheckpoint}
-    val idType = pairIdType(pairs, aCol, bCol)
-    // pairs feed TWO consumers on the distributed route (node set + edge
-    // contraction): materialize once — recomputing the full pair
-    // pipeline per consumer cost more than the contraction saved on
-    // low-dup corpora
-    val (p, nulls) = sizedView(pairs.select(col(aCol), col(bCol)), nullEnds)
-    if (nulls != 0L) unpersistCheckpoint(p)
-    require(nulls == 0L, nullIdsMessage(aCol, bCol))
-    try {
-      if (fitsBroadcast(p) && driverOrdered(idType)) driverComponents(p, idType)
-      else contractedComponents(p, aCol, bCol, repMap, maxIter)
-    } finally unpersistCheckpoint(p)
-  }
-
-  /** [[connectedComponentsContracted]]'s distributed route over the
-    * materialized pair view `p`. */
+  /** [[connectedComponents]]' rounds route with CLIQUE PRE-CONTRACTION,
+    * over the materialized pair view `p` (columns a, b). Nodes known to
+    * be mutually connected (`repMap: (id, rep)`) are collapsed to their
+    * representative BEFORE the label rounds, and the component labels
+    * fan back out afterwards. On a duplicate-heavy corpus (the regime
+    * where near-dup dedup matters) this shrinks the CC input by the
+    * duplicate factor — the 100× stress probe's dup-soup graph is
+    * near-complete, and a complete subgraph of k exact copies contributes
+    * k·(k-1)/2 edges that propagation would otherwise chew through every
+    * round. Lossless: contracting edges between already-connected nodes
+    * preserves components, and because each rep IS the min id of its
+    * clique, the contracted component's min-label equals the original
+    * component's min doc id. Docs whose clique has no external edge get
+    * their rep as the label directly. The contracted graph is itself
+    * routed by [[connectedComponents]], so one that measures within the
+    * broadcast bound is union-found on the driver. */
   private def contractedComponents(
-      p: DataFrame, aCol: String, bCol: String,
-      repMap: DataFrame, maxIter: Int): DataFrame = {
+      p: DataFrame, repMap: DataFrame, maxIter: Int): DataFrame = {
     import org.apache.spark.sql.GraftSql.{unpersistCheckpoint,
       unpersistCheckpointTree}
-    val nodes = p.select(col(aCol).as("id"))
-      .union(p.select(col(bCol).as("id"))).distinct()
+    val nodes = p.select(col("a").as("id"))
+      .union(p.select(col("b").as("id"))).distinct()
     // every pair-graph node's representative (itself when not an exact dup)
     val nr = sizedView(
       nodes.join(repMap, Seq("id"), "left")
         .select(col("id"), coalesce(col("rep"), col("id")).as("rep")))
     try {
       val contracted = p
-        .join(nr.select(col("id").as(aCol), col("rep").as("__ra")), aCol)
-        .join(nr.select(col("id").as(bCol), col("rep").as("__rb")), bCol)
+        .join(nr.select(col("id").as("a"), col("rep").as("__ra")), "a")
+        .join(nr.select(col("id").as("b"), col("rep").as("__rb")), "b")
         .filter(col("__ra") =!= col("__rb")) // clique-internal edges vanish
         .select(col("__ra"), col("__rb")).distinct()
       val cc = connectedComponents(contracted, "__ra", "__rb", maxIter)
@@ -626,9 +612,9 @@ object Dedup {
     case _ => false
   }
 
-  /** [[connectedComponentsContracted]]'s driver route over the
-    * materialized pair view `p` (two non-NULL `t` columns): one job
-    * collects its rows, then union-find runs over dense node indices.
+  /** [[connectedComponents]]' driver route over the materialized pair
+    * view `p` (two non-NULL `t` columns): one job collects its rows, then
+    * union-find runs over dense node indices.
     * Nodes are numbered in Spark's ordering for `t` (sorted, not hashed),
     * so pointing the larger root at the smaller leaves every root at its
     * component's minimum id — `min`'s answer, string ids included
@@ -757,16 +743,17 @@ object Dedup {
   /** [[nearDupClusters]] over PRECOMPUTED pairs — the build-once shape:
     * one pair materialization serves pair emission, clustering and
     * dedup (deterministic inputs ⇒ identical results, one shuffle paid
-    * instead of three). Runs [[connectedComponentsContracted]]: a pair
-    * graph that measures within the broadcast bound is union-found on
-    * the driver; a larger one has its exact-dup cliques (`df`'s
-    * normalized-text md5 groups) contracted before the label rounds.
-    * Either way the result is materialized and no longer reads `pairs`. */
+    * instead of three). Runs [[connectedComponents]] with `df`'s
+    * exact-dup cliques (normalized-text md5 groups) as the clique map: a
+    * pair graph that measures within the broadcast bound is union-found
+    * on the driver; a larger one has its cliques contracted before the
+    * label rounds. Either way the result is materialized and no longer
+    * reads `pairs`. */
   def nearDupClustersFromPairs(
       pairs: DataFrame, df: DataFrame, idCol: String,
       textCol: String): DataFrame =
-    connectedComponentsContracted(
-      pairs, "id_a", "id_b", exactRepMap(df, idCol, textCol))
+    connectedComponents(pairs, "id_a", "id_b",
+      cliques = Some(exactRepMap(df, idCol, textCol)))
 
   /** EXACT DUPLICATED-SPAN detection — the span-level measure between
     * whole-document exact dedup and containment search (the "dedup the
@@ -957,7 +944,7 @@ object Dedup {
       .filter(col("doc_id") =!= col("keep"))
       .select(col("doc_id").as("__graft_loser"))
     try antiJoinDropSized(df, idCol, losers)
-    finally org.apache.spark.sql.GraftSql.unpersistCheckpoint(clusters)
+    finally org.apache.spark.sql.GraftSql.unpersistCheckpointTree(clusters)
   }
 
   /** The (doc_id, lo, hi) 64-bit fingerprint relation behind
@@ -983,6 +970,20 @@ object Dedup {
       .select(col("doc_id"), half("a").as("lo"), half("b").as("hi"))
   }
 
+  /** SimHash near-dup pairs over word bigrams (unigrams collapse on small
+    * vocabularies): 64-bit simhash, banded candidate generation over
+    * 4 × 16-bit bands — by pigeonhole any pair with hamming ≤ 3 agrees on
+    * ≥1 band, so recall is EXACT for hammingMax ≤ bands-1 — verified with
+    * the exact hamming distance. Output: (id_a, id_b, hamming).
+    *
+    * Scale: 16-bit bands give 65,536 buckets per band, so the banded
+    * self-join degrades as O(N²/65536) per band at uniform fill — the
+    * round-2 8-bit bands (256 buckets) were quadratic ~256× sooner, fatal
+    * at 10⁹ docs. The 64-bit fingerprint is carried as TWO positive
+    * 32-bit halves (`lo`, `hi`, from md5 hex chars 1-8 and 9-16 of each
+    * bigram) rather than one signed 64-bit value: every number stays in
+    * [0, 2^32), so no shift/overflow sign traps in either engine and the
+    * DuckDB oracle is bit-for-bit reproducible. */
   def simHashPairs(
       df: DataFrame, idCol: String, textCol: String,
       hammingMax: Int = 3): DataFrame = {

@@ -1656,8 +1656,10 @@ object LlmQueries {
     // converged edges (≥ τ), NOT from probing an index with the corpus
     // as a query batch (N × in-cell occupancy) and not from IVF-cell
     // confinement (which can split a duplicate cluster across cells).
-    // Components via the iterative min-label CC; keep = the component's
-    // min id (the CC label itself), singletons keep. The oracle replays
+    // Components via Dedup.connectedComponents (union-find on the driver
+    // when the pair graph measures within the broadcast bound, label
+    // rounds otherwise); keep = the component's min id (the CC label
+    // itself), singletons keep. The oracle replays
     // the whole graph chain + a recursive-CTE CC.
     "dedup_semdedup_graph" -> ((s, dir) => {
       val e = emb(s, dir)
@@ -1665,7 +1667,8 @@ object LlmQueries {
         k = 5, rounds = 2)
       val comp = Dedup.connectedComponents(
         g.filter(col("sim") >= 0.35).select("qid", "nid"), "qid", "nid")
-      // CC materialized its own edge relation: the graph is unread now
+      // CC materialized its own pair view and its labels no longer read
+      // the graph: release it now
       org.apache.spark.sql.GraftSql.unpersistCheckpointTree(g)
       e.select(col("vec_id"))
         .join(comp.select(col("doc_id").as("vec_id"), col("cluster_id")),
@@ -2079,7 +2082,9 @@ object LlmQueries {
 
     // the dedup CONSUMER of the image near-dup pairs: hamming clusters
     // → drop every non-minimum member → the surviving image id set
-    // (pairs → CC → anti join, the dropNearDuplicates skeleton)
+    // (pairs → CC → anti join, the dropNearDuplicates skeleton; the CC
+    // union-finds a graph that measures broadcast-sized on the driver,
+    // as do the audio, video and MP4 consumers below)
     "mm_image_dedup" -> ((s, dir) => {
       // read by both banded-join sides, CC, and the final anti join —
       // materialize or the decode pipeline runs once per consumer

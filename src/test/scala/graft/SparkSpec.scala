@@ -43,4 +43,27 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     finally spark.sparkContext.removeSparkListener(listener)
     n.get()
   }
+
+  /** The call site of every job `f` launches itself — AQE's query-stage
+    * and broadcast jobs (submitted from Spark's async stage pool) are
+    * left out, so what remains are the operator's own eager actions. */
+  def ownJobs(f: => Unit): Seq[String] = {
+    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        names.add(j.stageInfos.maxBy(_.stageId).name)
+    }
+    GraftSql.awaitListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try { f; GraftSql.awaitListenerBus(spark) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    names.toArray(Array.empty[String]).toSeq
+      .filterNot(_.contains("CompletableFuture"))
+  }
+
+  /** `f` with `spark.sql.autoBroadcastJoinThreshold` at -1, restored
+    * afterwards: no pair graph fits the broadcast bound, so
+    * `Dedup.connectedComponents` takes its label-rounds route. */
+  def onRoundsRoute[T](f: => T): T =
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(f)
 }

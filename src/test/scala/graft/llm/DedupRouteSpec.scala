@@ -4,23 +4,20 @@ import org.apache.spark.sql.{DataFrame, GraftSql, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.types.StructType
 
-import graft.SparkSpec
+import graft.SfCopies
 
-/** [[Dedup.connectedComponentsContracted]] picks its route from the
-  * measured pair size: union-find on the driver when the pairs fit
-  * `spark.sql.autoBroadcastJoinThreshold`, contraction plus label rounds
-  * otherwise. Both routes must give the same labels, schema and errors;
+/** [[Dedup.connectedComponents]] picks its route from the measured pair
+  * size: union-find on the driver when the pairs fit
+  * `spark.sql.autoBroadcastJoinThreshold`, label rounds otherwise (after
+  * clique contraction when a clique map is given). Both routes must give
+  * the same labels, schema and errors — to the operator's callers too;
   * each test runs the default bound (driver route) and a bound of -1
-  * (distributed route) on the same input. */
-class DedupRouteSpec extends SparkSpec {
+  * (rounds route) on the same input. */
+class DedupRouteSpec extends SfCopies {
   import spark.implicits._
 
   private def persisted: Set[Int] =
     spark.sparkContext.getPersistentRDDs.keySet.toSet
-
-  /** `f` with the broadcast bound set to -1, restored afterwards. */
-  private def distributed[T](f: => T): T =
-    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(f)
 
   /** Schema and rows of a materialized cluster labelling, then released;
     * `driver` says which route must have produced it (a local relation
@@ -35,7 +32,7 @@ class DedupRouteSpec extends SparkSpec {
   /** The labels of `clusters` on both routes, asserted equal. */
   private def sameOnBothRoutes(clusters: => DataFrame): Map[Any, Any] = {
     val (dSchema, dRows) = labels(clusters, driver = true)
-    val (sSchema, sRows) = distributed(labels(clusters, driver = false))
+    val (sSchema, sRows) = onRoundsRoute(labels(clusters, driver = false))
     assert(dSchema == sSchema)
     assert(dRows == sRows)
     dRows.map(r => r.get(0) -> r.get(1)).toMap
@@ -50,7 +47,7 @@ class DedupRouteSpec extends SparkSpec {
       try (out.schema, out.select("doc_id").collect().toSet)
       finally GraftSql.unpersistCheckpointTree(out)
     }
-    assert(kept() == distributed(kept()))
+    assert(kept() == onRoundsRoute(kept()))
   }
 
   test("isolated exact cliques and mixed components on both routes") {
@@ -95,6 +92,59 @@ class DedupRouteSpec extends SparkSpec {
     }
     val onDriverRoute = message()
     assert(onDriverRoute.contains("connectedComponents: NULL ids in (id_a, id_b)"))
-    assert(distributed(message()) == onDriverRoute)
+    assert(onRoundsRoute(message()) == onDriverRoute)
+  }
+
+  test("plain connected components: same labels and schema on both " +
+      "routes, for non-nullable and nullable ids") {
+    val longs = sameOnBothRoutes(Dedup.connectedComponents(
+      Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b"),
+      "id_a", "id_b"))
+    assert(longs == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L,
+      11L -> 10L))
+    val strings = sameOnBothRoutes(Dedup.connectedComponents(
+      Seq(("b", "a"), ("c", "b"), ("x", "y")).toDF("id_a", "id_b"),
+      "id_a", "id_b"))
+    assert(strings == Map("a" -> "a", "b" -> "a", "c" -> "a", "x" -> "x",
+      "y" -> "x"))
+  }
+
+  // the store's pair graphs and drop set are this suite's own
+  private lazy val copyDir: String = tempCopy()
+
+  /** Schema and rows (a multiset) of `build`'s frame, then released;
+    * `driver` says whether the driver union-find (the one `collect` in
+    * Dedup.scala) must have run while building it. */
+  private def output(build: => DataFrame,
+      driver: Boolean): (StructType, Seq[String]) = {
+    var df: DataFrame = null
+    val own = ownJobs { df = build }
+    assert(own.exists(_.startsWith("collect at Dedup.scala")) == driver,
+      own.mkString(", "))
+    try (df.schema, df.collect().map(_.toSeq.mkString("|")).toSeq.sorted)
+    finally GraftSql.unpersistCheckpointTree(df)
+  }
+
+  for (name <- Seq("mm_image_dedup", "mm_audio_dedup", "mm_video_dedup",
+      "mm_mp4_dedup", "dedup_semdedup_graph"))
+    test(s"$name gives the same rows and schema on both routes") {
+      val dir = copyDir
+      def run = graft.SparkEntry.queries(name)(spark, dir)
+      val (schema, rows) = output(run, driver = true)
+      assert(rows.nonEmpty)
+      assert(onRoundsRoute(output(run, driver = false)) == ((schema, rows)))
+    }
+
+  test("the curation drop set is the same on both routes") {
+    val dir = copyDir
+    // the drop set is a stored artifact: each route builds its own
+    def build = {
+      graft.Artifacts.evict(spark, Set("curationDrops"))
+      graft.queries.LlmQueries.curationDrops(spark, dir)
+    }
+    val (schema, rows) = output(build, driver = true)
+    assert(rows.nonEmpty)
+    assert(onRoundsRoute(output(build, driver = false)) == ((schema, rows)))
+    graft.Artifacts.evict(spark, Set("curationDrops"))
   }
 }

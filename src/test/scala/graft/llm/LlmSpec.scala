@@ -92,10 +92,12 @@ class LlmSpec extends SparkSpec {
   test("connected components converge in O(log n) rounds on a long chain") {
     import spark.implicits._
     // a 300-node path: plain propagation needs 300 rounds (beyond the
-    // maxIter guard) — pointer jumping must collapse it within the cap
+    // maxIter guard) — pointer jumping must collapse it within the cap;
+    // a broadcast bound of -1 keeps the chain off the driver route
     val chain = (0L until 299L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val got = Dedup.connectedComponents(chain, "id_a", "id_b", maxIter = 50)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = onRoundsRoute(
+      Dedup.connectedComponents(chain, "id_a", "id_b", maxIter = 50)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
     assert(got.size == 300)
     assert(got.values.forall(_ == 0L), "whole chain must collapse to node 0")
   }

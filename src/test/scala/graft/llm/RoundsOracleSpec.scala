@@ -1,11 +1,13 @@
 package graft.llm
 
 import org.apache.spark.sql.{DataFrame, GraftSql}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 
 import graft.SparkSpec
 
-/** HITS, BFS depth, connected components and the NN-descent graph on
-  * [[Rounds]] against their own-loop oracles in [[HandRolledLoops]]:
+/** HITS, BFS depth, connected components (on [[Rounds]] and on the
+  * driver route) and the NN-descent graph on [[Rounds]] against their
+  * own-loop oracles in [[HandRolledLoops]]:
   * bit-identical rows (as multisets) on seeded random graphs with Long,
   * Int and String ids — self-loops, repeated edges, dangling and
   * isolated nodes, NULL endpoints — inputs split by `repartition(17)`,
@@ -82,10 +84,17 @@ class RoundsOracleSpec extends SparkSpec {
         "int" -> randomEdges(26))) {
       val (e, _) = typed(kind, es, Nil)
       val pairs = e.na.drop() // connectedComponents rejects NULL ids
-      val got = rows(Dedup.connectedComponents(pairs.repartition(17), "s",
-        "d"))
-      assert(got == rows(HandRolledLoops.connectedComponents(pairs, "s", "d")),
-        s"$kind ids")
+      val want = rows(HandRolledLoops.connectedComponents(pairs, "s", "d"))
+      // only the driver route answers with a local relation
+      def got(driver: Boolean): Seq[String] = {
+        val cc = Dedup.connectedComponents(pairs.repartition(17), "s", "d")
+        assert(cc.queryExecution.analyzed.isInstanceOf[LocalRelation] ==
+          driver, s"$kind ids")
+        rows(cc)
+      }
+      assert(got(driver = true) == want, s"$kind ids, driver route")
+      assert(onRoundsRoute(got(driver = false)) == want,
+        s"$kind ids, rounds route")
     }
   }
 

@@ -1,6 +1,5 @@
 package graft.llm
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, GraftSql, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -64,23 +63,6 @@ class RoundsSpec extends SparkSpec {
     (out.get, n)
   }
 
-  /** The call site of every job `f` launches itself — AQE's query-stage
-    * and broadcast jobs (submitted from Spark's async stage pool) are
-    * left out, so what remains are the operator's own eager actions. */
-  private def ownJobs(f: => Unit): Seq[String] = {
-    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        names.add(j.stageInfos.maxBy(_.stageId).name)
-    }
-    GraftSql.awaitListenerBus(spark)
-    spark.sparkContext.addSparkListener(listener)
-    try { f; GraftSql.awaitListenerBus(spark) }
-    finally spark.sparkContext.removeSparkListener(listener)
-    names.toArray(Array.empty[String]).toSeq
-      .filterNot(_.contains("CompletableFuture"))
-  }
-
   private def release(df: DataFrame): Unit =
     GraftSql.unpersistCheckpointTree(df)
 
@@ -113,18 +95,41 @@ class RoundsSpec extends SparkSpec {
   test("connected components: one job per materialization, none to " +
       "test convergence or NULL ids") {
     val chain = (0L until 299L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    // the edges, the initial labels and one per round
+    // the pair view, the initial labels and one per round
     for (k <- Seq(1, 2)) {
-      val own = ownJobs(intercept[IllegalArgumentException](
-        Dedup.connectedComponents(chain, "id_a", "id_b", maxIter = k)))
+      val own = onRoundsRoute(ownJobs(intercept[IllegalArgumentException](
+        Dedup.connectedComponents(chain, "id_a", "id_b", maxIter = k))))
       assert(own.size == 2 + k && own.forall(_.startsWith("sizedView at")),
         s"maxIter $k: ${own.mkString(", ")}")
     }
     val bad = Seq((Option(1L), Option.empty[Long])).toDF("id_a", "id_b")
-    val own = ownJobs(intercept[IllegalArgumentException](
-      Dedup.connectedComponents(bad, "id_a", "id_b")))
+    val own = onRoundsRoute(ownJobs(intercept[IllegalArgumentException](
+      Dedup.connectedComponents(bad, "id_a", "id_b"))))
     assert(own.size == 1 && own.head.startsWith("sizedView at"),
       own.mkString(", "))
+  }
+
+  test("connected components on the driver route: the pair view and its " +
+      "collect, whatever maxIter; NULL ids fail after the first") {
+    val chain = (0L until 299L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    for (k <- Seq(1, 2)) {
+      var out: DataFrame = null
+      val own = ownJobs {
+        out = Dedup.connectedComponents(chain, "id_a", "id_b", maxIter = k)
+      }
+      assert(own.map(_.takeWhile(_ != ' ')) == Seq("sizedView", "collect"),
+        s"maxIter $k: ${own.mkString(", ")}")
+      assert(out.select("cluster_id").distinct().collect().toSeq ==
+        Seq(org.apache.spark.sql.Row(0L)))
+    }
+    val bad = Seq((Option(1L), Option.empty[Long])).toDF("id_a", "id_b")
+    var message = ""
+    val own = ownJobs { message = intercept[IllegalArgumentException](
+      Dedup.connectedComponents(bad, "id_a", "id_b")).getMessage }
+    assert(own.size == 1 && own.head.startsWith("sizedView at"),
+      own.mkString(", "))
+    assert(message == onRoundsRoute(intercept[IllegalArgumentException](
+      Dedup.connectedComponents(bad, "id_a", "id_b")).getMessage))
   }
 
   test("pageRank keeps its 4-job setup and 3 jobs per round") {
@@ -147,7 +152,7 @@ class RoundsSpec extends SparkSpec {
         () => Graph.trustRank(e, "s", "d", Seq("a").toDF("n"), "n", 2),
         () => Graph.hits(e, "s", "d", iters = 2),
         () => Graph.bfsDepth(e, "s", "d", Seq("a").toDF("n"), "n"),
-        () => Dedup.connectedComponents(e, "s", "d"),
+        () => onRoundsRoute(Dedup.connectedComponents(e, "s", "d")),
         () => Similarity.nnDescentGraph(emb, "vec_id", "embedding", 3, 2))) {
       val out = op()
       assert((persisted -- before).size == 1, out.columns.mkString(","))
@@ -156,15 +161,27 @@ class RoundsSpec extends SparkSpec {
     }
   }
 
+  test("connected components on the driver route leave nothing persisted") {
+    val e = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("a", "d"), ("e", "e"))
+      .toDF("s", "d")
+    val before = persisted
+    val out = Dedup.connectedComponents(e, "s", "d")
+    assert(persisted == before)
+    assert(out.count() == 5)
+  }
+
   test("failing connected components and HITS leave nothing persisted") {
     val before = persisted
     val bad = Seq((Option("a"), Option.empty[String])).toDF("id_a", "id_b")
-    intercept[IllegalArgumentException](
+    def nullFails(): Unit = intercept[IllegalArgumentException](
       Dedup.connectedComponents(bad, "id_a", "id_b"))
-    assert(persisted == before, "NULL id")
+    nullFails()
+    assert(persisted == before, "NULL id, driver route")
+    onRoundsRoute(nullFails())
+    assert(persisted == before, "NULL id, rounds route")
     val chain = (0L until 299L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    intercept[IllegalArgumentException](
-      Dedup.connectedComponents(chain, "id_a", "id_b", maxIter = 2))
+    onRoundsRoute(intercept[IllegalArgumentException](
+      Dedup.connectedComponents(chain, "id_a", "id_b", maxIter = 2)))
     assert(persisted == before, "no convergence")
     intercept[IllegalArgumentException](
       Graph.hits(Seq((1L, 2L), (2L, 3L)).toDF("s", "d"), "s", "d",
