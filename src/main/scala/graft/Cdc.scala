@@ -8,9 +8,9 @@ import org.apache.spark.sql.functions._
   * snapshot — the `MERGE INTO` capability a warehouse user expects,
   * expressed as the plan that scales instead of a row-at-a-time merge:
   *
-  *   1. collapse the batch to its LATEST change per key — one shuffle of
-  *      the (small) change batch only, map-side combinable `max(struct)`
-  *      (the [[PullLatest]] trick), never a window over the base;
+  *   1. collapse the batch to its LATEST change per key with
+  *      [[PullLatest.latestPerKey]] — one map-side combinable shuffle of
+  *      the (small) change batch only, never a window over the base;
   *   2. LEFT ANTI the base against the touched-key set — with a typical
   *      batch (≪ base) this broadcasts, so the 100 TB base is neither
   *      shuffled nor rewritten beyond the scan;
@@ -40,13 +40,11 @@ object Cdc {
     val dataCols = base.columns.filterNot(keys.contains)
     require(dataCols.forall(changes.columns.contains),
       s"changes must carry full after-images of ${dataCols.mkString(",")}")
-    val others = opCol +: changes.columns
+    val others = changes.columns
       .filterNot(c => keys.contains(c) || c == versionCol || c == opCol)
       .sorted.toSeq
-    val latest = changes
-      .groupBy(keys.map(col): _*)
-      .agg(max(struct((versionCol +: others.toSeq).map(col): _*)).as("__w"))
-      .select(keys.map(col) :+ col("__w.*"): _*)
+    val latest = PullLatest.latestPerKey(
+      changes, keys, versionCol +: opCol +: others)
     val upserts = latest.filter(col(opCol) =!= deleteOp)
       .select(base.columns.map(col).toSeq: _*)
     base.join(latest.select(keys.map(col): _*), keys, "left_anti")

@@ -3,7 +3,6 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.model.FeatureView
@@ -63,24 +62,12 @@ final class OnlineStore(
     * produced by [[PullLatest.pullLatest]]): per key keep the row with
     * the greatest `(event_ts, created_ts)` across old state and batch. */
   def write(batch: DataFrame): Unit = synchronized {
-    // latest-per-key over old state ∪ batch — also applied to the FIRST
-    // write: the store's invariant is one row per key whatever the
-    // caller feeds it, not just for pullLatest-shaped batches
-    val order =
-      (col(eventTsCol).desc +:
-        createdTsCol.map(c => col(c).desc).toSeq)
-    val w = Window.partitionBy(joinKeys.map(col): _*).orderBy(order: _*)
-    val merged = state.fold(batch)(cur =>
-        cur.unionByName(batch, allowMissingColumns = true))
-      .withColumn("__graft_rn", row_number().over(w))
-      .filter(col("__graft_rn") === 1)
-      .drop("__graft_rn")
     // Materialize eagerly: the store's contract is "a write is durable
     // once write() returns" — and it decouples reads from the (possibly
     // temp-view-backed) batch plan. One row per key: always small. The
     // same job counts the keys for the serving-cache bound.
     val (persisted, keys) =
-      org.apache.spark.sql.GraftSql.sizedView(merged, _ => 1L)
+      org.apache.spark.sql.GraftSql.sizedView(merge(batch), _ => 1L)
     state.foreach(org.apache.spark.sql.GraftSql.unpersistCheckpoint)
     state = Some(persisted)
     // Refresh the serving cache only when it fits the bound: one collect
@@ -95,6 +82,15 @@ final class OnlineStore(
         }.toMap, true)
       else (Map.empty, false)
   }
+
+  /** The lazy plan [[write]] materializes: [[PullLatest.latestPerKey]]
+    * by `(event_ts, created_ts)` over old state ∪ batch. The FIRST write
+    * runs it too: the store holds one row per key whatever the caller
+    * feeds it, not just pullLatest-shaped batches. */
+  private[graft] def merge(batch: DataFrame): DataFrame =
+    PullLatest.latestPerKey(
+      state.fold(batch)(_.unionByName(batch, allowMissingColumns = true)),
+      joinKeys, eventTsCol +: createdTsCol.toSeq)
 
   /** Current store contents (one row per key), or None if never written. */
   def snapshot: Option[DataFrame] = state
@@ -160,10 +156,16 @@ final class Materializer(spark: SparkSession, fv: FeatureView) {
 
   @volatile private var watermark: Option[Timestamp] = None
 
+  // The view's features as retrieval resolves them (a view with no
+  // declared features stores every feature column), resolved once, at the
+  // first materialize, as feast infers a view's features once on apply.
+  private lazy val features =
+    fv.featuresIn(fv.source.resolve(spark).columns.toSeq)
+
   /** Latest row per key with `event_ts ∈ [start, end]` → upsert. */
   def materialize(start: Timestamp, end: Timestamp): Unit = {
     val batch = PullLatest.pullLatest(
-      spark, fv.source, fv.entities, fv.features,
+      spark, fv.source, fv.entities, features,
       fv.source.eventTimestampColumn, fv.source.createdTimestampColumn,
       start, end, fv.tieBreakColumns)
     store.write(batch)

@@ -59,21 +59,15 @@ object PointInTime {
     // Validate structural columns (keys + timestamps) against the resolved
     // source up front — otherwise a misconfigured view surfaces as a deep
     // Catalyst analysis error. Declared FEATURES absent from the source are
-    // silently dropped instead: the reference's own fixture declares
-    // `avg_daily_trips` on a table without it and its tests pass
-    // (tests/feast_tests_funcs.py:238-251).
-    val srcCols = src.columns.toSet
+    // silently dropped instead (FeatureView.featuresIn).
     val structural = fv.entities ++ Seq(evtCol) ++ createdCol.toSeq
-    val absent = structural.filterNot(srcCols.contains)
+    val absent = structural.filterNot(src.columns.contains)
     if (absent.nonEmpty)
       throw new IllegalArgumentException(
         s"FeatureView '${fv.name}': column(s) ${absent.mkString(", ")} not " +
           s"present in source ${fv.source.resolvedName} " +
           s"(has: ${src.columns.mkString(", ")})")
-    val featNames: Seq[String] =
-      if (fv.features.nonEmpty) fv.features.filter(srcCols.contains)
-      else src.columns.toSeq.filterNot(c =>
-        fv.entities.contains(c) || c == evtCol || createdCol.contains(c))
+    val featNames = fv.featuresIn(src.columns.toSeq)
     // ref: hive.py:590,713 — full_feature_names prefixes `{fv}__{feature}`.
     val prefix = if (fullFeatureNames) s"${fv.name}__" else ""
     val outNames = featNames.map(prefix + _)

@@ -2,8 +2,8 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, GraftSql, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.KnownNotNull
 import org.apache.spark.sql.functions._
 
 import graft.model.FeatureView
@@ -19,19 +19,17 @@ import graft.sources.FeatureSource
   * With no join keys the reference omits PARTITION BY entirely — a global
   * top-1 — and projects a literal dummy entity id (ref: hive.py:160-163,178).
   *
-  * Plan: the BETWEEN literals push into the Parquet scan; the window is the
-  * single shuffle, keyed on the join keys (so it scales with key
-  * cardinality). The keyless branch does NOT reproduce the reference's
-  * global window (hive.py:160-163 — every range-surviving row through one
-  * partition): it computes the same global top-1 as a
-  * `max(struct(orderKeys…, payload…))` aggregate — map-side partial maxima,
-  * one row per partition shuffled — which stays scalable however wide the
-  * BETWEEN range is. Struct comparison is lexicographic and nulls sort
-  * low, matching the window's `DESC` (nulls last) tie semantics.
+  * Plan: the BETWEEN literals push into the Parquet scan; the pick is
+  * [[latestPerKey]], one map-side combinable aggregate keyed on the join
+  * keys (one shuffle, scaling with key cardinality). Keyless, it is the
+  * same aggregate with no grouping — the reference's global window sends
+  * every range-surviving row through one partition (hive.py:160-163);
+  * here only one partial maximum per partition is shuffled.
+  *
+  * [[latestPerKey]] is the one latest-per-key pick of the feature store:
+  * [[OnlineStore.write]] and [[Cdc.applyChanges]] run it too.
   */
 object PullLatest {
-
-  private val Rn = "feast_row_" // ref: hive.py:185
 
   def pullLatest(
       spark: SparkSession,
@@ -43,42 +41,45 @@ object PullLatest {
       startDate: Timestamp,
       endDate: Timestamp,
       tieBreakColumns: Seq[String] = Nil): DataFrame = {
-    val src = source.resolve(spark)
-    val ranged =
-      src.filter(col(eventTsCol).between(lit(startDate), lit(endDate))) // P6
+    // ref: hive.py:168 field_string — join keys + features + ts columns.
+    val outCols = joinKeys ++ featureNames ++ (eventTsCol +: createdTsCol.toSeq)
+    val order = (eventTsCol +: createdTsCol.toSeq) ++ tieBreakColumns
+    val latest = latestPerKey(source.resolve(spark)
+        .filter(col(eventTsCol).between(lit(startDate), lit(endDate))) // P6
+        .select((outCols ++ order).distinct.map(col): _*),
+      joinKeys, order)
+    // ref: hive.py:160-163,178 — keyless adds a literal dummy entity id
+    val dummy = Option.when(joinKeys.isEmpty)(
+      lit(FeatureView.DummyEntityVal).as(FeatureView.DummyEntityId))
+    latest.select(dummy.toSeq ++ outCols.map(col): _*) // P1/P5
+  }
 
-    if (joinKeys.isEmpty) {
-      // ref: hive.py:160-163,178 — keyless = global top-1 + literal dummy
-      // entity id. Computed as max_by(payload struct, order struct) so the
-      // partial maxima combine map-side; ONLY the order columns are
-      // compared (desc ≡ lexicographic max — features may be maps or
-      // other unorderable types, and must not influence the pick), while
-      // the payload struct carries the whole output row back. Full ties
-      // on every order column resolve arbitrarily, exactly like the
-      // window formulation's unstable sort.
-      val orderCols =
-        (eventTsCol +: createdTsCol.toSeq) ++ tieBreakColumns
-      val outCols = featureNames ++ (eventTsCol +: createdTsCol.toSeq)
-      ranged
-        .agg(max_by(
-          struct(outCols.distinct.map(col): _*),
-          struct(orderCols.map(col): _*)).as("__graft_top"))
-        .filter(col("__graft_top").isNotNull) // empty range → 0 rows, not 1
-        .select(
-          lit(FeatureView.DummyEntityVal).as(FeatureView.DummyEntityId) +:
-            outCols.map(c => col("__graft_top").getField(c).as(c)): _*)
-    } else {
-      val order: Seq[Column] =
-        (col(eventTsCol).desc +: createdTsCol.map(c => col(c).desc).toSeq) ++
-          tieBreakColumns.map(col(_).desc)
-      val w = Window.partitionBy(joinKeys.map(col): _*).orderBy(order: _*)
-
-      // ref: hive.py:168 field_string — join keys + features + ts columns.
-      val outCols = joinKeys ++ featureNames ++ (eventTsCol +: createdTsCol.toSeq)
-      ranged
-        .withColumn(Rn, row_number().over(w)) // W1
-        .filter(col(Rn) === 1) // P7
-        .select(outCols.map(col): _*) // P1/P5
-    }
+  /** The row with the greatest `order` per `keys` value, with `df`'s
+    * columns in their order, types and nullability.
+    *
+    * One `max_by(struct(non-key columns), struct(order))` aggregate: the
+    * partial maxima combine map-side, so only one row per key and
+    * partition is shuffled. Only the order columns are compared, so the
+    * other columns may be maps or other unorderable types. Struct
+    * comparison is lexicographic with NULLs lowest, the window order
+    * `DESC NULLS LAST`; rows tied on every order column resolve
+    * arbitrarily, as under a window's unstable sort. With no keys it is
+    * a global top-1, and empty input gives 0 rows, not 1. */
+  private[graft] def latestPerKey(
+      df: DataFrame, keys: Seq[String], order: Seq[String]): DataFrame = {
+    val top = "__graft_top"
+    val payload = df.schema.filterNot(f => keys.contains(f.name))
+    val picked = df.groupBy(keys.map(col): _*)
+      .agg(max_by(struct(payload.map(f => col(f.name)): _*),
+        struct(order.map(col): _*)).as(top))
+      .filter(col(top).isNotNull)
+    // a picked row is never NULL, so a field is NULL only where its
+    // source column may be: restore the source's non-null flags
+    picked.select(df.schema.map { f =>
+      val v = col(top).getField(f.name)
+      if (keys.contains(f.name)) col(f.name)
+      else if (f.nullable) v.as(f.name)
+      else GraftSql.column(KnownNotNull(GraftSql.expression(v))).as(f.name)
+    }: _*)
   }
 }

@@ -25,7 +25,20 @@ final case class FeatureView(
     source: FeatureSource,
     features: Seq[String] = Nil,
     ttlSeconds: Long = 0L,
-    tieBreakColumns: Seq[String] = Nil)
+    tieBreakColumns: Seq[String] = Nil) {
+
+  /** The features this view serves from a source with `columns`: the
+    * declared ones the source has, or, with none declared, every column
+    * that is not a join key or timestamp. A declared feature the source
+    * lacks is dropped silently: the reference's own fixture declares
+    * `avg_daily_trips` on a table without it and its tests pass
+    * (tests/feast_tests_funcs.py:238-251). */
+  private[graft] def featuresIn(columns: Seq[String]): Seq[String] =
+    if (features.nonEmpty) features.filter(columns.contains)
+    else columns.filterNot(c => entities.contains(c) ||
+      c == source.eventTimestampColumn ||
+      source.createdTimestampColumn.contains(c))
+}
 
 object FeatureView {
   /** ref: feast_hive/hive.py:16 — constant join key for entity-less views. */

@@ -90,8 +90,11 @@ final case class AsOfJoinExec(
 
   override protected def doExecute(): RDD[InternalRow] = {
     val ttlMicros = ttlSeconds * 1000000L
-    val lTsOrd = left.output.indexOf(leftTs)
-    val rTsOrd = right.output.indexOf(rightTs)
+    // by exprId: an entity frame read through a view or an alias carries
+    // qualified attributes, which `==` does not match to the physical
+    // child's unqualified ones
+    val lTsOrd = left.output.indexWhere(_.exprId == leftTs.exprId)
+    val rTsOrd = right.output.indexWhere(_.exprId == rightTs.exprId)
     val nRight = right.output.size
     val lOut = left.output
     val rOut = right.output

@@ -567,9 +567,9 @@ object StreamingOps {
     * needed: late rows are merged like any others and lose only if
     * genuinely older.
     *
-    * Scale posture: per micro-batch work is one keyed window over
-    * (state ∪ batch) — state is key-cardinality-sized by the store's
-    * invariant. */
+    * Scale posture: per micro-batch work is one latest-per-key pick
+    * (one map-side combinable shuffle) over (state ∪ batch) — state is
+    * key-cardinality-sized by the store's invariant. */
   def materializeInto(
       events: DataFrame, store: graft.OnlineStore,
       checkpoint: Option[String] = None)

@@ -142,6 +142,21 @@ class ConsistencySpec extends SparkSpec {
     checkBoth(m, fv, 2, now, Some(null), fullFeatureNames)
   }
 
+  test("a view with no declared features materializes every feature column") {
+    // FeatureView's `features = Nil` means every non-key, non-timestamp
+    // column, for materialization as for retrieval
+    val fv = featureView("table").copy(features = Nil)
+    val m = new Materializer(spark, fv)
+    m.materialize(hoursAgo(5), hoursAgo(2))
+    checkBoth(m, fv, 1, hoursAgo(2), Some(0.3), fullFeatureNames = false)
+    checkBoth(m, fv, 2, hoursAgo(2), None, fullFeatureNames = false)
+    checkBoth(m, fv, 3, hoursAgo(2), Some(4.0), fullFeatureNames = false)
+    m.materializeIncremental(now)
+    checkBoth(m, fv, 1, now, Some(0.3), fullFeatureNames = false)
+    checkBoth(m, fv, 2, now, Some(null), fullFeatureNames = false)
+    checkBoth(m, fv, 3, now, Some(5.0), fullFeatureNames = false)
+  }
+
   test("latest-wins upsert: re-materializing an old window cannot regress") {
     val fv = featureView("table")
     val m = new Materializer(spark, fv)

@@ -56,6 +56,35 @@ class EngineSpec extends SparkSpec {
     assert(e.getMessage.contains("v2") && e.getMessage.contains("nope_id"))
   }
 
+  test("getHistoricalFeaturesAny routes frames and SQL, rejects the rest") {
+    import spark.implicits._
+    Seq((1L, Timestamp.valueOf("2024-01-01 00:00:00"), 1.0))
+      .toDF("driver_id", "event_timestamp", "conv_rate")
+      .createOrReplaceTempView("engine_any_src")
+    val fv = FeatureView("v", Seq("driver_id"),
+      FeatureSource(table = Some("engine_any_src")))
+    val entity = Seq((1L, Timestamp.valueOf("2024-01-02 00:00:00")))
+      .toDF("driver_id", "event_timestamp")
+    entity.createOrReplaceTempView("engine_any_entity")
+    for ((label, e) <- Seq(
+        "DataFrame" -> entity,
+        "typed Dataset" -> entity.as[(Long, Timestamp)],
+        "SQL string" -> "SELECT * FROM engine_any_entity")) {
+      val rows = eng.getHistoricalFeaturesAny(e, Seq(fv)).toDF
+        .select("driver_id", "conv_rate").collect()
+        .map(r => (r.get(0), r.get(1))).toSeq
+      assert(rows == Seq((1L, 1.0)), s"$label: $rows")
+    }
+    for ((bad, name) <- Seq[(Any, String)](
+        42 -> "java.lang.Integer", (null: Any) -> "null")) {
+      val err = intercept[InvalidEntityTypeException] {
+        eng.getHistoricalFeaturesAny(bad, Seq(fv))
+      }
+      assert(err.getMessage.contains(s"Invalid entity_df type: $name"),
+        err.getMessage)
+    }
+  }
+
   test("FeatureSource JSON registry round-trip") {
     val src = FeatureSource(
       query = Some("SELECT a, b FROM t WHERE s = 'x\"y'\n AND b > 0"),

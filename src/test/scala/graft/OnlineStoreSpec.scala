@@ -13,8 +13,10 @@ import org.apache.spark.sql.types._
   * read path while the cache fits. */
 class OnlineStoreSpec extends SparkSpec {
 
+  // one fixed instant, so rows can tie exactly on a ts
+  private val t0 = System.currentTimeMillis()
   private def ts(hoursAgoN: Int): Timestamp =
-    new Timestamp(System.currentTimeMillis() - hoursAgoN * 3600L * 1000L)
+    new Timestamp(t0 - hoursAgoN * 3600L * 1000L)
 
   private def batch3 = spark.createDataFrame(
     java.util.Arrays.asList(
@@ -69,5 +71,47 @@ class OnlineStoreSpec extends SparkSpec {
     }
     assert(sunk == Seq((1, 1.5), (2, 2.5), (3, 3.5)))
     assert(store.cachedKeyCount == 0) // the export kept nothing resident
+  }
+
+  test("created ts breaks event-ts ties within a batch and across writes") {
+    val schema = StructType(Seq(
+      StructField("k", IntegerType),
+      StructField("v", DoubleType),
+      StructField("ts", TimestampType),
+      StructField("created", TimestampType)))
+    def batch(rows: Row*) =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    val store = new OnlineStore(Seq("k"), "ts", Some("created"))
+    store.write(batch(
+      Row(1, 1.0, ts(2), ts(5)),
+      Row(1, 2.0, ts(2), ts(4)), // same event ts, newer created → wins
+      Row(2, 3.0, ts(2), ts(4))))
+    assert(store.get(Map("k" -> 1)).get("v") == 2.0)
+    store.write(batch(
+      Row(1, 4.0, ts(2), ts(3)), // newer created than the stored row
+      Row(2, 5.0, ts(2), ts(6)))) // older created: must not regress
+    assert(store.get(Map("k" -> 1)).get("v") == 4.0)
+    assert(store.get(Map("k" -> 2)).get("v") == 3.0)
+  }
+
+  test("a map-typed feature is stored and served") {
+    val schema = StructType(Seq(
+      StructField("k", IntegerType),
+      StructField("tags", MapType(StringType, IntegerType)),
+      StructField("ts", TimestampType)))
+    def batch(rows: Row*) =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    val store = new OnlineStore(Seq("k"), "ts", None)
+    store.write(batch(
+      Row(1, Map("a" -> 1), ts(3)),
+      Row(1, Map("b" -> 2), ts(2)), // newer → wins
+      Row(2, Map("c" -> 3), ts(2))))
+    store.write(batch(
+      Row(1, Map("d" -> 4), ts(1)), // newer than the stored row
+      Row(2, Map("e" -> 5), ts(4)))) // older: must not regress
+    assert(store.snapshot.get.schema("tags").dataType ==
+      MapType(StringType, IntegerType))
+    assert(store.get(Map("k" -> 1)).get("tags") == Map("d" -> 4))
+    assert(store.get(Map("k" -> 2)).get("tags") == Map("c" -> 3))
   }
 }

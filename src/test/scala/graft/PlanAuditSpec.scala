@@ -37,6 +37,12 @@ class PlanAuditSpec extends SparkSpec {
       case n => Seq(n)
     }
 
+  /** All nodes of an executed adaptive plan, query stages opened. */
+  private def deep(p: SparkPlan): Seq[SparkPlan] = nodes(p).flatMap {
+    case q: QueryStageExec => q +: deep(q.plan)
+    case n => Seq(n)
+  }
+
   /** Queries licensed to broadcast-nested-loop:
     *  - brute-force kNN, which is BY DEFINITION all-pairs scoring against
     *    a small broadcast query side — it exists as the exact baseline;
@@ -228,11 +234,6 @@ class PlanAuditSpec extends SparkSpec {
     val df = new Engine(spark)
       .getHistoricalFeatures(EntityFrame(spine), views).toDF
     df.queryExecution.toRdd.count()
-    // the executed adaptive plan, query stages opened
-    def deep(p: SparkPlan): Seq[SparkPlan] = nodes(p).flatMap {
-      case q: QueryStageExec => q +: deep(q.plan)
-      case n => Seq(n)
-    }
     val all = deep(df.queryExecution.executedPlan)
     val asOf = all.collect { case j: AsOfJoinExec => j }
     assert(asOf.size == views.size,
@@ -240,6 +241,40 @@ class PlanAuditSpec extends SparkSpec {
         df.queryExecution.executedPlan)
     assert(!all.exists(_.isInstanceOf[WindowExec]),
       s"Engine PIT must not run a window:\n${df.queryExecution.executedPlan}")
+  }
+
+  test("latest-per-key pulls and the store merge run no window") {
+    import java.sql.Timestamp
+    import spark.implicits._
+    import graft.sources.FeatureSource
+    val t = Timestamp.valueOf("2024-01-01 10:00:00")
+    val u = Timestamp.valueOf("2024-01-01 11:00:00")
+    Seq((1L, t, t, 1.0, 1L), (1L, u, t, 2.0, 2L), (2L, t, u, 3.0, 3L))
+      .toDF("user_id", "event_ts", "created_ts", "clicks", "seq")
+      .createOrReplaceTempView("audit_latest")
+    val src = FeatureSource(table = Some("audit_latest"),
+      eventTimestampColumn = "event_ts",
+      createdTimestampColumn = Some("created_ts"))
+    def pull(keys: Seq[String]) = PullLatest.pullLatest(spark, src, keys,
+      Seq("clicks"), "event_ts", Some("created_ts"), t, u, Seq("seq"))
+    val store = new OnlineStore(Seq("user_id"), "event_ts", Some("created_ts"))
+    store.write(pull(Seq("user_id")))
+    val batch = spark.table("audit_latest").drop("seq")
+    for ((name, df, keyed) <- Seq(
+        ("keyed pullLatest", pull(Seq("user_id")), true),
+        ("keyless pullLatest", pull(Nil), false),
+        ("OnlineStore.write merge", store.merge(batch), true))) {
+      df.queryExecution.toRdd.count()
+      val plan = df.queryExecution.executedPlan
+      val all = deep(plan)
+      assert(!all.exists(_.isInstanceOf[WindowExec]),
+        s"$name must not run a window:\n$plan")
+      if (keyed) {
+        val shuffles = all.count(_.isInstanceOf[ShuffleExchangeExec])
+        assert(shuffles == 1,
+          s"$name must shuffle once, got $shuffles:\n$plan")
+      }
+    }
   }
 
   /** Licensed trade-off: with no key and no TTL there is no bucket to

@@ -3,6 +3,9 @@ package graft
 import java.sql.Timestamp
 import java.time.{ZonedDateTime, ZoneId}
 
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.types._
+
 import graft.sources.FeatureSource
 
 /** Materialization-correctness fixture (ref: tests/feast_tests_funcs.py:
@@ -88,5 +91,73 @@ class PullLatestSpec extends SparkSpec {
       Seq("driver_id"), Seq("value"), "ts", Some("created_ts"),
       startDate = t(7200), endDate = t(0)).toDF.collect()
     assert(out.length == 1 && out.head.getAs[Double]("value") == 2.0)
+  }
+
+  test("keyed pull breaks (event, created) ties on tieBreakColumns") {
+    import spark.implicits._
+    Seq(
+      (7L, 1.0, 3L, t(3600), t(600)),
+      (7L, 2.0, 9L, t(3600), t(600)), // full ts tie: greatest seq wins
+      (7L, 3.0, 5L, t(3600), t(600)),
+      (8L, 4.0, 1L, t(3600), t(600)), // newer event ts beats a larger seq
+      (8L, 5.0, 2L, t(7000), t(600))
+    ).toDF("driver_id", "value", "seq", "ts", "created_ts")
+      .createOrReplaceTempView("tie_break_tbl")
+    val df = new Engine(spark).pullLatest(
+      FeatureSource(table = Some("tie_break_tbl"), eventTimestampColumn = "ts",
+        createdTimestampColumn = Some("created_ts")),
+      Seq("driver_id"), Seq("value"), "ts", Some("created_ts"),
+      startDate = t(7200), endDate = t(0), tieBreakColumns = Seq("seq")).toDF
+    // the tie-break column orders the pick but is not projected
+    assert(df.columns.toSeq == Seq("driver_id", "value", "ts", "created_ts"))
+    val out = df.collect()
+      .map(r => r.getAs[Long]("driver_id") -> r.getAs[Double]("value")).toMap
+    assert(out == Map(7L -> 2.0, 8L -> 4.0))
+  }
+
+  test("keyed pull carries a map-typed feature") {
+    import spark.implicits._
+    Seq(
+      (1L, Map("a" -> 1), t(7200)),
+      (1L, Map("b" -> 2), t(3600)), // newest for key 1
+      (2L, Map.empty[String, Int], t(60))
+    ).toDF("driver_id", "tags", "ts").createOrReplaceTempView("map_feat_tbl")
+    val df = new Engine(spark).pullLatest(
+      FeatureSource(table = Some("map_feat_tbl"), eventTimestampColumn = "ts"),
+      Seq("driver_id"), Seq("tags"), "ts", None,
+      startDate = t(9000), endDate = t(0)).toDF
+    assert(df.schema("tags").dataType ==
+      spark.table("map_feat_tbl").schema("tags").dataType)
+    val out = df.collect().map(r =>
+      r.getAs[Long]("driver_id") -> r.getMap[String, Int](1).toMap).toMap
+    assert(out == Map(1L -> Map("b" -> 2), 2L -> Map.empty[String, Int]))
+  }
+
+  test("keyed pull and store snapshot keep the source's schema") {
+    // non-null flags included: the pull and the store merge must not
+    // widen a non-nullable source column to nullable
+    val schema = StructType(Seq(
+      StructField("driver_id", LongType, nullable = false),
+      StructField("value", DoubleType, nullable = false),
+      StructField("note", StringType, nullable = true),
+      StructField("ts", TimestampType, nullable = false),
+      StructField("created_ts", TimestampType, nullable = false)))
+    spark.createDataFrame(java.util.Arrays.asList(
+        Row(1L, 1.0, "x", t(7200), t(60)),
+        Row(1L, 2.0, null, t(3600), t(60)),
+        Row(2L, 3.0, "y", t(3600), t(60))), schema)
+      .createOrReplaceTempView("non_null_tbl")
+    val pulled = new Engine(spark).pullLatest(
+      FeatureSource(table = Some("non_null_tbl"), eventTimestampColumn = "ts",
+        createdTimestampColumn = Some("created_ts")),
+      Seq("driver_id"), Seq("value", "note"), "ts", Some("created_ts"),
+      startDate = t(9000), endDate = t(0)).toDF
+    assert(pulled.schema == schema)
+    val store = new OnlineStore(Seq("driver_id"), "ts", Some("created_ts"))
+    store.write(pulled)
+    assert(store.snapshot.get.schema == schema)
+    store.write(pulled) // state ∪ batch
+    assert(store.snapshot.get.schema == schema)
+    assert(store.get(Map("driver_id" -> 1L)).get("value") == 2.0)
   }
 }

@@ -74,6 +74,21 @@ class AsOfJoinSpec extends SparkSpec {
     assert(out.columns.contains("ts_asof"))
   }
 
+  test("an entity frame read through an alias or a view still matches") {
+    import spark.implicits._
+    // its attributes carry a qualifier the physical child's do not
+    val feats = Seq((1L, Timestamp.valueOf("2024-01-01 09:00:00"), 2.0))
+      .toDF("k", "f_ts", "v")
+    val ent = Seq((1L, Timestamp.valueOf("2024-01-01 10:00:00")))
+      .toDF("k", "ts")
+    ent.createOrReplaceTempView("asof_alias_entity")
+    for (e <- Seq(ent.alias("e"), spark.table("asof_alias_entity"))) {
+      val out = AsOf.join(e, feats, Seq("k"), "ts", "f_ts", None, 0L)
+        .collect().map(_.getAs[Any]("v")).toSeq
+      assert(out == Seq(2.0))
+    }
+  }
+
   test("NULL keys match nothing (SQL equi-join semantics)") {
     import spark.implicits._
     val feats = Seq(
